@@ -95,21 +95,6 @@ from contextvars import ContextVar
 _fanout_active: ContextVar[bool] = ContextVar("dftly_fanout_active", default=False)
 
 
-def _ckey(sf_dir: str, base: str = "documents") -> str:
-    """Session-memo cache key for a corpus, split by fan-out mode.
-
-    Every shared-frame memo (tokenized docs, shingle instances, term
-    frames — ops/corpus.py) keyed off a corpus MUST build its key here:
-    the fan-out changes the frame under the derivation, so a plan built in
-    one mode must never be handed to a query in the other.  Round-14 only
-    suffixed the ``_docs_tok`` key; keys passed straight into op
-    ``cache_key=`` parameters leaked fanned shingle/term frames into
-    non-fan queries (or vice versa) depending on which query ran first.
-    """
-    suffix = "#fan" if _fanout_active.get() else ""
-    return f"{base}:{sf_dir}{suffix}"
-
-
 def _fan_out_scan(df: DataFrame, name: str) -> DataFrame:
     import os
 
@@ -164,13 +149,25 @@ _SHJ_ARM: dict[str, str] = {
 #: aggregates lose their sort-based fallback); x46 — its executed plan is
 #: IDENTICAL under the arm (the AQE SMJ->SHJ conversion never fires for
 #: its cell join), so its small A/B deltas were noise.
+#:
+#: Concurrency: the arm writes session-global ``spark.conf``, so it needs a
+#: SERIAL build -> action runner — two builders on concurrent threads of
+#: one session would each overwrite the other's arm, and every action runs
+#: under whichever build came last.  The fan-out flag does not share this
+#: limit: it is a ContextVar, private to each build's context.
 _QUERY_CONFS: dict[str, dict[str, str]] = {
     "x107_triangle_count": _SHJ_ARM,
 }
 
 
 def _with_scan_fanout(name: str, fn: Callable) -> Callable:
-    """Builder wrapper: arm the fan-out + per-query conf for this build."""
+    """Builder wrapper: arm the fan-out + per-query conf for this build.
+
+    The fan-out flag is a ContextVar and safe under concurrent builds; the
+    conf arm sets session-global ``spark.conf`` and is left set for the
+    action, so it requires a serial build -> action runner (see
+    ``_QUERY_CONFS``).
+    """
     import functools
 
     @functools.wraps(fn)
@@ -194,19 +191,16 @@ _TOK = "__tokens"
 
 
 def _docs_tok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents table + shared cached token-array column (`__tokens`).
+    """Documents table + the canonical token-array column (`__tokens`).
 
-    One tokenization per (session, sf_dir), persisted and reused by the
-    whole text-op cluster (x02/x03/x14/x15/x24/x31/x32/x35/x37/x45/x52/x54)
-    — the session-scoped analog of writing the tokenized corpus to a
-    bucketed table once (ops/corpus.py).  Oracles are unchanged: the cached
-    arrays are byte-identical to each op's own tokenization.
+    The text-op queries (x02/x03/x14/x15/x24/x31/x32/x35/x37/x45/x52/x54/…)
+    pass ``tokens_col=_TOK`` so every op reading the frame within one plan
+    shares this single tokenization.  Oracles are unchanged: the arrays are
+    byte-identical to each op's own tokenization.
     """
     from dftly_spark.ops import tokenized_docs
 
-    # fan-out changes the frame under the tokenizer, so the session memo
-    # must not hand a plan built in one mode to a query in the other
-    return tokenized_docs(_t(spark, sf_dir, "documents"), cache_key=_ckey(sf_dir))
+    return tokenized_docs(_t(spark, sf_dir, "documents"))
 
 
 def _spec_query(table: str, spec: dict[str, str]):

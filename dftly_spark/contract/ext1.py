@@ -49,8 +49,7 @@ def _x02(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import ngram_jaccard_pairs
 
     _prep(spark)
-    # tokens_col shares the memoized token-array plan fragment (persisted
-    # only when SPARK_GRAFT_CACHE_PERSIST is set — see ops/corpus.py).
+    # tokens_col reads the token column _docs_tok adds (no second split)
     return ngram_jaccard_pairs(
         _docs_tok(spark, sf_dir),
         "doc_id",

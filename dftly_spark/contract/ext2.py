@@ -22,7 +22,7 @@ from dftly_spark import Parser
 from dftly_spark.sqlgen import exact_sum, portable_round
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .common import _TOK, _ckey, _docs_tok, _prep, _q, _t
+from .common import _TOK, _docs_tok, _prep, _q, _t
 from .qseries import _SHINGLE_CTE
 
 
@@ -126,7 +126,7 @@ def _x31(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     docs = _docs_tok(spark, sf_dir)
     qdf = spark.createDataFrame(_BM25_QUERIES, "query_id int, query string")
-    return bm25_topk(docs, qdf, k=10, tokens_col=_TOK, cache_key=_ckey(sf_dir))
+    return bm25_topk(docs, qdf, k=10, tokens_col=_TOK)
 
 
 def _x31_oracle() -> str:
@@ -190,7 +190,6 @@ def _x32(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         n=13,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 
@@ -380,7 +379,6 @@ def _x37(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=13,
         min_df=2,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 

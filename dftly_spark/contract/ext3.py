@@ -22,7 +22,7 @@ from __future__ import annotations
 from dftly_spark.sqlgen import exact_sum, portable_round, portable_round_sql
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .common import _TOK, _ckey, _docs_tok, _prep, _q, _t
+from .common import _TOK, _docs_tok, _prep, _q, _t
 from .qseries import _MAX_DF, _SHINGLE_CTE
 
 
@@ -166,8 +166,7 @@ _q(
 
 def _x54_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents ∪ verbatim copies of every 10th doc (x05's planted-pair
-    pattern, lexical edition) — shared by _x54 and warm_caches so both hit
-    the same term-frame cache key."""
+    pattern, lexical edition), carrying the shared token column."""
     docs = _docs_tok(spark, sf_dir).select("doc_id", "text", _TOK)
     copies = docs.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text", _TOK
@@ -197,7 +196,6 @@ def _x54(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_df=2,
         max_df=300,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir, "documents+copies"),
     )
 
 
@@ -517,8 +515,8 @@ _q("x60_weighted_sample", _x60, _x60_oracle())
 
 def _x61(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source distinctive vocabulary by relative-frequency lift
-    (ops/retrieval.py distinctive_terms — shares the corpus term frame
-    with BM25/TF-IDF; lift is pure IEEE divides, engine-exact)."""
+    (ops/retrieval.py distinctive_terms — the same term-frame build
+    BM25/TF-IDF use; lift is pure IEEE divides, engine-exact)."""
     from dftly_spark.ops import distinctive_terms
 
     _prep(spark)
@@ -528,7 +526,6 @@ def _x61(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         min_group_tf=5,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 

@@ -22,7 +22,7 @@ from dftly_spark import Parser
 from dftly_spark.sqlgen import exact_sum, portable_round
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .common import _TOK, _ckey, _docs_tok, _pq_schema, _prep, _q, _spec_query, _t
+from .common import _TOK, _docs_tok, _pq_schema, _prep, _q, _spec_query, _t
 
 
 
@@ -661,7 +661,6 @@ def _x92(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     vec = tf_idf_vectors(
         _docs_tok(spark, sf_dir), min_df=2, tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
     # rank on the ROUNDED score: ranking on raw doubles while the oracle
     # ranks rounded ones would flip order whenever two terms round equal

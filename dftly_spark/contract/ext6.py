@@ -21,7 +21,7 @@ from dftly_spark import Parser
 from dftly_spark.sqlgen import exact_sum, portable_round
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .common import _TOK, _ckey, _docs_tok, _pq_schema, _prep, _q, _t
+from .common import _TOK, _docs_tok, _pq_schema, _prep, _q, _t
 from .ext4 import _REV_EXPR
 from .ext5 import _x122
 
@@ -454,7 +454,7 @@ def _x129(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_join(
         _docs_tok(spark, sf_dir), _x129_planted(docs), "doc_id", "text",
         n=3, threshold=0.5,
-        tokens_col_l=_TOK, cache_key_l=_ckey(sf_dir),
+        tokens_col_l=_TOK,
     )
 
 
@@ -770,7 +770,7 @@ def _x136(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fuzzy_join(
         _docs_tok(spark, sf_dir), _x129_planted(docs), "doc_id", "text",
         n=3, threshold=0.5, best_match=True,
-        tokens_col_l=_TOK, cache_key_l=_ckey(sf_dir),
+        tokens_col_l=_TOK,
     )
 
 
@@ -828,7 +828,6 @@ def _x138(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_len=20,
         min_count=2,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 
@@ -884,7 +883,6 @@ def _x139(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_len=20,
         min_count=2,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 
@@ -969,7 +967,6 @@ def _x140(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         min_len=20,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 
@@ -1032,7 +1029,6 @@ def _x141(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         min_len=20,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 
@@ -1082,7 +1078,6 @@ def _x142(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_len=20,
         min_count=2,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
         offsets="char",
     )
 
@@ -1119,7 +1114,7 @@ def _x143(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     prefix, sets = fuzzy_index(
         _docs_tok(spark, sf_dir), "doc_id", "text", n=3, threshold=0.5,
-        tokens_col=_TOK, cache_key=_ckey(sf_dir),
+        tokens_col=_TOK,
     )
     out = stream_fuzzy_join(
         _x129_planted(docs), prefix, sets, "doc_id", "text",
@@ -1177,7 +1172,6 @@ def _x144(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_len=20,
         min_count=2,
         tokens_col=_TOK,
-        cache_key=_ckey(sf_dir),
     )
 
 

@@ -18,13 +18,9 @@ Design rules (SURVEY.md §7.3, the 100 TB contract):
   salting applies at 1000-executor scale.
 """
 
-from .corpus import (
-    TOKENS_COL,
-    clear_token_cache,
-    memo_persist,
-    tokenized_docs,
-)
 from .textops import (
+    TOKENS_COL,
+    tokenized_docs,
     canonical_url,
     line_filter,
     dedup_lines,
@@ -211,7 +207,7 @@ __all__ = [
     "ntile_features", "time_weighted_avg", "key_skew_profile",
     "transition_matrix",
     "tokens", "token_count", "bpe_token_count", "normalize_text",
-    "TOKENS_COL", "tokenized_docs", "clear_token_cache", "doc_tokens", "memo_persist",
+    "TOKENS_COL", "tokenized_docs", "doc_tokens",
     "stopword_ratio", "punct_ratio", "quality_score", "language_id", "vocab_topk",
     "gopher_rules", "shared_affix_counts",
     "scrub_text", "chunk_text", "dup_clusters", "canonical_url",

@@ -177,13 +177,47 @@ def _build_long_window(base: DataFrame, n: int) -> DataFrame:
     )
 
 
+def _build_long_zip(base: DataFrame, n: int) -> DataFrame:
+    """Row-local ``(_id, _p, _g)`` instances: ``n`` shifted slices,
+    ``arrays_zip`` + ``posexplode``, one multi-argument ``xxhash64``."""
+    shifted = base.where(F.col("_sz") >= n).select(
+        "_id",
+        "_sz",
+        *[
+            (
+                F.col("_w")
+                if j == 0
+                else F.slice(F.col("_w"), j + 1, F.col("_sz") - j)
+            ).alias(f"_w{j}")
+            for j in range(n)
+        ],
+    )
+    # arrays_zip pads the shifted (shorter) arrays with null up to the
+    # unshifted length; the _p <= _sz - n filter drops exactly those
+    # padded tails, so every surviving row's n fields are real tokens.
+    return (
+        shifted.select(
+            "_id",
+            "_sz",
+            F.posexplode(
+                F.arrays_zip(*[F.col(f"_w{j}") for j in range(n)])
+            ).alias("_p", "_z"),
+        )
+        .where(F.col("_p") <= F.col("_sz") - n)
+        .select(
+            "_id",
+            "_p",
+            F.xxhash64(*[F.col(f"_z._w{j}") for j in range(n)]).alias("_g"),
+        )
+    )
+
+
 def _shingle_instance_frames(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
     keep_pos: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Codegen-friendly shingle-hash instances, split by document length.
@@ -209,53 +243,13 @@ def _shingle_instance_frames(
         doc_tokens(df, text_col, tokens_col).alias("_w"),
     ).select("_id", "_w", F.size("_w").alias("_sz"))
 
-    def build_long() -> DataFrame:
-        if n > _ZIP_MAX_N:
-            return _build_long_window(base, n)
-        shifted = base.where(F.col("_sz") >= n).select(
-            "_id",
-            "_sz",
-            *[
-                (
-                    F.col("_w")
-                    if j == 0
-                    else F.slice(F.col("_w"), j + 1, F.col("_sz") - j)
-                ).alias(f"_w{j}")
-                for j in range(n)
-            ],
-        )
-        # arrays_zip pads the shifted (shorter) arrays with null up to the
-        # unshifted length; the _p <= _sz - n filter drops exactly those
-        # padded tails, so every surviving row's n fields are real tokens.
-        return (
-            shifted.select(
-                "_id",
-                "_sz",
-                F.posexplode(
-                    F.arrays_zip(*[F.col(f"_w{j}") for j in range(n)])
-                ).alias("_p", "_z"),
-            )
-            .where(F.col("_p") <= F.col("_sz") - n)
-            .select(
-                "_id",
-                "_p",
-                F.xxhash64(*[F.col(f"_z._w{j}") for j in range(n)]).alias("_g"),
-            )
-        )
-
-    def build_short() -> DataFrame:
-        return base.where(F.col("_sz") < n).select(
-            "_id", F.xxhash64(F.concat_ws(" ", "_w")).alias("_g")
-        )
-
-    if cache_key is not None:
-        from .corpus import memo_persist
-
-        spark = df.sparkSession
-        long_pos = memo_persist(spark, f"{cache_key}:sh{n}:long", build_long)
-        short_rows = memo_persist(spark, f"{cache_key}:sh{n}:short", build_short)
+    if n > _ZIP_MAX_N:
+        long_pos = _build_long_window(base, n)
     else:
-        long_pos, short_rows = build_long(), build_short()
+        long_pos = _build_long_zip(base, n)
+    short_rows = base.where(F.col("_sz") < n).select(
+        "_id", F.xxhash64(F.concat_ws(" ", "_w")).alias("_g")
+    )
     if not keep_pos:
         long_pos = long_pos.select("_id", "_g")
     return long_pos, short_rows
@@ -281,13 +275,12 @@ def _band_buckets(sig_col: SparkColumn, bands: int, rows: int) -> SparkColumn:
 def _minhash_per_doc(
     df: DataFrame, id_col: str, text_col: str, n: int, k: int,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """``(_id, _gs, _m0.._m{k-1})`` — hashed shingle set + k minhash
     permutations, computed in one per-document aggregation (the min over
     shingle occurrences equals the min over the set)."""
     long_inst, short_rows = _shingle_instance_frames(
-        df, id_col, text_col, n, tokens_col=tokens_col, cache_key=cache_key
+        df, id_col, text_col, n, tokens_col=tokens_col
     )
     min_aggs = [
         F.min(F.xxhash64(F.col("_g"), F.lit(i))).alias(f"_m{i}") for i in range(k)
@@ -314,7 +307,6 @@ def minhash_dup_pairs(
     threshold: float = 0.7,
     max_bucket_size: int = 1000,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH with exact-Jaccard verification.
 
@@ -335,7 +327,7 @@ def minhash_dup_pairs(
     # re-executes per reference (self-join aliasing defeats exchange
     # reuse).  Lazy — nothing runs at plan build.
     per_doc = _minhash_per_doc(
-        df, id_col, text_col, n, k, tokens_col=tokens_col, cache_key=cache_key
+        df, id_col, text_col, n, k, tokens_col=tokens_col
     ).transform(durable_checkpoint, eager=False)
     sig = F.array(*[F.col(f"_m{i}") for i in range(k)])
     # The banded frame carries only (id, band, bucket) — shingle sets would
@@ -556,7 +548,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Exact Jaccard-similar pairs via a shingle inverted index.
 
@@ -588,7 +579,7 @@ def ngram_jaccard_pairs(
     ``collect_set`` aggregation, so the instance table is shuffled once).
     """
     long_inst, short_rows = _shingle_instance_frames(
-        df, id_col, text_col, n, tokens_col=tokens_col, cache_key=cache_key
+        df, id_col, text_col, n, tokens_col=tokens_col
     )
     long_docs = (
         long_inst.groupBy("_id")
@@ -1208,10 +1199,13 @@ def _cell_pairs_arrow(
 
     Memory: one cell's ``n×n`` double matrix per task (~66 MB at n≈2.9k);
     pair with ``max_cell_size`` at scale exactly like the join path's
-    skew cap.  Rows with a NULL unit vector (zero-norm inputs) are dropped
-    up front — the fold path's NULL cosine is filtered by the threshold
-    the same way.  Requires fixed-dimension finite vectors (the corpus
-    contract every embedding op in this module already states).
+    skew cap.  Zero-norm inputs reach here as all-NaN unit vectors
+    (``unit`` nulls each element); those rows, like NULL vectors, are
+    dropped before the ``n×n`` work — the fold path's NULL cosine fails the
+    threshold the same way.  Equal-id pairs are never emitted, matching the
+    fold's ``id_l < id_r`` predicate when the id column has duplicates.
+    Requires fixed-dimension vectors (the corpus contract every embedding
+    op in this module already states).
     """
     import pandas as pd
 
@@ -1226,8 +1220,7 @@ def _cell_pairs_arrow(
             }
         )
         pdf = pdf[pdf["_v"].notna()]
-        n = len(pdf)
-        if n < 2:
+        if len(pdf) < 2:
             return empty
         ids = pdf["_id"].to_numpy()
         order = np.argsort(ids, kind="stable")
@@ -1235,6 +1228,11 @@ def _cell_pairs_arrow(
         M = np.asarray(
             [np.asarray(v, dtype=np.float64) for v in pdf["_v"].to_numpy()[order]]
         )
+        keep = ~np.isnan(M).any(axis=1)
+        ids, M = ids[keep], M[keep]
+        n = len(ids)
+        if n < 2:
+            return empty
         # ascending-k accumulation == the fold's operation order per pair
         C = np.zeros((n, n))
         buf = np.empty((n, n))
@@ -1244,7 +1242,7 @@ def _cell_pairs_arrow(
             C += buf
         iu, ju = np.triu_indices(n, k=1)
         cos = C[iu, ju]
-        mask = cos >= threshold
+        mask = (cos >= threshold) & (ids[iu] != ids[ju])
         return pd.DataFrame(
             {"id_l": ids[iu[mask]], "id_r": ids[ju[mask]], "cos": cos[mask]}
         )
@@ -1304,7 +1302,8 @@ def _allpairs_arrow(
             M = np.asarray(
                 [np.asarray(v, dtype=np.float64) for v in sub["_v"].to_numpy()[order]]
             )
-            return ids, M
+            keep = ~np.isnan(M).any(axis=1)
+            return ids[keep], M[keep]
 
         def cos_matrix(A, B):
             C = np.zeros((A.shape[0], B.shape[0]))
@@ -1321,6 +1320,9 @@ def _allpairs_arrow(
             C = cos_matrix(M, M)
             iu, ju = np.triu_indices(len(ids), k=1)
             il, ir, cos = ids[iu], ids[ju], C[iu, ju]
+            # duplicate ids share a hash block, so only this branch can
+            # pair a row with an equal id; the fold's id_l < id_r skips it
+            mask = (cos >= threshold) & (il != ir)
         else:
             a = pdf[pdf["_blk"] == lo]
             b = pdf[pdf["_blk"] == hi]
@@ -1328,12 +1330,14 @@ def _allpairs_arrow(
                 return empty
             ia, Ma = mat(a)
             ib, Mb = mat(b)
+            if len(ia) == 0 or len(ib) == 0:
+                return empty
             C = cos_matrix(Ma, Mb)
             gi, gj = np.meshgrid(np.arange(len(ia)), np.arange(len(ib)), indexing="ij")
             il = np.minimum(ia[gi.ravel()], ib[gj.ravel()])
             ir = np.maximum(ia[gi.ravel()], ib[gj.ravel()])
             cos = C.ravel()
-        mask = cos >= threshold
+            mask = cos >= threshold
         return pd.DataFrame({"id_l": il[mask], "id_r": ir[mask], "cos": cos[mask]})
 
     id_type = base.schema["_id"].dataType.simpleString()

@@ -84,8 +84,6 @@ def fuzzy_join(
     token_order: str = "hash",
     tokens_col_l: str | None = None,
     tokens_col_r: str | None = None,
-    cache_key_l: str | None = None,
-    cache_key_r: str | None = None,
     max_prefix_df: int | None = None,
     salt_buckets: int = 16,
 ) -> DataFrame:
@@ -108,10 +106,8 @@ def fuzzy_join(
     filtering is lossless under ANY total order; only candidate volume
     changes.
 
-    ``tokens_col_*`` / ``cache_key_*`` plug each side into the shared
-    corpus caches (ops/corpus.py) like every other text op: a session
-    that already built the tokenized/shingled frames for a corpus skips
-    re-deriving them here.
+    ``tokens_col_*`` name a precomputed token-array column on each side
+    (:func:`~dftly_spark.ops.tokenized_docs`) like every other text op.
 
     ``max_prefix_df`` is the HOT-TOKEN skew lever.  Boilerplate shingles
     (shared headers, license blocks, stopword-ish grams) can land in many
@@ -154,20 +150,12 @@ def fuzzy_join(
     # nothing materializes before the first action).
     sh_l = _shingle_rows(
         left, id_col_l, text_col_l, "id_l", n,
-        tokens_col=tokens_col_l, cache_key=cache_key_l,
+        tokens_col=tokens_col_l,
     ).transform(durable_checkpoint, eager=False)
     sh_r = _shingle_rows(
         right, id_col_r, text_col_r, "id_r", n,
-        tokens_col=tokens_col_r, cache_key=cache_key_r,
+        tokens_col=tokens_col_r,
     ).transform(durable_checkpoint, eager=False)
-    if cache_key_l is not None and cache_key_l == cache_key_r:
-        # self-join through ONE shared corpus-cache entry: both sides
-        # resolve to the same memoized plan, so `_g` carries the same
-        # attribute id on each side and the prefix join's pl._g == pr._g
-        # would be ambiguous (or trivially true).  Re-aliasing through a
-        # projection mints fresh attribute ids for the right side while
-        # still reading the shared cached/checkpointed data.
-        sh_r = sh_r.select(F.col("id_r").alias("id_r"), F.col("_g").alias("_g"))
 
     if token_order == "df":
         # ascending doc-frequency order: one distinct-doc count over the
@@ -302,11 +290,10 @@ def _shingle_rows(
     n: int,
     *,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Distinct ``(out_id, _g)`` shingle-hash rows (codegen explode path)."""
     long_inst, short_rows = _shingle_instance_frames(
-        df, id_col, text_col, n, tokens_col=tokens_col, cache_key=cache_key
+        df, id_col, text_col, n, tokens_col=tokens_col
     )
     return (
         long_inst.unionByName(short_rows)
@@ -353,7 +340,6 @@ def fuzzy_index(
     n: int = 3,
     threshold: float = 0.5,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the persistable prefix-filter index frames for a corpus.
 
@@ -386,12 +372,9 @@ def fuzzy_index(
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     # referenced twice (prefix + sets): truncate lineage at the boundary.
-    # tokens_col/cache_key plug the build into the shared corpus caches
-    # (ops/corpus.py) like fuzzy_join — a session that already built the
-    # shingle frames skips the tokenize+explode+window rescan here.
     sh = _shingle_rows(
         df, id_col, text_col, "_cid", n,
-        tokens_col=tokens_col, cache_key=cache_key,
+        tokens_col=tokens_col,
     ).transform(durable_checkpoint, eager=False)
     prefix = _prefix_rows(sh, "_cid", threshold).select(
         F.col("_cid").alias(id_col),

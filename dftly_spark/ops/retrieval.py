@@ -34,28 +34,18 @@ def _term_frame(
     id_col: str,
     text_col: str,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """``(_id, _term, _tf, _dl)`` — per-document term frequencies plus the
     document length, from normalized whitespace tokens (or the precomputed
-    ``tokens_col`` — same arrays, see ops/corpus.py).  With ``cache_key``
-    the aggregated frame is persisted per session (ops/corpus.py), so
-    BM25 and the TF-IDF family share one postings build."""
-
-    def build() -> DataFrame:
-        base = df.select(
-            F.col(id_col).alias("_id"),
-            doc_tokens(df, text_col, tokens_col).alias("_w"),
-        ).select("_id", F.size("_w").alias("_dl"), F.explode("_w").alias("_term"))
-        return base.groupBy("_id", "_term").agg(
-            F.count(F.lit(1)).alias("_tf"), F.any_value("_dl").alias("_dl")
-        )
-
-    if cache_key is not None:
-        from .corpus import memo_persist
-
-        return memo_persist(df.sparkSession, f"{cache_key}:terms", build)
-    return build()
+    ``tokens_col`` — the same arrays, see
+    :func:`~dftly_spark.ops.tokenized_docs`)."""
+    base = df.select(
+        F.col(id_col).alias("_id"),
+        doc_tokens(df, text_col, tokens_col).alias("_w"),
+    ).select("_id", F.size("_w").alias("_dl"), F.explode("_w").alias("_term"))
+    return base.groupBy("_id", "_term").agg(
+        F.count(F.lit(1)).alias("_tf"), F.any_value("_dl").alias("_dl")
+    )
 
 
 def bm25_topk(
@@ -70,7 +60,6 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Top-``k`` documents per query by Okapi BM25.
 
@@ -85,19 +74,13 @@ def bm25_topk(
     (``N``, ``avgdl``) ride along as a broadcast one-row frame — no
     driver-side collect, so the whole thing stays one lazy plan.
     """
-    tf = _term_frame(docs, id_col, text_col, tokens_col, cache_key)
-    # Corpus stats (N, avgdl): with a cached postings frame, derive them
-    # from it (one tiny agg over the persisted rows — the explode already
-    # dropped zero-token docs, so the >0 filter is implicit); otherwise one
-    # narrow pass off the docs scan, independent of the postings
-    # aggregation (which would re-tokenize the corpus a second time just to
-    # count documents).
-    if cache_key is not None:
-        dl_frame = tf.groupBy("_id").agg(F.any_value("_dl").alias("_dl"))
-    else:
-        dl_frame = docs.select(
-            F.size(doc_tokens(docs, text_col, tokens_col)).alias("_dl")
-        ).where(F.col("_dl") > 0)
+    tf = _term_frame(docs, id_col, text_col, tokens_col)
+    # Corpus stats (N, avgdl): one narrow pass off the docs scan,
+    # independent of the postings aggregation (which would re-tokenize the
+    # corpus a second time just to count documents).
+    dl_frame = docs.select(
+        F.size(doc_tokens(docs, text_col, tokens_col)).alias("_dl")
+    ).where(F.col("_dl") > 0)
     stats = dl_frame.groupBy().agg(
         F.count(F.lit(1)).alias("_n_docs"),
         (F.sum("_dl") / F.count(F.lit(1))).alias("_avgdl"),
@@ -180,7 +163,6 @@ def tf_idf_vectors(
     min_df: int = 1,
     max_vocab: int | None = None,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Sparse TF-IDF postings: ``(doc_id, term, tf, df, tf_idf)``.
 
@@ -195,7 +177,7 @@ def tf_idf_vectors(
     at corpus scale run with AQE skew-join enabled (the suite default) or
     pre-filter them via ``max_vocab``/a stopword list.
     """
-    tf = _term_frame(docs, id_col, text_col, tokens_col, cache_key)
+    tf = _term_frame(docs, id_col, text_col, tokens_col)
     n_docs = tf.groupBy("_id").count().groupBy().agg(
         F.count(F.lit(1)).alias("_n_docs")
     )
@@ -235,7 +217,6 @@ def sparse_cosine_pairs(
     max_df: int | None = None,
     max_vocab: int | None = None,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Document pairs by sparse TF-IDF cosine — the lexical twin of the
     dense-embedding dedup family.
@@ -261,7 +242,6 @@ def sparse_cosine_pairs(
         min_df=min_df,
         max_vocab=max_vocab,
         tokens_col=tokens_col,
-        cache_key=cache_key,
     ).select(F.col(id_col).alias("_id"), "term", "df", "tf_idf")
     if max_df is not None:
         postings = postings.where(F.col("df") <= max_df)
@@ -329,7 +309,6 @@ def distinctive_terms(
     k: int = 10,
     min_group_tf: int = 5,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ) -> DataFrame:
     """Top-``k`` most distinctive terms per group by relative-frequency lift.
 
@@ -340,11 +319,11 @@ def distinctive_terms(
     never surface.  ``min_group_tf`` suppresses one-off typos.  Output:
     ``(group, term, tf, lift)``, ``k`` rows per group ranked by lift.
 
-    Built on the SAME per-document term frame BM25/TF-IDF share (one
-    tokenize+postings build per corpus per session): per-group term counts
-    via ONE keyed agg, corpus totals via a second agg over that (already
-    small) frame reused twice — Catalyst sees a ReusedExchange, and the
-    1-row grand total joins by the sanctioned tiny broadcast.  The rank
+    Built on the SAME per-document term frame BM25/TF-IDF use: per-group
+    term counts via ONE keyed agg, corpus totals via a second agg over
+    that (already small) frame reused twice — Catalyst sees a
+    ReusedExchange, and the 1-row grand total joins by the sanctioned tiny
+    broadcast.  The rank
     window orders ≤ |vocab| rows per group, never documents.  ``lift`` is
     built from counts with only IEEE ``*``/``/`` — correctly rounded,
     engine-exact, no rounding hedge — and ties (identical count tuples)
@@ -352,7 +331,7 @@ def distinctive_terms(
     """
     from pyspark.sql import Window
 
-    terms = _term_frame(docs, id_col, text_col, tokens_col, cache_key)
+    terms = _term_frame(docs, id_col, text_col, tokens_col)
     with_g = terms.join(
         docs.select(F.col(id_col).alias("_id"), F.col(group_col).alias("_g")),
         "_id",

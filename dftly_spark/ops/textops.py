@@ -44,14 +44,32 @@ def tokens(col: SparkColumn) -> SparkColumn:
     return F.filter(F.split(col, r"\s+"), lambda x: x != F.lit(""))
 
 
+#: Conventional name for the precomputed token-array column.
+TOKENS_COL = "__tokens"
+
+
+def tokenized_docs(
+    docs, *, text_col: str = "text", tokens_col: str = TOKENS_COL
+):
+    """``docs`` plus a ``tokens_col`` array<string> column.
+
+    The canonical ``tokens(lower(text))`` — byte-identical to the
+    ``tokens(normalize_text(text))`` form retrieval/lm use (both split on
+    ``\\s+`` after lowercasing; pinned by
+    ``tests/test_ops.py::test_token_canons_agree``), so one column can feed
+    every op that takes ``tokens_col=``.
+    """
+    return docs.withColumn(tokens_col, tokens(F.lower(F.col(text_col))))
+
+
 def doc_tokens(df, text_col: str, tokens_col: str | None) -> SparkColumn:
     """Token-array expression for a document frame.
 
     Returns the precomputed ``tokens_col`` when given (validated against the
     frame's columns), else the canonical ``tokens(lower(text))``.  Every op
-    with a ``tokens_col=`` parameter resolves through here, so one cached
-    tokenization (``ops.corpus.tokenized_docs``) feeds the whole text-op
-    family instead of each query re-running the regex split over the corpus.
+    with a ``tokens_col=`` parameter resolves through here, so one
+    tokenization (:func:`tokenized_docs`) can feed several text ops in one
+    plan instead of each re-running the regex split over the corpus.
     """
     if tokens_col is not None:
         if tokens_col not in df.columns:
@@ -269,7 +287,6 @@ def dup_ngram_fraction(
     *,
     n: int = 13,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ):
     """Per-document cross-document n-gram repetition (span-dedup signal).
 
@@ -291,7 +308,7 @@ def dup_ngram_fraction(
     from .dedup import _shingle_instance_frames
 
     long_inst, short_rows = _shingle_instance_frames(
-        df, id_col, text_col, n, tokens_col=tokens_col, cache_key=cache_key
+        df, id_col, text_col, n, tokens_col=tokens_col
     )
     inst = long_inst.unionByName(short_rows)
     # referenced twice below (the df-count aggregate + the join back):
@@ -328,7 +345,6 @@ def remove_dup_ngram_spans(
     n: int = 13,
     min_df: int = 2,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ):
     """Cut cross-document duplicated spans out of each document.
 
@@ -349,11 +365,10 @@ def remove_dup_ngram_spans(
     """
     from .dedup import _shingle_instance_frames
 
-    # positioned gram instances — the same (cacheable) frame the n-gram
+    # positioned gram instances — the same frame the n-gram
     # dedup family builds, positions kept for the coverage explode
     inst, _ = _shingle_instance_frames(
-        df, id_col, text_col, n, tokens_col=tokens_col, cache_key=cache_key,
-        keep_pos=True,
+        df, id_col, text_col, n, tokens_col=tokens_col, keep_pos=True,
     )
     # referenced twice below (flagged-gram aggregate + coverage join):
     # same lineage truncation as dup_substring_spans.  Round-14 A/B at
@@ -382,7 +397,6 @@ def dup_substring_spans(
     min_len: int = 50,
     min_count: int = 2,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
     offsets: str = "token",
 ):
     """Maximal verbatim-duplicated token runs of length >= ``min_len``.
@@ -430,8 +444,8 @@ def dup_substring_spans(
     text (``char_end`` exclusive), so removal maps back to the raw bytes
     the way Lee et al. operate (see :func:`_spans_to_char`).  Requires
     ``tokens_col`` (when given) to be the canonical whitespace
-    tokenization of ``text_col`` — the only thing the shared corpus cache
-    stores — since char offsets are derived from the original text's own
+    tokenization of ``text_col`` (what :func:`tokenized_docs` adds),
+    since char offsets are derived from the original text's own
     whitespace structure at the same token positions.
     """
     from .dedup import _shingle_instance_frames
@@ -440,8 +454,7 @@ def dup_substring_spans(
         raise ValueError(f"offsets must be 'token' or 'char', got {offsets!r}")
     L = int(min_len)
     inst, _short = _shingle_instance_frames(
-        df, id_col, text_col, L, tokens_col=tokens_col, cache_key=cache_key,
-        keep_pos=True,
+        df, id_col, text_col, L, tokens_col=tokens_col, keep_pos=True,
     )
     # referenced twice (gram counts + the starts join): truncate lineage
     # at the boundary or the tokenize+explode+window stage re-executes per
@@ -576,7 +589,6 @@ def dedup_substring_spans(
     min_len: int = 50,
     min_count: int = 2,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ):
     """Cut every verbatim-duplicated run of >= ``min_len`` tokens.
 
@@ -595,7 +607,7 @@ def dedup_substring_spans(
     """
     spans = dup_substring_spans(
         df, id_col, text_col, min_len=min_len, min_count=min_count,
-        tokens_col=tokens_col, cache_key=cache_key,
+        tokens_col=tokens_col,
     )
     return _rebuild_without_spans(df, spans, id_col, text_col, tokens_col)
 
@@ -651,7 +663,6 @@ def dedup_substrings_char(
     min_len: int = 50,
     min_count: int = 2,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
 ):
     """Cut every verbatim-duplicated run >= ``min_len`` tokens out of the
     ORIGINAL text — raw-byte removal, the actual Lee et al. deliverable.
@@ -673,7 +684,7 @@ def dedup_substrings_char(
     """
     spans = dup_substring_spans(
         df, id_col, text_col, min_len=min_len, min_count=min_count,
-        tokens_col=tokens_col, cache_key=cache_key, offsets="char",
+        tokens_col=tokens_col, offsets="char",
     )
     return _rebuild_without_char_spans(df, spans, id_col, text_col, tokens_col)
 
@@ -683,7 +694,7 @@ def _rebuild_without_char_spans(
 ):
     """Remove disjoint char ranges ``(id, char_start, char_end)`` from the
     original ``text_col``; shared by the dedup and decontamination char
-    transforms.  ``tokens_col`` (when the caller precomputed/cached the
+    transforms.  ``tokens_col`` (when the caller precomputed the
     token arrays) keeps the non-empty filter off the raw-regex retokenize
     path — same values, one less corpus scan."""
     from pyspark.sql import Window
@@ -758,9 +769,7 @@ def decontaminate_substrings_char(
     probe_text_col: str | None = None,
     min_len: int = 20,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
     probe_tokens_col: str | None = None,
-    probe_cache_key: str | None = None,
 ):
     """Cut every probe-shared run >= ``min_len`` tokens out of the
     ORIGINAL ``df`` text (raw-byte decontamination) — the cross-corpus
@@ -769,8 +778,7 @@ def decontaminate_substrings_char(
         df, probe, id_col, text_col,
         probe_id_col=probe_id_col, probe_text_col=probe_text_col,
         min_len=min_len,
-        tokens_col=tokens_col, cache_key=cache_key,
-        probe_tokens_col=probe_tokens_col, probe_cache_key=probe_cache_key,
+        tokens_col=tokens_col, probe_tokens_col=probe_tokens_col,
         offsets="char",
     )
     return _rebuild_without_char_spans(df, spans, id_col, text_col, tokens_col)
@@ -786,9 +794,7 @@ def contamination_spans(
     probe_text_col: str | None = None,
     min_len: int = 20,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
     probe_tokens_col: str | None = None,
-    probe_cache_key: str | None = None,
     offsets: str = "token",
 ):
     """Maximal runs >= ``min_len`` tokens shared VERBATIM with ``probe``.
@@ -824,14 +830,13 @@ def contamination_spans(
         raise ValueError(f"offsets must be 'token' or 'char', got {offsets!r}")
     L = int(min_len)
     inst, _short = _shingle_instance_frames(
-        df, id_col, text_col, L, tokens_col=tokens_col, cache_key=cache_key,
-        keep_pos=True,
+        df, id_col, text_col, L, tokens_col=tokens_col, keep_pos=True,
     )
     p_id = probe_id_col if probe_id_col is not None else id_col
     p_text = probe_text_col if probe_text_col is not None else text_col
     p_inst, _p_short = _shingle_instance_frames(
         probe, p_id, p_text, L,
-        tokens_col=probe_tokens_col, cache_key=probe_cache_key,
+        tokens_col=probe_tokens_col,
     )
     probe_grams = p_inst.select("_g").distinct()
     starts = inst.join(probe_grams, "_g", "left_semi").select("_id", "_p")
@@ -851,9 +856,7 @@ def decontaminate_substrings(
     probe_text_col: str | None = None,
     min_len: int = 20,
     tokens_col: str | None = None,
-    cache_key: str | None = None,
     probe_tokens_col: str | None = None,
-    probe_cache_key: str | None = None,
 ):
     """Cut every probe-shared run >= ``min_len`` tokens out of ``df``.
 
@@ -866,8 +869,7 @@ def decontaminate_substrings(
         df, probe, id_col, text_col,
         probe_id_col=probe_id_col, probe_text_col=probe_text_col,
         min_len=min_len,
-        tokens_col=tokens_col, cache_key=cache_key,
-        probe_tokens_col=probe_tokens_col, probe_cache_key=probe_cache_key,
+        tokens_col=tokens_col, probe_tokens_col=probe_tokens_col,
     )
     return _rebuild_without_spans(df, spans, id_col, text_col, tokens_col)
 
@@ -1309,7 +1311,7 @@ def token_fertility(
 
     Subword tokens use the module's BPE-ish regex (``bpe_token_count``);
     words use the canonical whitespace tokens (``doc_tokens``, so one
-    cached tokenization serves this op too).  Output per group:
+    shared tokenization serves this op too).  Output per group:
     ``(n_docs, n_chars, n_words, n_tokens, fertility, chars_per_token)``
     with null ratios when their denominator is 0.  Sums are exact
     integers and each ratio is a single double division, so the numbers

@@ -72,8 +72,6 @@ def main() -> None:
 
     qs = entrymod.queries()
     qs["q22_flagship"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    if hasattr(entrymod, "warm_caches"):
-        entrymod.warm_caches(spark, sf_dir)
 
     def set_confs(conf: dict[str, str]) -> None:
         for k, v in DEFAULTS.items():

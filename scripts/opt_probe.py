@@ -50,8 +50,6 @@ def main() -> None:
     qs = entrymod.queries()
     # JVM/codegen warm-up, matching bench.py
     qs["q22_flagship"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    if hasattr(entrymod, "warm_caches"):
-        entrymod.warm_caches(spark, sf_dir)
 
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)

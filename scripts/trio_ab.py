@@ -61,8 +61,6 @@ def main() -> None:
 
     qs = entrymod.queries()
     qs["q22_flagship"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    if hasattr(entrymod, "warm_caches"):
-        entrymod.warm_caches(spark, sf_dir)
 
     medians, all_reps = {}, {}
     for name in sorted(names):

@@ -155,11 +155,11 @@ def test_fuzzy_join_max_prefix_df_pair_set_unchanged(spark):
         fuzzy_join(ldf, rdf, "id", "name", max_prefix_df=8, salt_buckets=1)
 
 
-def test_fuzzy_join_self_join_shared_cache_key(spark):
-    """Both sides of a self-join resolving to ONE shared corpus-cache
-    entry must not trip ambiguous-self-join analysis — and must return
-    the same pairs as fresh-built sides."""
-    from dftly_spark.ops.corpus import clear_token_cache
+def test_fuzzy_join_self_join_shared_tokens(spark):
+    """One tokenized frame, the SAME object, on both sides of a self-join
+    must not trip ambiguous-self-join analysis — and must return the same
+    pairs as fresh-built sides."""
+    from dftly_spark.ops import TOKENS_COL, tokenized_docs
 
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -167,25 +167,22 @@ def test_fuzzy_join_self_join_shared_cache_key(spark):
         (3, "completely different text with no overlap"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    clear_token_cache(spark)
-    try:
-        shared = fuzzy_join(
-            docs, docs, "doc_id", "text", n=2, threshold=0.5,
-            cache_key_l="selfjoin-test", cache_key_r="selfjoin-test",
-        )
-        got = sorted(
-            (r["id_l"], r["id_r"], round(r["jaccard"], 12)) for r in shared.collect()
-        )
-        want = sorted(
-            (r["id_l"], r["id_r"], round(r["jaccard"], 12))
-            for r in fuzzy_join(docs, docs, "doc_id", "text", n=2, threshold=0.5).collect()
-        )
-        assert got == want
-        # the planted near-pair must be present both directions + self-pairs
-        ids = {(l, r) for l, r, _ in got}
-        assert (1, 2) in ids and (2, 1) in ids and (1, 1) in ids
-    finally:
-        clear_token_cache(spark)
+    tok = tokenized_docs(docs)
+    shared = fuzzy_join(
+        tok, tok, "doc_id", "text", n=2, threshold=0.5,
+        tokens_col_l=TOKENS_COL, tokens_col_r=TOKENS_COL,
+    )
+    got = sorted(
+        (r["id_l"], r["id_r"], round(r["jaccard"], 12)) for r in shared.collect()
+    )
+    want = sorted(
+        (r["id_l"], r["id_r"], round(r["jaccard"], 12))
+        for r in fuzzy_join(docs, docs, "doc_id", "text", n=2, threshold=0.5).collect()
+    )
+    assert got == want
+    # the planted near-pair must be present both directions + self-pairs
+    ids = {(l, r) for l, r, _ in got}
+    assert (1, 2) in ids and (2, 1) in ids and (1, 1) in ids
 
 
 def test_fuzzy_join_empty_and_threshold_validation(spark):

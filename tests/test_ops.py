@@ -1456,7 +1456,7 @@ def test_sparse_cosine_pairs_finds_copies_and_stays_keyed(spark, docs):
 def test_token_canons_agree(spark, docs):
     """tokens(lower(text)) and tokens(normalize_text(text)) must produce the
     same arrays (split is on \\s+, so whitespace collapsing is a no-op) —
-    the invariant that lets ONE cached token frame (ops/corpus.py) serve
+    the invariant that lets ONE token column (ops.tokenized_docs) serve
     both the dedup family and the retrieval/lm family."""
     from dftly_spark.ops import normalize_text, tokens
 
@@ -1477,29 +1477,23 @@ def test_token_canons_agree(spark, docs):
         assert r.a == r.b
 
 
-def test_tokenized_docs_cache_reuse_and_parity(spark, docs):
-    """The cached token frame is (a) memoized per (session, key), (b) the
-    same arrays ops compute themselves — so tokens_col= changes the plan,
-    never the result."""
+def test_tokenized_docs_parity(spark, docs):
+    """tokenized_docs adds the same arrays ops compute themselves — so
+    tokens_col= changes the plan, never the result."""
     from dftly_spark.ops import (
         TOKENS_COL,
-        clear_token_cache,
         ngram_jaccard_pairs,
         tokenized_docs,
     )
 
-    clear_token_cache(spark)
-    t1 = tokenized_docs(docs, cache_key="t-parity")
-    t2 = tokenized_docs(docs, cache_key="t-parity")
-    assert t1 is t2  # memoized
     base = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7)
-    cached = ngram_jaccard_pairs(
-        t1, "doc_id", "text", n=3, threshold=0.7, tokens_col=TOKENS_COL
+    shared = ngram_jaccard_pairs(
+        tokenized_docs(docs), "doc_id", "text", n=3, threshold=0.7,
+        tokens_col=TOKENS_COL,
     )
     a = sorted(map(tuple, base.collect()))
-    b = sorted(map(tuple, cached.collect()))
+    b = sorted(map(tuple, shared.collect()))
     assert a == b
-    clear_token_cache(spark)
 
 
 def test_doc_tokens_rejects_missing_column(spark, docs):

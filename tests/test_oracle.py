@@ -77,6 +77,26 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) >= 4
 
 
+def test_warm_caches_is_a_jobless_stub(spark):
+    """bench.py calls warm_caches before timing; the contract keeps no
+    session state, so it must return None without starting a Spark job."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"warm-caches-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm_caches must not start jobs")
+    try:
+        assert entrymod.warm_caches(spark, SF_DIR) is None
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the probe itself sees jobs started under the group
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
 def test_priority_rotation_names_exist():
     """Every _PRIORITY rotation entry must name a registered query (and be
     unique) — _apply_priority_order raises on a stale/typo'd name, so the

@@ -5,7 +5,8 @@ ascending dimension order — for every pair, exactly the JVM fold's sequence
 of IEEE-double multiply-then-add — so the pair SETS and the cosine DOUBLES
 must match bit for bit, including rows sitting exactly on the threshold.
 These tests pin that equality on corpora with exact-threshold cosines,
-duplicate-heavy cells, zero-norm (NULL unit) vectors, and sub-2-row blocks.
+duplicate-heavy cells, zero-norm (NULL unit) vectors, a duplicated id, and
+sub-2-row blocks.
 """
 
 import math
@@ -15,13 +16,15 @@ from pyspark.sql import functions as F
 
 
 def _corpus(spark, n=120, dim=8):
-    # deterministic vectors with planted exact duplicates and a zero vector
+    # deterministic vectors with planted exact duplicates, a zero vector
+    # and a duplicated id
     rows = []
     for i in range(n):
         v = [math.sin(0.1 * i * (k + 1)) + 0.01 * k for k in range(dim)]
         rows.append((i, v))
     rows.append((n, list(rows[0][1])))      # exact duplicate of id 0
     rows.append((n + 1, [0.0] * dim))       # zero-norm -> NULL unit vector
+    rows.append((0, list(rows[0][1])))      # duplicated id 0, same vector
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
