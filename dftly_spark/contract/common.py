@@ -239,6 +239,41 @@ def _pq_schema(table: str) -> dict[str, str]:
     return out
 
 
+def _lloyd_first_values(sf_dir: str, k: int) -> str:
+    """k-means centroids of ``embeddings`` as DuckDB ``VALUES`` rows
+    ``(cell, cv::DOUBLE[])``, re-fitted in pure numpy (pyarrow read, no
+    ``ops`` code) on the deterministic Lloyd schedule the ``"kmeans"``
+    centroid strategy runs with ``kmeans_init="first"``: lowest-id unit
+    init, argmax-dot assign with first-cell tie-break, raw-vector mean
+    update, empty cells keep previous, unit-normalize new means, two
+    iterations.  Summation order differs from Spark's (partial aggs vs
+    numpy pairwise), so centroids agree to ~1e-12 — far below any real
+    assignment margin.  Shared by the x56 and x160 oracles."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+    ids = tbl["vec_id"].to_numpy()
+    vecs = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
+    vecs = vecs[np.argsort(ids, kind="stable")]
+
+    def _unit(m: np.ndarray) -> np.ndarray:
+        n = np.sqrt((m * m).sum(axis=-1, keepdims=True))
+        return np.where(n > 0, m / np.where(n == 0, 1.0, n), m)
+
+    cents = _unit(vecs[:k].copy())
+    for _ in range(2):
+        cell = (vecs @ cents.T).argmax(axis=1)  # first-wins on ties, like array_position
+        new = []
+        for ci in range(k):
+            members = vecs[cell == ci]
+            new.append(_unit(members.mean(axis=0)) if len(members) else cents[ci])
+        cents = np.array(new)
+    return ",\n      ".join(
+        f"({i + 1}, {[float(x) for x in c]!r}::DOUBLE[])" for i, c in enumerate(cents)
+    )
+
+
 def _spec_oracle(table: str, spec: dict[str, str]):
     """Machine-generated DuckDB oracle for a ``_spec_query`` entry: the
     SAME spec the Spark side consumes, emitted through sqlgen — one

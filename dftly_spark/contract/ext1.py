@@ -22,7 +22,7 @@ from __future__ import annotations
 from dftly_spark.sqlgen import exact_sum, portable_round
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .common import _TOK, _docs_tok, _prep, _q, _t
+from .common import _TOK, _docs_tok, _lloyd_first_values, _prep, _q, _t
 from .qseries import _JACCARD_ORACLE, _MAX_DF
 
 
@@ -543,48 +543,20 @@ def _x56_oracle() -> str:
     """DuckDB mirror of ivf_topk(strategy="kmeans") — the PRODUCTION path.
 
     x12 gates strategy="first" (centroids derivable in SQL); this gates the
-    learned-centroid path.  The centroid matrix is re-fitted HERE in pure
-    Python/numpy (pyarrow read, same deterministic Lloyd's schedule:
-    lowest-id init, argmax-dot assign with first-cell tie-break, mean
-    update, empty cells keep previous, unit-normalize each iter) and
-    inlined as literals, so DuckDB replays the whole index against an
-    INDEPENDENTLY fitted implementation.  Summation order differs between
-    the two fitters (Spark partial aggs vs numpy pairwise), so centroids
-    agree to ~1e-12 — far below any real assignment margin — and the final
-    cos column is bit-exact either way because re-ranking uses the original
-    vectors, not the centroids.  Reads the same sf dir the driver gates at
-    (sf0.01; override with SPARK_GRAFT_GATE_SF_DIR).
+    learned-centroid path.  The centroid matrix is re-fitted independently
+    in numpy (:func:`~.common._lloyd_first_values`) and inlined as
+    literals, so DuckDB replays the whole index against an INDEPENDENTLY
+    fitted implementation.  Centroids agree with Spark's to ~1e-12, and the
+    final cos column is bit-exact either way because re-ranking uses the
+    original vectors, not the centroids.  Reads the same sf dir the driver
+    gates at (sf0.01; override with SPARK_GRAFT_GATE_SF_DIR).
     """
     import os
-
-    import numpy as np
-    import pyarrow.parquet as pq
 
     sf_dir = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
     if sf_dir in _X56_ORACLE_CACHE:
         return _X56_ORACLE_CACHE[sf_dir]
-    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    ids = tbl["vec_id"].to_numpy()
-    vecs = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
-    order = np.argsort(ids, kind="stable")
-    vecs = vecs[order]
-
-    def _unit(m: np.ndarray) -> np.ndarray:
-        n = np.sqrt((m * m).sum(axis=-1, keepdims=True))
-        return np.where(n > 0, m / np.where(n == 0, 1.0, n), m)
-
-    cents = _unit(vecs[:16].copy())
-    for _ in range(2):
-        cell = (vecs @ cents.T).argmax(axis=1)  # first-wins on ties, like array_position
-        new = []
-        for ci in range(16):
-            members = vecs[cell == ci]
-            new.append(_unit(members.mean(axis=0)) if len(members) else cents[ci])
-        cents = np.array(new)
-
-    rows = ",\n      ".join(
-        f"({i + 1}, {[float(x) for x in c]!r}::DOUBLE[])" for i, c in enumerate(cents)
-    )
+    rows = _lloyd_first_values(sf_dir, 16)
     sql = f"""
     WITH cents(cell, cv) AS (VALUES
       {rows}),

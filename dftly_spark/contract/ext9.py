@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from dftly_spark.sqlgen import portable_round_sql
 
-from .common import _TOK, _docs_tok, _prep, _q, _t
+from .common import _TOK, _docs_tok, _lloyd_first_values, _prep, _q, _t
 
 #: the canonical whitespace tokenization as a DuckDB expression (lowered):
 #: split on \s+ and drop boundary empties — the ops.textops.tokens mirror
@@ -217,43 +217,17 @@ _X160_ORACLE_CACHE: dict[str, str] = {}
 
 
 def _x160_oracle() -> str:
-    """DuckDB mirror of cluster_balanced_sample: centroids re-fitted in
-    pure numpy with the exact Lloyd schedule of choose_centroid_frame
-    (lowest-id unit init, argmax-dot assign with first-cell tie-break,
-    raw-vector mean update, empty cells keep previous, unit-normalize new
-    means each iter — the independently-verified x56 replay), inlined as
-    literals; the per-cell cap replays the LCG order
+    """DuckDB mirror of cluster_balanced_sample: centroids re-fitted
+    independently in numpy on the same Lloyd schedule as x56
+    (:func:`~.common._lloyd_first_values`), inlined as literals; the
+    per-cell cap replays the LCG order
     ((id*1103515245 + 12345 + seed) % 2^31, then id)."""
     import os
-
-    import numpy as np
-    import pyarrow.parquet as pq
 
     sf_dir = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.01")
     if sf_dir in _X160_ORACLE_CACHE:
         return _X160_ORACLE_CACHE[sf_dir]
-    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    ids = tbl["vec_id"].to_numpy()
-    vecs = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
-    vecs = vecs[np.argsort(ids, kind="stable")]
-
-    def _unit(m: np.ndarray) -> np.ndarray:
-        n = np.sqrt((m * m).sum(axis=-1, keepdims=True))
-        return np.where(n > 0, m / np.where(n == 0, 1.0, n), m)
-
-    k = 8
-    cents = _unit(vecs[:k].copy())
-    for _ in range(2):
-        cell = (vecs @ cents.T).argmax(axis=1)
-        new = []
-        for ci in range(k):
-            members = vecs[cell == ci]
-            new.append(_unit(members.mean(axis=0)) if len(members) else cents[ci])
-        cents = np.array(new)
-
-    rows = ",\n      ".join(
-        f"({i + 1}, {[float(x) for x in c]!r}::DOUBLE[])" for i, c in enumerate(cents)
-    )
+    rows = _lloyd_first_values(sf_dir, 8)
     seed = 42
     mix = f"((vec_id * 1103515245 + {12345 + seed}) % {2**31})"
     sql = f"""

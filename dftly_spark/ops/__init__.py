@@ -99,7 +99,6 @@ from .similarity import (
     topic_assign,
     ivf_topk,
     kmeans_centroids,
-    choose_centroids,
     choose_centroid_frame,
     l2_norm,
     lsh_bucket_topk,
@@ -221,7 +220,7 @@ __all__ = [
     "embedding_dup_pairs",
     "dot", "l2_norm", "cosine", "unit", "brute_force_topk", "hard_negatives", "lsh_bucket_topk", "topk_recall", "pair_quality",
     "ivf_topk", "random_project", "kmeans_centroids", "topic_assign",
-    "choose_centroids", "choose_centroid_frame",
+    "choose_centroid_frame",
     "asof_join", "asof_join_stream", "asof_join_stream_tws", "nearest_join", "lag_features", "rolling_time_features", "range_join", "interval_join",
     "salted_agg", "write_bucketed", "read_bucketed", "bloom_prune", "semi_prune",
     "write_partitioned", "write_zordered", "zorder_key", "profile_table", "json_extract_fields", "json_parse_typed",

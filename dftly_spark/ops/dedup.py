@@ -1079,7 +1079,6 @@ def semantic_dedup_pairs(
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
     max_cell_size: int | None = None,
-    centroids_as: str = "broadcast_join",
     scorer: str = "auto",
     pair_scorer: str = "fold",
 ) -> DataFrame:
@@ -1122,12 +1121,11 @@ def semantic_dedup_pairs(
        ``scorer="fold"`` explicitly to restore it (an info log fires
        whenever auto resolves to arrow).
     """
-    from .similarity import _centroids_for, _resolve_scorer, assign_cells, dot
+    from .similarity import _resolve_scorer, assign_cells, choose_centroid_frame, dot
 
     scorer = _resolve_scorer(scorer, n_centroids, "semantic_dedup_pairs")
-    cents = _centroids_for(
+    cents = choose_centroid_frame(
         corpus,
-        centroids_as,
         id_col=id_col,
         vec_col=vec_col,
         n_centroids=n_centroids,

@@ -637,7 +637,6 @@ def cluster_balanced_sample(
         seed=seed,
         kmeans_iters=kmeans_iters,
         kmeans_init=kmeans_init,
-        centroids_as="broadcast_join",
         scorer="fold",
     ).select(F.col(id_col), F.col("topic").cast("int").alias("cell"))
     w = Window.partitionBy("cell").orderBy(

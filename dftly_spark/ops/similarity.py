@@ -300,56 +300,40 @@ def kmeans_centroids(
 ) -> list[list[float]]:
     """Lloyd's k-means over an embedding column; returns unit centroids.
 
-    Each iteration is two distributed steps — assign (argmax dot against
-    the current centroid matrix, attached via 1-row broadcast) and update
-    (posexplode + groupBy(cell, dim) avg, a map-side-combinable aggregation
-    whose output is ``k×dim`` rows).  Centroid state stays
+    The driver-side read of :func:`choose_centroid_frame`'s ``"kmeans"``
+    fit.  Each iteration is two distributed steps — assign (argmax dot
+    against the current centroid matrix, attached via 1-row broadcast) and
+    update (posexplode + groupBy(cell, dim) avg, a map-side-combinable
+    aggregation whose output is ``k×dim`` rows).  Centroid state stays
     DataFrame-RESIDENT across iterations (checkpointed ``k×dim`` frame);
     the driver sees the matrix exactly once, in the final collect — at
     production IVF shapes (k=65k, dim=1k) the ~0.5 GB matrix never rides
     py4j per iteration.  Empty cells keep their previous centroid.
 
     ``init_strategy`` picks the starting centroids when ``init`` is not
-    given: ``"sample"`` (seeded hash-ordered sample — default) or
-    ``"first"`` (lowest-id vectors — replayable by an external engine
-    without xxhash64, which is what the x56 driver oracle needs).
+    given, cluster-side (no driver read): ``"sample"`` (seeded
+    hash-ordered sample — default) or ``"first"`` (lowest-id vectors —
+    replayable by an external engine without xxhash64, which is what the
+    x56 driver oracle needs).  An explicit ``init`` list is unit-normalized
+    and used as given.
     """
     if init is None:
-        if init_strategy == "first":
-            rows = (
-                corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
+        return _collect_centroid_lists(
+            choose_centroid_frame(
+                corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
+                strategy="kmeans", seed=seed, kmeans_iters=iters,
+                kmeans_init=init_strategy,
             )
-            init = [[float(x) for x in r[1]] for r in rows]
-        elif init_strategy == "sample":
-            init = [
-                [float(x) for x in r[1]]
-                for r in corpus.select(
-                    F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h"), vec_col
-                )
-                .orderBy("_h")
-                .limit(n_centroids)
-                .collect()
-            ]
-        else:
-            raise ValueError(f"unknown kmeans init_strategy {init_strategy!r}")
-    cents = [_unit_list(c) for c in init]
-    base = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
-
-    # Lloyd refinement with DataFrame-RESIDENT centroid state: the k×dim
-    # matrix lives in a checkpointed frame between iterations, reaching the
-    # executors via a 1-row broadcast (scalar-attach) instead of plan
-    # literals.  Per-iteration driver involvement is job scheduling only —
-    # no k×dim py4j transfer until the single final collect — so the fit
-    # scales to production IVF shapes (k=65k, dim=1k ≈ 0.5 GB stays
-    # cluster-side).  Arithmetic is bit-identical to the literal-based
-    # formulation: per-dim means are the same keyed avg; the unit norm is
-    # a LEFT FOLD over dim order (F.aggregate), matching Python's
-    # sequential sum(v*v) — a window SUM would reorder partial sums.
-    spark = corpus.sparkSession
-    cdf = spark.createDataFrame(
-        [(ci + 1, i, float(x)) for ci, c in enumerate(cents) for i, x in enumerate(c)],
+        )
+    cdf = corpus.sparkSession.createDataFrame(
+        [
+            (ci + 1, i, float(x))
+            for ci, c in enumerate(init)
+            for i, x in enumerate(_unit_list([float(x) for x in c]))
+        ],
         "_cell int, _i int, _m double",
     ).transform(durable_checkpoint)
+    base = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
     return _collect_centroid_lists(_lloyd(base, cdf, iters))
 
 
@@ -397,8 +381,12 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
 
     ``base`` is the corpus as one ``_v: array<double>`` column; ``cdf`` the
     (checkpointed) ``(_cell, _i, _m)`` centroid frame.  Returns the refined
-    centroid frame, checkpointed.  See :func:`kmeans_centroids` for the
-    bit-reproducibility argument (left-fold norms, keyed avg means)."""
+    centroid frame, checkpointed.
+
+    Arithmetic is reproducible by an external engine: per-dim means are a
+    keyed avg, and the unit norm is a LEFT FOLD over dim order
+    (``F.aggregate``, Python's sequential ``sum(v*v)``) — a window SUM
+    would reorder the partial sums."""
     dot = lambda a, b: F.aggregate(  # noqa: E731 — shared fold shape
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
@@ -482,65 +470,6 @@ def _unit_list(c: list[float]) -> list[float]:
     return [x / n for x in c] if n else c
 
 
-def _cell_scores_col(vec: SparkColumn, cents: list[list[float]]) -> SparkColumn:
-    """array<double> of dot(vec, centroid_i) — one expression over a 2-D
-    centroid literal, so the plan carries two small trees instead of
-    ``n_centroids`` separate fold columns (compiles fast; the fold itself is
-    an interpreted HOF either way).  Fold order matches DuckDB's
-    ``list_dot_product`` bit-for-bit."""
-    cents2d = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
-    return F.transform(
-        cents2d,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-        ),
-    )
-
-
-def choose_centroids(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    strategy: str = "first",
-    seed: int = 42,
-    kmeans_iters: int = 5,
-    kmeans_init: str = "sample",
-) -> list[list[float]]:
-    """Unit centroids for cell-based indexes (IVF, semantic dedup).
-
-    * ``"first"`` — the ``n_centroids`` lowest-id corpus vectors; fully
-      deterministic and replayable in plain SQL (the driver oracles do).
-    * ``"sample"`` — seeded hash-ordered sample, independent of data order.
-    * ``"kmeans"`` — :func:`kmeans_centroids` from the ``kmeans_init`` init
-      ("sample" default; "first" for external replay); best cell
-      balance/recall, costs ``2×iters`` extra jobs at build time.
-    """
-    if strategy == "first":
-        rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_centroids).collect()
-        return [_unit_list([float(x) for x in r[1]]) for r in rows]
-    if strategy == "sample":
-        rows = (
-            corpus.select(F.xxhash64(F.col(id_col), F.lit(seed)).alias("_h"), vec_col)
-            .orderBy("_h")
-            .limit(n_centroids)
-            .collect()
-        )
-        return [_unit_list([float(x) for x in r[1]]) for r in rows]
-    if strategy == "kmeans":
-        return kmeans_centroids(
-            corpus,
-            vec_col=vec_col,
-            n_centroids=n_centroids,
-            iters=kmeans_iters,
-            id_col=id_col,
-            seed=seed,
-            init_strategy=kmeans_init,
-        )
-    raise ValueError(f"unknown centroid strategy {strategy!r}")
-
-
 def choose_centroid_frame(
     corpus: DataFrame,
     *,
@@ -552,20 +481,27 @@ def choose_centroid_frame(
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
 ) -> DataFrame:
-    """Unit centroids as a long-form DataFrame ``(_cell int, _i int, _m
-    double)`` — the 100 TB shape of :func:`choose_centroids`.
+    """Unit centroids for cell-based indexes (IVF, semantic dedup, topic
+    assignment) as a long-form DataFrame ``(_cell int, _i int, _m double)``,
+    cells 1-based and contiguous.
 
-    The k×dim matrix is selected, normalized, and (for ``"kmeans"``)
-    refined entirely CLUSTER-SIDE: the driver never holds it, it never
-    rides py4j, and consumers attach it as a 1-row broadcast instead of a
-    plan literal.  At the production IVF shape (k=65k, dim=1k ≈ 0.5 GB)
-    the literal path breaks the plan/py4j layer; this one is a bounded
-    broadcast.  Values are bit-identical to :func:`choose_centroids`: the
-    unit norm is the same left fold over dim order (Python's sequential
-    ``sum(v*v)`` ≡ ``F.aggregate``; ``math.sqrt`` ≡ JVM sqrt, both
-    IEEE-correctly-rounded), so cell assignments and every downstream hash
-    are unchanged.  The frame is checkpointed (consumers reference it
-    2+ times — once per side of the candidate join)."""
+    * ``"first"`` — the ``n_centroids`` lowest-id corpus vectors; fully
+      deterministic and replayable in plain SQL (the driver oracles do).
+    * ``"sample"`` — seeded hash-ordered sample, independent of data order.
+    * ``"kmeans"`` — Lloyd refinement (:func:`_lloyd`, ``kmeans_iters``
+      iterations) from the ``kmeans_init`` init ("sample" default; "first"
+      for external replay); best cell balance/recall, costs ``2×iters``
+      extra jobs at build time.
+
+    Rows with a NULL vector are never chosen.  The k×dim matrix is
+    selected, normalized, and refined entirely CLUSTER-SIDE: the driver
+    never holds it, it never rides py4j, and consumers attach it as a
+    checkpointed 1-row broadcast (:func:`_matrix_frame`) — the shape that
+    survives the production IVF size (k=65k, dim=1k ≈ 0.5 GB), where plan
+    literals break the plan/py4j layer.  The unit norm is a left fold over
+    dim order (``F.aggregate``), so an external engine replays it
+    bit-for-bit.  The frame is checkpointed (consumers reference it 2+
+    times — once per side of the candidate join)."""
     if strategy in ("first", "sample"):
         return _init_centroid_frame(
             corpus, id_col=id_col, vec_col=vec_col, n=n_centroids,
@@ -591,9 +527,12 @@ def _init_centroid_frame(
     seed: int,
 ) -> DataFrame:
     """Cluster-side ``(_cell, _i, _m)`` unit-centroid frame for the
-    ``"first"`` / ``"sample"`` selection rules.  The global row_number
-    window runs over the already-LIMITed n-row frame (bounded
-    SinglePartition, same regime as a top-k collect)."""
+    ``"first"`` / ``"sample"`` selection rules.  NULL vectors are dropped
+    BEFORE the limit: a NULL among the chosen rows would posexplode to no
+    ``(_cell, _i, _m)`` rows and leave a gap in the cell numbering, which
+    :func:`_matrix_frame` closes by shifting every later cell down one.
+    The global row_number window runs over the already-LIMITed n-row
+    frame (bounded SinglePartition, same regime as a top-k collect)."""
     if strategy == "first":
         key = F.col(id_col).alias("_k")
     elif strategy == "sample":
@@ -602,13 +541,15 @@ def _init_centroid_frame(
         raise ValueError(f"unknown centroid strategy {strategy!r}")
     sel = (
         corpus.select(key, F.col(vec_col).cast("array<double>").alias("_v0"))
+        .where(F.col("_v0").isNotNull())
         .orderBy("_k")
         .limit(n)
         .withColumn("_cell", F.row_number().over(Window.orderBy("_k")))
     )
-    # left-fold norm over dim order — bit-identical to _unit_list's
-    # sequential sum(v*v).  The divide happens AFTER the posexplode, on the
-    # carried scalar `_n`: dividing inside a transform() lambda lets the
+    # left-fold norm over dim order — the sequential sum DuckDB's
+    # list_dot_product computes, so the x12 oracle replays it bit-for-bit.
+    # The divide happens AFTER the posexplode, on the carried scalar `_n`:
+    # dividing inside a transform() lambda lets the
     # optimizer inline the O(dim) fold into the per-element body once the
     # array meets the Generate (no subexpression elimination in interpreted
     # HOFs), turning the build into O(k·dim²) — 415 s at k=8192×dim=768 vs
@@ -637,15 +578,13 @@ def _init_centroid_frame(
     )
 
 
-def _cents_numpy(cents) -> "object":
-    """Centroids (list or long frame) → a k×dim float64 numpy matrix.
-    One bounded k×dim driver pull for the frame form — the same class of
-    collect as :func:`kmeans_centroids`'s final read."""
+def _cents_numpy(cents: DataFrame) -> "object":
+    """Long-form centroids → a k×dim float64 numpy matrix: one bounded
+    k×dim driver pull, the same class of collect as
+    :func:`kmeans_centroids`'s final read."""
     import numpy as np
 
-    if isinstance(cents, DataFrame):
-        cents = _collect_centroid_lists(cents)
-    return np.asarray(cents, dtype=np.float64)
+    return np.asarray(_collect_centroid_lists(cents), dtype=np.float64)
 
 
 def _assign_cells_arrow(
@@ -834,9 +773,39 @@ def _resolve_scorer(scorer: str, k: int | None, where: str) -> str:
     raise ValueError(f"scorer must be 'auto', 'fold', or 'arrow', got {scorer!r}")
 
 
+def _with_cell_scores(
+    df: DataFrame, cmat: DataFrame, id_expr, vec_col: str, id_alias: str, v_alias: str
+) -> DataFrame:
+    """``(id_alias, v_alias, _s)`` — each row's vector with ``_s``, its
+    dot product against every centroid of the 1-row ``_cm`` matrix frame
+    (attached as a broadcast).  Fold order matches DuckDB's
+    ``list_dot_product`` bit-for-bit."""
+    # alias the cast vector to an ATTRIBUTE before the fold captures it:
+    # expressions captured by interpreted HOF lambdas re-evaluate per outer
+    # element, so a captured cast would re-materialize the array once per
+    # CELL (k× per row) instead of once per row
+    v = F.col(vec_col).cast("array<double>")
+    return (
+        df.crossJoin(F.broadcast(cmat))
+        .select(id_expr.alias(id_alias), v.alias(v_alias), "_cm")
+        .select(
+            id_alias,
+            v_alias,
+            F.transform(
+                F.col("_cm"),
+                lambda cv: F.aggregate(
+                    F.zip_with(F.col(v_alias), cv, lambda x, y: x * y),
+                    F.lit(0.0),
+                    lambda a, x: a + x,
+                ),
+            ).alias("_s"),
+        )
+    )
+
+
 def assign_cells(
     corpus: DataFrame,
-    cents: list[list[float]] | DataFrame,
+    cents: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -847,52 +816,45 @@ def assign_cells(
     centroid cell (argmax dot; first/lowest cell wins ties).  Centroids are
     unit vectors, so argmax(dot) ≡ argmax(cosine) with no per-row norm.
 
-    ``cents`` is either a Python list (small k — the matrix rides the plan
-    as literals) or a long-form ``(_cell, _i, _m)`` DataFrame from
-    :func:`choose_centroid_frame` (the scale path — the matrix rides a
-    1-row broadcast).  Scores fold identically either way.
+    ``cents`` is the long-form ``(_cell, _i, _m)`` frame from
+    :func:`choose_centroid_frame`; the matrix reaches the executors as a
+    checkpointed 1-row broadcast.
 
     ``scorer`` — ``"auto"`` (default) resolves by centroid count: the
     hash-exact interpreted ``"fold"`` below ``_FOLD_WARN_CELLS``,
     ``"arrow"`` at production k (30–160× on the SCALING.md probes).
-    With DataFrame centroids the count comes from the ``n_centroids``
-    hint; WITHOUT the hint auto resolves to ``"fold"`` (with a warning)
-    rather than counting the frame, because counting would run an eager
-    Spark job at plan-build time — re-executing a lazily-built centroid
-    pipeline.  ``"arrow"`` switches the k×dim score computation
-    to an Arrow-batched numpy matmul (:func:`_assign_cells_arrow`), at
-    the cost of last-ulp score differences (BLAS accumulation order), so
-    tie-sensitive hash-pinned comparisons should pass ``"fold"``
-    explicitly.  The production-k warning for an explicit ``"fold"``
-    fires once, at the resolving call site (the public ops, or
-    :func:`_resolve_scorer` for direct use)."""
+    The count comes from the ``n_centroids`` hint; WITHOUT the hint auto
+    resolves to ``"fold"`` (with a warning) rather than counting the
+    frame, because counting would run an eager Spark job at plan-build
+    time — re-executing a lazily-built centroid pipeline.  ``"arrow"``
+    switches the k×dim score computation to an Arrow-batched numpy matmul
+    (:func:`_assign_cells_arrow`), at the cost of last-ulp score
+    differences (BLAS accumulation order), so tie-sensitive hash-pinned
+    comparisons should pass ``"fold"`` explicitly.  The production-k
+    warning for an explicit ``"fold"`` fires once, at the resolving call
+    site (the public ops, or :func:`_resolve_scorer` for direct use)."""
     if scorer == "auto":
-        # DataFrame centroids WITHOUT an n_centroids hint: resolve to the
-        # hash-exact fold rather than counting the frame — counting would
-        # run an eager Spark action at plan-BUILD time, silently executing
-        # the whole upstream pipeline (e.g. a kmeans fit) an extra time for
-        # a lazily-built frame.  Callers at production k pass the hint (or
-        # scorer='arrow') to get the fast path; the warning says so.
-        k = (
-            len(cents)
-            if not isinstance(cents, DataFrame)
-            else n_centroids
-        )
-        if k is None:
+        # no n_centroids hint: resolve to the hash-exact fold rather than
+        # counting the frame — counting would run an eager Spark action at
+        # plan-BUILD time, silently executing the whole upstream pipeline
+        # (e.g. a kmeans fit) an extra time for a lazily-built frame.
+        # Callers at production k pass the hint (or scorer='arrow') to get
+        # the fast path; the warning says so.
+        if n_centroids is None:
             import warnings
 
             warnings.warn(
-                "assign_cells: scorer='auto' with DataFrame centroids and "
-                "no n_centroids hint resolves to the hash-exact 'fold' "
-                "scorer (counting the frame would run an eager job at "
-                "plan-build time); pass n_centroids= or scorer='arrow' "
-                "for the fast path at k >= 1024",
+                "assign_cells: scorer='auto' with no n_centroids hint "
+                "resolves to the hash-exact 'fold' scorer (counting the "
+                "frame would run an eager job at plan-build time); pass "
+                "n_centroids= or scorer='arrow' for the fast path at "
+                "k >= 1024",
                 RuntimeWarning,
                 stacklevel=2,
             )
             scorer = "fold"
-        elif k >= _FOLD_WARN_CELLS:
-            _log_auto_arrow(k, "assign_cells")
+        elif n_centroids >= _FOLD_WARN_CELLS:
+            _log_auto_arrow(n_centroids, "assign_cells")
             scorer = "arrow"
         else:
             scorer = "fold"
@@ -900,37 +862,11 @@ def assign_cells(
         return _assign_cells_arrow(corpus, cents, id_col=id_col, vec_col=vec_col)
     if scorer != "fold":
         raise ValueError(f"scorer must be 'auto', 'fold', or 'arrow', got {scorer!r}")
-    # alias the cast vector to an ATTRIBUTE before any fold captures it:
-    # expressions captured by interpreted HOF lambdas re-evaluate per outer
-    # element, so a captured cast would re-materialize the array once per
-    # CELL (k× per row) instead of once per row
-    v = F.col(vec_col).cast("array<double>")
-    if isinstance(cents, DataFrame):
-        # eager 1-row checkpoint: the k×dim aggregation runs once at build
-        # time and the consumer plan sees a 1-row scan (no Exchange rides
-        # into every downstream plan)
-        c = (
-            corpus.crossJoin(F.broadcast(_matrix_frame(cents).transform(durable_checkpoint)))
-            .select(F.col(id_col).alias("_id"), v.alias("_v"), "_cm")
-            .select(
-                "_id",
-                "_v",
-                F.transform(
-                    F.col("_cm"),
-                    lambda cv: F.aggregate(
-                        F.zip_with(F.col("_v"), cv, lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda a, x: a + x,
-                    ),
-                ).alias("_s"),
-            )
-        )
-    else:
-        c = corpus.select(F.col(id_col).alias("_id"), v.alias("_v")).select(
-            "_id",
-            "_v",
-            _cell_scores_col(F.col("_v"), cents).alias("_s"),
-        )
+    # eager 1-row checkpoint: the k×dim aggregation runs once at build
+    # time and the consumer plan sees a 1-row scan (no Exchange rides
+    # into every downstream plan)
+    cmat = _matrix_frame(cents).transform(durable_checkpoint)
+    c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, "_id", "_v")
     # Separate select so `_s` is computed once, not inlined per reference.
     return c.select(
         "_id",
@@ -949,7 +885,6 @@ def topic_assign(
     seed: int = 42,
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
-    centroids_as: str = "broadcast_join",
     scorer: str = "auto",
 ) -> DataFrame:
     """Assign every embedding to a centroid cell: ``(id_col, topic)``.
@@ -960,23 +895,19 @@ def topic_assign(
     argmax against a broadcast centroid matrix, NO shuffle at all — and
     downstream mixture ops (``mixture_sample``, ``rollup_stats``,
     ``cap_per_group``) treat the topic like any other group column.
-    ``strategy`` as in :func:`choose_centroids`; ``"kmeans"`` gives the
-    balanced cells a real deployment wants.  ``centroids_as`` picks how
-    the matrix reaches the executors: ``"broadcast_join"`` (default — a
-    cluster-resident 1-row broadcast, the 100 TB shape) or ``"literal"``
-    (inlined plan literals; fine for small k, breaks at k×dim ≈ 0.5 GB).
-    Assignments are bit-identical either way.  ``scorer`` — ``"auto"``
-    (default) resolves by ``n_topics``: the hash-exact fold below 1024
-    cells, the Arrow/numpy matmul path above (see :func:`assign_cells`);
-    last-ulp score divergence documented there — pass ``"fold"``
-    explicitly for hash-pinned comparisons.
+    ``strategy`` as in :func:`choose_centroid_frame`; ``"kmeans"`` gives
+    the balanced cells a real deployment wants.  The matrix stays
+    cluster-resident and reaches the executors as a 1-row broadcast.
+    ``scorer`` — ``"auto"`` (default) resolves by ``n_topics``: the
+    hash-exact fold below 1024 cells, the Arrow/numpy matmul path above
+    (see :func:`assign_cells`); last-ulp score divergence documented
+    there — pass ``"fold"`` explicitly for hash-pinned comparisons.
     """
     # resolve (and fail fast on a typo) BEFORE the centroid fit — a
     # kmeans build at production k runs minutes of jobs
     scorer = _resolve_scorer(scorer, n_topics, "topic_assign")
-    cents = _centroids_for(
+    cents = choose_centroid_frame(
         corpus,
-        centroids_as,
         id_col=id_col,
         vec_col=vec_col,
         n_centroids=n_topics,
@@ -995,20 +926,6 @@ def topic_assign(
     ).select(F.col("_id").alias(id_col), F.col("_cell").alias("topic"))
 
 
-def _centroids_for(
-    corpus: DataFrame, centroids_as: str, **kwargs
-) -> list[list[float]] | DataFrame:
-    """Dispatch ``centroids_as`` → list (literal plan) or long frame
-    (1-row broadcast).  Shared by every cell-index consumer."""
-    if centroids_as == "broadcast_join":
-        return choose_centroid_frame(corpus, **kwargs)
-    if centroids_as == "literal":
-        return choose_centroids(corpus, **kwargs)
-    raise ValueError(
-        f"centroids_as must be 'broadcast_join' or 'literal', got {centroids_as!r}"
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1023,7 +940,6 @@ def ivf_topk(
     strategy: str = "first",
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
-    centroids_as: str = "broadcast_join",
     scorer: str = "auto",
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index.
@@ -1034,7 +950,7 @@ def ivf_topk(
     100 TB shape — scanning ~``nprobe/n_centroids`` of the corpus per query
     instead of all of it.  Recall < 1 by design.
 
-    ``strategy`` picks the centroids:
+    ``strategy`` picks the centroids (:func:`choose_centroid_frame`):
 
     * ``"first"`` — the ``n_centroids`` lowest-id corpus vectors,
       unit-normalized.  Fully deterministic and expressible in plain SQL, so
@@ -1042,18 +958,15 @@ def ivf_topk(
       does); centroid quality is whatever the data order gives.
     * ``"sample"`` — deterministic hash-ordered sample (seeded; spreads
       centroids independent of data order).
-    * ``"kmeans"`` — :func:`kmeans_centroids` from the sample init
-      (``kmeans_iters`` Lloyd iterations); best cell balance/recall,
-      costs ``2×iters`` extra distributed jobs at build time.
+    * ``"kmeans"`` — Lloyd refinement from the ``kmeans_init`` init
+      (``kmeans_iters`` iterations); best cell balance/recall, costs
+      ``2×iters`` extra distributed jobs at build time.
 
-    ``centroids_as`` picks how the k×dim matrix reaches the executors:
-    ``"broadcast_join"`` (default) keeps it cluster-resident end-to-end —
-    :func:`choose_centroid_frame` builds/refines it as a DataFrame, and
-    both the corpus assignment and the query probing attach it as a 1-row
-    broadcast — the shape that survives k=65k×dim=1k (≈ 0.5 GB), where
-    plan literals break the plan/py4j layer.  ``"literal"`` inlines it
-    (small k only).  Cell assignments, probes, and cosines are
-    bit-identical between the modes (same left folds).
+    The k×dim matrix stays cluster-resident end-to-end: it is built and
+    refined as a DataFrame, and both the corpus assignment and the query
+    probing attach it as a 1-row broadcast — the shape that survives
+    k=65k×dim=1k (≈ 0.5 GB), where plan literals break the plan/py4j
+    layer.
 
     ``scorer`` — ``"auto"`` (default) resolves by ``n_centroids``: the
     hash-exact ``"fold"`` below 1024 cells (gate/oracle scale), the
@@ -1068,9 +981,8 @@ def ivf_topk(
     ``"fold"`` explicitly for hash-pinned comparisons.
     """
     scorer = _resolve_scorer(scorer, n_centroids, "ivf_topk")
-    cents = _centroids_for(
+    cents = choose_centroid_frame(
         corpus,
-        centroids_as,
         id_col=id_col,
         vec_col=vec_col,
         n_centroids=n_centroids,
@@ -1091,74 +1003,37 @@ def ivf_topk(
         ).select(
             F.col("_id").alias("_qid"), F.col("_v").alias("_qv"), "_cell"
         )
-        scored = c.join(F.broadcast(q), "_cell").select(
-            F.col("_qid").alias(query_id_col),
-            F.col("_cid").alias(id_col),
-            dot(F.col("_qv"), F.col("_cv")).alias("cos"),
-        ).dropDuplicates([query_id_col, id_col])
-        w = Window.partitionBy(query_id_col).orderBy(F.desc("cos"), F.asc(id_col))
-        return scored.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-
-    # Centroids are unit vectors, so argmax(dot) == argmax(cosine): no
-    # per-row normalization needed for cell assignment/probing.
-    if isinstance(cents, DataFrame):
-        # eager 1-row checkpoint: referenced by BOTH the corpus-assignment
-        # and query-probe sides — without it the k×dim aggregation would
-        # execute twice and ride both plans as an Exchange
-        cmat = _matrix_frame(cents).transform(durable_checkpoint)
-
-        def with_scores(df: DataFrame, id_expr, id_alias: str, v_alias: str) -> DataFrame:
-            # cast aliased to an attribute BEFORE the fold captures it — a
-            # captured cast re-materializes the array once per cell
-            v = F.col(vec_col).cast("array<double>")
-            return (
-                df.crossJoin(F.broadcast(cmat))
-                .select(id_expr.alias(id_alias), v.alias(v_alias), "_cm")
-                .select(
-                    id_alias,
-                    v_alias,
-                    F.transform(
-                        F.col("_cm"),
-                        lambda cv: F.aggregate(
-                            F.zip_with(F.col(v_alias), cv, lambda x, y: x * y),
-                            F.lit(0.0),
-                            lambda a, x: a + x,
-                        ),
-                    ).alias("_s"),
-                )
-            )
-
     else:
-
-        def with_scores(df: DataFrame, id_expr, id_alias: str, v_alias: str) -> DataFrame:
-            v = F.col(vec_col).cast("array<double>")
-            return df.select(id_expr.alias(id_alias), v.alias(v_alias)).select(
-                id_alias,
-                v_alias,
-                _cell_scores_col(F.col(v_alias), cents).alias("_s"),
-            )
-
-    c = with_scores(corpus, F.col(id_col), "_cid", "_cv")
-    # Separate select so `_s` is computed once, not inlined per reference.
-    c = c.select(
-        "_cid",
-        unit(F.col("_cv")).alias("_cv"),
-        F.array_position(F.col("_s"), F.array_max(F.col("_s"))).alias("_cell"),
-    )
-
-    q = with_scores(queries, F.col(query_id_col), "_qid", "_qv")
-    # top-nprobe cells per query: sort (−score, cell-index) structs, slice.
-    ranked = F.array_sort(
-        F.zip_with(
-            F.col("_s"),
-            F.sequence(F.lit(1), F.size(F.col("_s"))),
-            lambda s, i: F.struct((-s).alias("neg"), i.alias("cell")),
+        # Centroids are unit vectors, so argmax(dot) == argmax(cosine): no
+        # per-row normalization needed for cell assignment/probing.  Eager
+        # 1-row checkpoint: referenced by BOTH the corpus-assignment and
+        # query-probe sides — without it the k×dim aggregation would
+        # execute twice and ride both plans as an Exchange.
+        cmat = _matrix_frame(cents).transform(durable_checkpoint)
+        c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, "_cid", "_cv")
+        # Separate select so `_s` is computed once, not inlined per reference.
+        c = c.select(
+            "_cid",
+            unit(F.col("_cv")).alias("_cv"),
+            F.array_position(F.col("_s"), F.array_max(F.col("_s"))).alias("_cell"),
         )
-    )
-    probes = F.transform(F.slice(ranked, 1, nprobe), lambda st: st["cell"].cast("long"))
-    q = q.select("_qid", unit(F.col("_qv")).alias("_qv"), F.explode(probes).alias("_cell"))
+        q = _with_cell_scores(
+            queries, cmat, F.col(query_id_col), vec_col, "_qid", "_qv"
+        )
+        # top-nprobe cells per query: sort (−score, cell-index) structs, slice.
+        ranked = F.array_sort(
+            F.zip_with(
+                F.col("_s"),
+                F.sequence(F.lit(1), F.size(F.col("_s"))),
+                lambda s, i: F.struct((-s).alias("neg"), i.alias("cell")),
+            )
+        )
+        probes = F.transform(
+            F.slice(ranked, 1, nprobe), lambda st: st["cell"].cast("long")
+        )
+        q = q.select(
+            "_qid", unit(F.col("_qv")).alias("_qv"), F.explode(probes).alias("_cell")
+        )
 
     scored = c.join(F.broadcast(q), "_cell").select(
         F.col("_qid").alias(query_id_col),

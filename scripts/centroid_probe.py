@@ -1,20 +1,19 @@
 #!/usr/bin/env python
-"""Centroid-materialization probe: literal plan vs 1-row broadcast.
+"""Centroid-assignment probe: plan size and wall time of ``topic_assign``.
 
-Verdict-r10 item: at production IVF shapes (k=65k, dim=1k ~ 0.5 GB) the
-literal-centroid path inlines the k x dim matrix into the SQL plan and the
-plan/py4j layer breaks.  ``centroids_as="broadcast_join"`` keeps the matrix
-cluster-resident.  This probe measures BOTH modes at a shape big enough to
-show the cliff direction (default k=4096, dim=512 = 16 MB of doubles as
-plan literals) and prints:
+The k×dim centroid matrix reaches the executors as a checkpointed 1-row
+broadcast, so the optimized plan stays the same size at any k; the score
+computation is either the interpreted JVM fold or the Arrow/numpy matmul.
+This probe measures both scorers at a production-like shape (default
+k=4096, dim=512) and prints:
 
-  * driver-side plan-build wall time (includes the py4j literal transfer)
-  * optimized-plan string size (the literal mode carries the matrix inline)
+  * driver-side plan-build wall time (centroid selection + matrix build)
+  * optimized-plan string size
   * end-to-end execution wall time of the cell assignment
 
 Usage: python scripts/centroid_probe.py [k] [dim] [modes]
-  modes: comma list of broadcast_join,literal (default both) — at big
-  shapes run broadcast_join alone; the literal plan-build is the cliff.
+  modes: comma list of scorers, fold,arrow (default both) — fold is the
+  interpreted JVM fold, arrow the numpy matmul.
 """
 
 from __future__ import annotations
@@ -29,11 +28,7 @@ sys.path.insert(0, ".")
 
 K = int(sys.argv[1]) if len(sys.argv) > 1 else 4096
 DIM = int(sys.argv[2]) if len(sys.argv) > 2 else 512
-MODES = (
-    tuple(sys.argv[3].split(",")) if len(sys.argv) > 3 else ("broadcast_join", "literal")
-)
-# modes: broadcast_join | literal | arrow (broadcast_join centroids +
-# Arrow/numpy matmul scorer)
+MODES = tuple(sys.argv[3].split(",")) if len(sys.argv) > 3 else ("fold", "arrow")
 N_ROWS = max(2 * K, 16384)
 
 
@@ -69,15 +64,7 @@ def main() -> None:
     results = {}
     for mode in MODES:
         t0 = time.perf_counter()
-        if mode == "arrow":
-            out = topic_assign(
-                emb, n_topics=K, strategy="first",
-                centroids_as="broadcast_join", scorer="arrow",
-            )
-        else:
-            out = topic_assign(
-                emb, n_topics=K, strategy="first", centroids_as=mode
-            )
+        out = topic_assign(emb, n_topics=K, strategy="first", scorer=mode)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         t_build = time.perf_counter() - t0
         t1 = time.perf_counter()
@@ -90,12 +77,9 @@ def main() -> None:
             flush=True,
         )
 
-    if "broadcast_join" in results and "literal" in results:
-        bj, lit = results["broadcast_join"], results["literal"]
-        print(
-            f"literal/broadcast ratios: plan_build={lit[0] / max(bj[0], 1e-9):.1f}x "
-            f"plan_chars={lit[1] / max(bj[1], 1):.1f}x exec={lit[2] / max(bj[2], 1e-9):.1f}x"
-        )
+    if {"fold", "arrow"} <= results.keys():
+        fold, arrow = results["fold"], results["arrow"]
+        print(f"fold/arrow exec ratio: {fold[2] / max(arrow[2], 1e-9):.1f}x")
     spark.stop()
 
 

@@ -1243,17 +1243,11 @@ def test_semantic_dedup_pairs_plan_is_keyed(spark, emb):
     )
     assert "CartesianProduct" not in plan
     # the only sanctioned nested-loop joins are the 1-row centroid-matrix
-    # broadcasts (centroids_as="broadcast_join" default) — one per side of
-    # the cell self-join, same single checkpointed matrix; the pairwise
-    # stage itself must stay a keyed equi-join
+    # broadcasts — one per side of the cell self-join, same single
+    # checkpointed matrix; the pairwise stage itself must stay a keyed
+    # equi-join
     assert plan.count("BroadcastNestedLoopJoin") <= 2
     assert "BatchEvalPython" not in plan
-    # and the literal mode keeps the zero-nested-loop shape
-    lit_plan = (
-        semantic_dedup_pairs(_planted(emb), threshold=0.95, centroids_as="literal")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" not in lit_plan
 
 
 def test_semantic_dedup_max_cell_size_caps_pairwise(spark, emb):
@@ -1370,16 +1364,56 @@ def test_topic_assign_covers_corpus_no_shuffle(spark, emb):
     # all (the only Exchange is the 1-row matrix BroadcastExchange)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == plan.count("BroadcastExchange")
-    # literal mode keeps the historical zero-Exchange shape
-    lit = topic_assign(emb, n_topics=8, strategy="first", centroids_as="literal")
-    lit_plan = lit._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in lit_plan
-    # both modes agree row-for-row
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, lit.collect()))
+    # labels match a plain-Python reference: argmax of each vector's dot
+    # against the unit 8 lowest-id vectors, first maximum wins (cells are
+    # 1-based).  Dots and norms are sequential left folds, the fold
+    # scorer's summation order, so near-tied cells resolve identically.
+    import math
+
+    def dot(a, b):
+        s = 0.0
+        for x, y in zip(a, b):
+            s += x * y
+        return s
+
+    rows = sorted(emb.select("vec_id", "embedding").collect())
+    cents = [[x / math.sqrt(dot(v, v)) for x in v] for v in (r.embedding for r in rows[:8])]
+    want = {}
+    for r in rows:
+        s = [dot(r.embedding, c) for c in cents]
+        want[r.vec_id] = s.index(max(s)) + 1
+    assert dict(map(tuple, out.collect())) == want
 
     # kmeans strategy stays a valid assignment over the same corpus
     km = topic_assign(emb, n_topics=8, strategy="kmeans", kmeans_iters=2)
     assert km.count() == emb.count()
+
+
+def test_centroid_init_skips_null_vectors(spark):
+    """A NULL embedding is never chosen as a centroid: the n chosen rows
+    are the n lowest-id NON-NULL vectors, cells stay contiguous 1..n, and
+    each chosen row is labelled with its own cell."""
+    import numpy as np
+
+    from dftly_spark.ops import choose_centroid_frame, kmeans_centroids, topic_assign
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(30, 4))
+    df = spark.createDataFrame(
+        [(i, None if i == 1 else [float(x) for x in vecs[i]]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    out = dict(map(tuple, topic_assign(df, n_topics=3, strategy="first").collect()))
+    assert {t for t in out.values() if t is not None} == {1, 2, 3}
+    assert (out[0], out[2], out[3]) == (1, 2, 3)
+    assert out[1] is None
+    for strategy in ("first", "sample"):
+        cells = choose_centroid_frame(df, n_centroids=29, strategy=strategy)
+        assert {r._cell for r in cells.select("_cell").distinct().collect()} == set(
+            range(1, 30)
+        )
+    cents = kmeans_centroids(df, n_centroids=3, iters=1, init_strategy="first")
+    assert len(cents) == 3 and all(len(c) == 4 for c in cents)
 
 
 def test_gopher_rules_verdicts(spark):
@@ -1507,8 +1541,9 @@ def test_doc_tokens_rejects_missing_column(spark, docs):
 def test_kmeans_fit_collects_once(spark, monkeypatch):
     """Round-4 contract: Lloyd refinement is DataFrame-resident — the
     centroid matrix rides py4j exactly once (the final collect), never per
-    iteration.  With an explicit init there is no init-time collect, so
-    total collect() calls must be 1 regardless of iters."""
+    iteration.  The init is never collected either (an explicit init is
+    shipped once; otherwise it is built cluster-side), so total collect()
+    calls must be 1 regardless of iters."""
     # pyspark 4: the session builds classic.DataFrame instances whose
     # collect overrides the pyspark.sql.DataFrame abstract — patch the
     # concrete class
@@ -1536,6 +1571,13 @@ def test_kmeans_fit_collects_once(spark, monkeypatch):
     # unit length
     for c in cents:
         assert abs(sum(x * x for x in c) - 1.0) < 1e-9
+    # without an explicit init the init is built cluster-side too: still
+    # exactly one collect, the final read
+    for strategy in ("first", "sample"):
+        calls["n"] = 0
+        cents = kmeans_centroids(df, n_centroids=3, iters=2, init_strategy=strategy)
+        assert calls["n"] == 1
+        assert len(cents) == 3 and all(len(c) == 3 for c in cents)
 
 
 def test_dsir_weights_separates_target_like_docs(spark):

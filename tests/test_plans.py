@@ -121,9 +121,9 @@ def test_all_contract_queries_plan_invariants(spark):
         "x54_sparse_cosine",  # 1-row corpus-size (N) broadcast in tf_idf
         "x61_distinctive_terms",  # 1-row corpus-total broadcast
         "x62_centroid_outliers",  # 1-row centroid broadcast
-        # 1-row centroid-MATRIX broadcast (centroids_as="broadcast_join"):
-        # the k×dim matrix rides a checkpointed 1-row frame instead of plan
-        # literals — the shape that survives k=65k×dim=1k
+        # 1-row centroid-MATRIX broadcast: the k×dim matrix rides a
+        # checkpointed 1-row frame instead of plan literals — the shape
+        # that survives k=65k×dim=1k
         "x12_ivf_topk",
         "x46_semantic_dedup",
         "x50_topic_mix",
@@ -221,38 +221,37 @@ def test_no_unpartitioned_window_outside_allowlist(spark):
 
 
 def test_centroid_broadcast_join_mode_has_no_plan_literals(spark):
-    """centroids_as="broadcast_join" (the default) must keep the k×dim
-    centroid matrix OUT of the plan: no literal array floats, the matrix
-    attached as a broadcast of a 1-row checkpointed frame.  The literal
-    mode is the control — its plan string carries the matrix inline and
-    grows with k×dim (the 0.5 GB cliff at k=65k×dim=1k)."""
+    """The k×dim centroid matrix stays OUT of the plan: it is attached as
+    a broadcast of a checkpointed 1-row frame, so the optimized plan does
+    not grow with k (plan literals would grow with k×dim — the 0.5 GB
+    cliff at k=65k×dim=1k)."""
+    import re
+
     from dftly_spark.ops.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    bc = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=2, strategy="first",
-                  centroids_as="broadcast_join")
-    lit = ivf_topk(emb, q, k=5, n_centroids=8, nprobe=2, strategy="first",
-                   centroids_as="literal")
-    p_bc, p_lit = _optimized(bc), _optimized(lit)
-    # the literal plan inlines the 8×dim matrix: hundreds of float literals
-    assert p_lit.count("0.0") + p_lit.count(".") > p_bc.count(".") * 2
-    assert len(p_lit) > 2 * len(p_bc)
-    # broadcast mode: matrix arrives via a scan of the checkpointed 1-row
-    # frame, never as an inline [[...]] literal array-of-arrays
-    assert "ExistingRDD" in p_bc or "LogicalRDD" in p_bc or "Scan" in p_bc
-    # and no SHUFFLE was added relative to literal mode (the matrix agg ran
-    # at build time, checkpointed; the two extra BroadcastExchanges are the
-    # 1-row matrix attach itself)
+
+    def build(k):
+        return ivf_topk(emb, q, k=5, n_centroids=k, nprobe=2, strategy="first")
+
+    small, big = build(8), build(32)
+    # attribute ids (#NNN) grow between builds; strip them before measuring
+    p8, p32 = (re.sub(r"#\d+L?", "#", _optimized(df)) for df in (small, big))
+    assert len(p32) <= len(p8)
+    # the matrix arrives via a scan of the checkpointed 1-row frame
+    assert "ExistingRDD" in p8 or "LogicalRDD" in p8 or "Scan" in p8
+
+    # and no shuffle grows with k either (the matrix agg ran at build
+    # time, checkpointed; the BroadcastExchanges are the 1-row attach)
     def shuffles(df):
         p = _plan(df)
         return p.count("Exchange") - p.count("BroadcastExchange")
 
-    assert shuffles(bc) <= shuffles(lit)
-    # results identical between the modes
-    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, lit.collect()))
+    assert shuffles(big) == shuffles(small)
+    assert big.count() > 0
 
 
 def test_tpch_pack_join_strategies(spark):
