@@ -51,7 +51,7 @@ def _x02(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     # tokens_col reads the token column _docs_tok adds (no second split)
     return ngram_jaccard_pairs(
-        _docs_tok(spark, sf_dir),
+        _docs_tok(spark, sf_dir, fan_out=True),
         "doc_id",
         "text",
         n=3,
@@ -243,7 +243,7 @@ def _x07(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _prep(spark)
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", fan_out=True)
     t = F.col("text")
     return docs.select(
         F.col("doc_id"),
@@ -313,7 +313,7 @@ def _x08(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import doc_fingerprints
 
     _prep(spark)
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", fan_out=True)
     fp = doc_fingerprints(docs, "doc_id", "text", n=3, k=8, shingle_hash="md5_60")
     return fp.select(
         "doc_id", F.posexplode("fingerprint").alias("slot", "shingle_hash")
@@ -520,7 +520,7 @@ def _x56(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops.similarity import ivf_topk
 
     _prep(spark)
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = _t(spark, sf_dir, "embeddings", fan_out=True)
     queries_df = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -968,7 +968,7 @@ def _x23(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import json_extract_fields, json_parse_typed
 
     _prep(spark)
-    ev = _t(spark, sf_dir, "events")
+    ev = _t(spark, sf_dir, "events", fan_out=True)
     ex = json_extract_fields(ev, "props", {"k_path": ("$.k", "bigint")})
     typed = json_parse_typed(ex, "props", "k BIGINT")
     return (
@@ -1167,7 +1167,7 @@ def _x28(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import chunk_text
 
     _prep(spark)
-    docs = _t(spark, sf_dir, "documents")
+    docs = _t(spark, sf_dir, "documents", fan_out=True)
     return chunk_text(docs, "doc_id", "text", chunk_tokens=64, overlap=16)
 
 

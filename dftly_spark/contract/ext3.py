@@ -33,7 +33,7 @@ def _x51(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops.textops import gopher_rules
 
     _prep(spark)
-    return gopher_rules(_t(spark, sf_dir, "documents"), min_words=20)
+    return gopher_rules(_t(spark, sf_dir, "documents", fan_out=True), min_words=20)
 
 
 _q(

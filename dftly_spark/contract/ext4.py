@@ -956,7 +956,7 @@ def _q28(spark: SparkSession, sf_dir: str) -> DataFrame:
     %Y equivalence (zero-padded 4-digit year), %::z via offset arithmetic.
     """
     _prep(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders", fan_out=True)
     k = F.col("o_orderkey")
     d = F.to_date("o_orderdate")  # testdata dates load as timestamp_ntz
     ts = F.timestamp_seconds(
@@ -1080,7 +1080,7 @@ def _q30(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the engine's strptime surface; DuckDB replays %a/%A natively
     and the spliced century via the SAME RE2-safe regexp_replace."""
     _prep(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders", fan_out=True)
     k = F.col("o_orderkey")
     d = F.to_date("o_orderdate")
     yyyy = F.date_format(d, "yyyy")

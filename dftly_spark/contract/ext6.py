@@ -877,7 +877,7 @@ def _x139(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prep(spark)
     return dedup_substring_spans(
-        _docs_tok(spark, sf_dir),
+        _docs_tok(spark, sf_dir, fan_out=True),
         "doc_id",
         "text",
         min_len=20,

@@ -139,7 +139,7 @@ def _x147(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/dftly/nodes/str.py:593-649 (chrono accepts these
     codes natively)."""
     _prep(spark)
-    o = _t(spark, sf_dir, "orders")
+    o = _t(spark, sf_dir, "orders", fan_out=True)
     k = F.col("o_orderkey")
     d = F.to_date("o_orderdate")
     pad_day = F.lpad(F.date_format(d, "d"), 2, " ")

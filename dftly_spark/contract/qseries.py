@@ -125,7 +125,7 @@ _Q07_SPEC = {
 
 _q(
     "q07_casts",
-    _spec_query("lineitem", _Q07_SPEC),
+    _spec_query("lineitem", _Q07_SPEC, fan_out=True),
     _spec_oracle("lineitem", _Q07_SPEC),
 )
 
@@ -156,7 +156,7 @@ _Q09_SPEC = {
 
 _q(
     "q09_duration_units",
-    _spec_query("lineitem", _Q09_SPEC),
+    _spec_query("lineitem", _Q09_SPEC, fan_out=True),
     _spec_oracle("lineitem", _Q09_SPEC),
 )
 
@@ -251,7 +251,7 @@ _q(
 
 def _q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
-    orders = _t(spark, sf_dir, "orders").withColumns(
+    orders = _t(spark, sf_dir, "orders", fan_out=True).withColumns(
         {
             "ds": F.date_format("o_orderdate", "yyyy-MM-dd"),
             "dts": F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss"),
@@ -502,7 +502,7 @@ def _q25(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parsed back through the engine's %G/%V/%u week plan (chrono.py) —
     # round-trips to o_orderdate iff the ISO arithmetic is exact.
     _prep(spark)
-    orders = _t(spark, sf_dir, "orders").withColumn(
+    orders = _t(spark, sf_dir, "orders", fan_out=True).withColumn(
         "iso",
         F.concat(
             F.expr("extract(YEAROFWEEK FROM o_orderdate)").cast("string"),

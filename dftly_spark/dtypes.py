@@ -46,10 +46,6 @@ def is_float(t: str) -> bool:
     return t in _FLOATS
 
 
-def is_numeric(t: str) -> bool:
-    return t in _INTS or t in _FLOATS
-
-
 # ---------------------------------------------------------------------------
 # Name → tag table (the set of nameable cast targets, types.py:7-43).
 # ---------------------------------------------------------------------------

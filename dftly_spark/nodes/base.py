@@ -390,6 +390,3 @@ class Column(Terminal):
             return time_to_micros(F.col(self.name))
         return F.col(self.name)
 
-
-def lower_all(nodes, ctx: LoweringContext) -> list[SparkColumn]:
-    return [n.to_column(ctx) for n in nodes]

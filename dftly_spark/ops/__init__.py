@@ -39,7 +39,6 @@ from .textops import (
     dedup_substrings_char,
     contamination_spans,
     decontaminate_substrings,
-    decontaminate_substrings_char,
     repetition_signals,
     language_id,
     normalize_text,
@@ -230,7 +229,7 @@ __all__ = [
     "bm25_topk", "tf_idf_vectors", "sparse_cosine_pairs", "rrf_fuse", "cap_per_group", "rollup_stats", "cube_stats",
     "dup_ngram_fraction", "remove_dup_ngram_spans",
     "dup_substring_spans", "dedup_substring_spans", "dedup_substrings_char",
-    "contamination_spans", "decontaminate_substrings", "decontaminate_substrings_char",
+    "contamination_spans", "decontaminate_substrings",
     "sessionize", "sessionize_stream", "sessionize_stream_tws", "funnel", "cohort_retention", "debounce", "debounce_stream", "resample_ffill",
     "mixture_sample", "latest_changes", "merge_upsert", "snapshot_diff",
     "semantic_dedup", "semantic_dedup_pairs", "schema_drift", "dedup_survivors", "scd2_snapshot", "session_stats",

@@ -587,6 +587,29 @@ def _cents_numpy(cents: DataFrame) -> "object":
     return np.asarray(_collect_centroid_lists(cents), dtype=np.float64)
 
 
+def _arrow_rows(vecs, dim: int):
+    """One pandas batch of vectors → ``(V, unit_vecs, null)``: the
+    float64 matrix with NULL vectors as NaN rows, each row's unit vector
+    as the fold path's ``unit()`` leaves it (``None`` for a NULL or
+    zero-norm vector), and the NULL-vector mask."""
+    import numpy as np
+
+    null = vecs.isna().to_numpy()
+    V = np.full((len(vecs), dim), np.nan)
+    if not null.all():
+        V[~null] = np.asarray(
+            [np.asarray(x, dtype=np.float64) for x in vecs[~null]]
+        )
+    n = np.sqrt((V * V).sum(axis=1))
+    # zero-norm rows: the fold path's unit() divides by 0 and yields NULLs
+    # (downstream cosines go NULL and the row drops out of
+    # thresholds/rankings) — emit a null vector so both scorers exclude
+    # the row the same way
+    none = null | (n == 0.0)
+    U = V / np.where(none, 1.0, n)[:, None]
+    return V, [None if z else u for z, u in zip(none, U)], null
+
+
 def _assign_cells_arrow(
     corpus: DataFrame, cents, *, id_col: str, vec_col: str
 ) -> DataFrame:
@@ -605,8 +628,9 @@ def _assign_cells_arrow(
     hash-pinned gate queries stay on the fold.  The returned ``_v`` is
     ALSO numpy-normalized (pairwise-summed norm), so downstream cosines
     computed from it carry the same last-ulp caveat; zero-norm vectors
-    yield a NULL ``_v`` to match the fold path's NULL-element unit()."""
-    import numpy as np
+    yield a NULL ``_v`` to match the fold path's NULL-element unit(), and
+    a NULL vector yields a NULL ``_v`` and a NULL ``_cell``, as the fold's
+    all-NULL score array does."""
     import pandas as pd
 
     C = _cents_numpy(cents)
@@ -619,26 +643,11 @@ def _assign_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            S = V @ Cm.T
-            cell = S.argmax(axis=1) + 1
-            n = np.sqrt((V * V).sum(axis=1))
-            zero = n == 0.0
-            n[zero] = 1.0
-            U = V / n[:, None]
-            # zero-norm rows: the fold path's unit() divides by 0 and
-            # yields NULLs (downstream cosines go NULL and the row drops
-            # out of thresholds/rankings) — emit a null vector so both
-            # scorers exclude the row the same way
-            vecs = [None if z else u for z, u in zip(zero, U)]
+            V, vecs, null = _arrow_rows(pdf[vec_col], Cm.shape[1])
+            cell = pd.array((V @ Cm.T).argmax(axis=1) + 1, dtype="Int64")
+            cell[null] = pd.NA
             yield pd.DataFrame(
-                {
-                    "_id": pdf[id_col].to_numpy(),
-                    "_v": vecs,
-                    "_cell": cell.astype("int64"),
-                }
+                {"_id": pdf[id_col].to_numpy(), "_v": vecs, "_cell": cell}
             )
 
     return corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
@@ -650,7 +659,10 @@ def _probe_cells_arrow(
     """Exploded ``(_id, _v, _cell)`` rows — each query's ``nprobe`` nearest
     cells — via the same Arrow/numpy matmul as :func:`_assign_cells_arrow`.
     Tie rule matches the fold path's ``(-score, cell)`` struct sort: a
-    STABLE descending-score argsort keeps the lower cell first on ties."""
+    STABLE descending-score argsort keeps the lower cell first on ties.
+    A NULL query vector scores NaN against every cell, which the argsort
+    puts last in cell order: it probes cells ``1..nprobe`` with a NULL
+    ``_v``, as the fold's sort of all-NULL scores does."""
     import numpy as np
     import pandas as pd
 
@@ -665,27 +677,12 @@ def _probe_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.asarray(
-                [np.asarray(x, dtype=np.float64) for x in pdf[vec_col]]
-            )
-            S = V @ Cm.T
-            top = np.argsort(-S, axis=1, kind="stable")[:, :np_probe] + 1
-            n = np.sqrt((V * V).sum(axis=1))
-            zero = n == 0.0
-            n[zero] = 1.0
-            U = V / n[:, None]
-            ids = pdf[id_col].to_numpy()
-            # zero-norm rows → null vector, matching the fold path (see
-            # _assign_cells_arrow)
-            vecs = [
-                None if z else u
-                for z, u in zip(zero, U)
-                for _ in range(np_probe)
-            ]
+            V, vecs, _ = _arrow_rows(pdf[vec_col], Cm.shape[1])
+            top = np.argsort(-(V @ Cm.T), axis=1, kind="stable")[:, :np_probe] + 1
             yield pd.DataFrame(
                 {
-                    "_id": np.repeat(ids, np_probe),
-                    "_v": vecs,
+                    "_id": np.repeat(pdf[id_col].to_numpy(), np_probe),
+                    "_v": [v for v in vecs for _ in range(np_probe)],
                     "_cell": top.reshape(-1).astype("int64"),
                 }
             )

@@ -759,31 +759,6 @@ def _rebuild_without_char_spans(
     )
 
 
-def decontaminate_substrings_char(
-    df,
-    probe,
-    id_col: str,
-    text_col: str,
-    *,
-    probe_id_col: str | None = None,
-    probe_text_col: str | None = None,
-    min_len: int = 20,
-    tokens_col: str | None = None,
-    probe_tokens_col: str | None = None,
-):
-    """Cut every probe-shared run >= ``min_len`` tokens out of the
-    ORIGINAL ``df`` text (raw-byte decontamination) — the cross-corpus
-    twin of :func:`dedup_substrings_char`; same output shape."""
-    spans = contamination_spans(
-        df, probe, id_col, text_col,
-        probe_id_col=probe_id_col, probe_text_col=probe_text_col,
-        min_len=min_len,
-        tokens_col=tokens_col, probe_tokens_col=probe_tokens_col,
-        offsets="char",
-    )
-    return _rebuild_without_char_spans(df, spans, id_col, text_col, tokens_col)
-
-
 def contamination_spans(
     df,
     probe,

@@ -1292,7 +1292,9 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     """scorer="arrow" (Arrow/numpy matmul) must agree with the fold path
     wherever argmax is not knife-edged: on well-separated planted clusters
     topic assignments and ivf_topk results are identical, including the
-    first-max/lowest-cell tie convention; unknown scorers reject."""
+    first-max/lowest-cell tie convention, a NULL vector (no cell; as an
+    ivf_topk query it probes cells 1..nprobe and ranks its NULL cosines
+    by id), a zero vector and a duplicated id; unknown scorers reject."""
     import random
 
     from dftly_spark.ops import ivf_topk, semantic_dedup_pairs, topic_assign
@@ -1314,16 +1316,20 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     # a zero-norm vector: fold's unit() yields NULL elements, arrow emits
     # a NULL vector — both must exclude it from cosine thresholds/ranks
     rows.append((999, [0.0] * dim))
+    rows.append((900, None))  # NULL vector
+    rows.append((100, rows[kc][1]))  # duplicated id, same vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     fold = topic_assign(df, n_topics=kc, strategy="first")
     arrow = topic_assign(df, n_topics=kc, strategy="first", scorer="arrow")
-    assert sorted(map(tuple, arrow.collect())) == sorted(map(tuple, fold.collect()))
+    fold_rows = sorted(map(tuple, fold.collect()))
+    assert sorted(map(tuple, arrow.collect())) == fold_rows
+    assert (900, None) in fold_rows
     # arrow plan really routes through Arrow (one python eval node)
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
 
-    q = df.where(F.col("vec_id") < 4).select(
+    q = df.where((F.col("vec_id") < 4) | (F.col("vec_id") >= 900)).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     kw = dict(k=5, n_centroids=kc, nprobe=2, strategy="first")
@@ -1336,6 +1342,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
         for r in ivf_topk(df, q, scorer="arrow", **kw).collect()
     )
     assert got_a == got_f
+    assert sum(r[0] == 900 for r in got_f) == 5
 
     sd_f = sorted(
         (r["id_l"], r["id_r"]) for r in

@@ -274,3 +274,79 @@ def test_tpch_pack_join_strategies(spark):
     assert "LeftAnti" in plan("x106_dormant_accounts")
     p121 = plan("x121_top_supplier")
     assert "CartesianProduct" not in p121
+
+
+#: Contract queries whose builders fan out their scan (``_t(...,
+#: fan_out=True)``), with the table fanned.
+FANNED_SCANS = {
+    "q07_casts": "lineitem",
+    "q09_duration_units": "lineitem",
+    "q15_strptime": "orders",
+    "q25_iso_week": "orders",
+    "q28_chrono_residue": "orders",
+    "q30_chrono_midformat": "orders",
+    "x02_ngram_jaccard_pairs": "documents",
+    "x07_text_analysis": "documents",
+    "x08_fingerprint": "documents",
+    "x23_json_extract": "events",
+    "x28_chunk_text": "documents",
+    "x51_gopher_rules": "documents",
+    "x56_ivf_kmeans_topk": "embeddings",
+    "x139_dedup_substrings": "documents",
+    "x147_chrono_locale": "orders",
+}
+
+
+def _repartitioned_scan_keys(plan) -> set[str]:
+    """Key names of every hash repartition that sits directly over a scan
+    (through Projects and Filters only) in an optimized logical plan."""
+    import re
+
+    keys = set()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        stack.extend(node.children().apply(i) for i in range(node.children().size()))
+        if node.nodeName() != "RepartitionByExpression":
+            continue
+        below = node.child()
+        while below.nodeName() in ("Project", "Filter"):
+            below = below.child()
+        if below.nodeName() == "LogicalRelation":
+            exprs = node.partitionExpressions()
+            keys |= {re.sub(r"#\d+L?$", "", exprs.apply(i).toString())
+                     for i in range(exprs.size())}
+    return keys
+
+
+def test_scan_fan_out_placement(spark, monkeypatch):
+    """Fan-out is asked for at the scan by the builders that earn it: each
+    one hash-repartitions that table's scan on its key, and no other
+    builder fans out (q01 stands for the plain spec queries; x03, x14,
+    x154 and x107 measured no win from it).  Builders that checkpoint an
+    intermediate frame hide the scan from the final plan, so the frames
+    ``_fan_out_scan`` returns are checked as well as the final one."""
+    import __spark_entry__ as entry
+    from dftly_spark.contract import common
+
+    fanned = []
+    fan_out_scan = common._fan_out_scan
+
+    def recording(df, name):
+        fanned.append(fan_out_scan(df, name))
+        return fanned[-1]
+
+    monkeypatch.setattr(common, "_fan_out_scan", recording)
+    queries = entry.queries()
+    plain = ["q01_project_arith", "x03_minhash_lsh_pairs",
+             "x14_corpus_clean_pipeline", "x154_pair_quality",
+             "x107_triangle_count"]
+    for name in [*FANNED_SCANS, *plain]:
+        fanned.clear()
+        frames = [queries[name](spark, SF_DIR), *fanned]
+        got = set().union(*(
+            _repartitioned_scan_keys(df._jdf.queryExecution().optimizedPlan())
+            for df in frames
+        ))
+        want = {common._FANOUT_KEYS[FANNED_SCANS[name]]} if name in FANNED_SCANS else set()
+        assert got == want, f"{name}: fanned on {got}, want {want}"
