@@ -1200,11 +1200,13 @@ def _x121(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
+    from dftly_spark.ops.scale import durable_checkpoint
     from dftly_spark.sqlgen import exact_quant
 
-    revenue = (
-        li.groupBy("l_suppkey").agg(F.sum(exact_quant(_rev_col(li))).alias("_rc"))
-    ).localCheckpoint(eager=False)
+    revenue = durable_checkpoint(
+        li.groupBy("l_suppkey").agg(F.sum(exact_quant(_rev_col(li))).alias("_rc")),
+        eager=False,
+    )
     mx = revenue.agg(F.max("_rc").alias("_mx"))
     supp = _t(spark, sf_dir, "supplier")
     return (

@@ -71,7 +71,6 @@ from .dedup import (
     shingle_hashes,
     shingle_hashes_tokens,
     source_overlap,
-    simhash64,
     semantic_dedup,
     semantic_dedup_pairs,
     simhash_dup_pairs,
@@ -214,7 +213,7 @@ __all__ = [
     "repetition_signals",
     "exact_dedup", "word_shingles", "minhash_signature", "minhash_dup_pairs",
     "minhash_index", "minhash_join_index", "shingle_hashes", "shingle_hashes_tokens",
-    "simhash64", "simhash_dup_pairs", "ngram_jaccard_pairs", "cross_corpus_dup_pairs", "novelty_scores", "source_overlap",
+    "simhash_dup_pairs", "ngram_jaccard_pairs", "cross_corpus_dup_pairs", "novelty_scores", "source_overlap",
     "containment_pairs", "cross_corpus_embedding_pairs",
     "embedding_dup_pairs",
     "dot", "l2_norm", "cosine", "unit", "brute_force_topk", "hard_negatives", "lsh_bucket_topk", "topk_recall", "pair_quality",

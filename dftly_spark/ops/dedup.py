@@ -690,40 +690,6 @@ def containment_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(col: SparkColumn) -> SparkColumn:
-    """64-bit SimHash fingerprint of a document's whitespace tokens.
-
-    Classic bit-voting: each token hash votes ±1 per bit position; the
-    fingerprint sets bit i when the vote is positive.  One fold over the
-    tokens with an elementwise ``zip_with`` accumulator — stays in codegen.
-    """
-    hashes = F.transform(tokens(F.lower(col)), lambda t: F.xxhash64(t))
-    # Shift amounts must be Python ints in Spark, so the 64 bit positions are
-    # statically unrolled (still one codegen'd expression tree).
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-                    for i in range(64)
-                ]
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    # Bit 63 contributes the sign bit in two's complement.
-    fp = F.lit(0).cast("long")
-    for i in range(64):
-        weight = (1 << i) if i < 63 else -(1 << 63)
-        fp = fp + F.when(F.element_at(votes, i + 1) > 0, F.lit(weight).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return fp
-
-
 def simhash_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -758,9 +724,7 @@ def simhash_dup_pairs(
         raise ValueError(f"unknown token_hash {token_hash!r}")
 
     # Explode + nbits codegen'd sum-aggregates: one token-hash pass, map-side
-    # partial aggregation, nbits longs per document over the shuffle.  (The
-    # expression form `simhash64` computes the same fingerprint but runs as
-    # an interpreted higher-order fold — fine per-row, slow per-corpus.)
+    # partial aggregation, nbits longs per document over the shuffle.
     ex = df.select(
         F.col(id_col).alias("_id"),
         F.explode(doc_tokens(df, text_col, tokens_col)).alias("_t"),

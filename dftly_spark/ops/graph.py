@@ -34,6 +34,14 @@ from ..sqlgen import portable_round
 # comfortable headroom on a 1 GiB executor heap.
 _EDGES_PER_BUILD_TASK = 150_000
 
+# Peeling rounds between kcore's lineage truncations, and PageRank
+# iterations between rank-frame truncations (never reached at the default
+# 5 iterations).  kcore's rounds between checkpoints are broadcast probes
+# over a cached frame, cheap to re-derive; a checkpoint per round was the
+# super-linear term at 4× data (SCALING.md).
+_KCORE_CHECKPOINT_EVERY = 3
+_PAGERANK_CHECKPOINT_EVERY = 8
+
 # Hash buckets for the opt-in ``validate=True`` sampled assertions: the
 # checked subset is rows whose key hashes into bucket 0, ~1/32 of keys.
 _VALIDATE_BUCKETS = 32
@@ -147,10 +155,8 @@ def triangle_count(
     src: str = "src",
     dst: str = "dst",
     *,
-    partitions: int | None = None,
     assume_distinct: bool = False,
     validate: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Per-node triangle counts: ``(node, triangles)`` for an undirected graph.
 
@@ -172,20 +178,6 @@ def triangle_count(
     Counts are orientation-invariant, so any engine can replay them with
     plain id-ordered enumeration.
     """
-    # ``checkpoint_dir`` mirrors pagerank: durable checkpoint() for
-    # cluster runs (survives executor loss); otherwise durable_checkpoint
-    # honors a session-level setCheckpointDir, local only as last resort.
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return durable_checkpoint(df, eager=False)
-
     ab = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b")).where(
         F.col(src) != F.col(dst)
     )
@@ -206,7 +198,7 @@ def triangle_count(
         _validate_distinct(und, ["_u", "_v"], "assume_distinct (triangle_count)")
     if not assume_distinct:
         und = und.distinct()
-    und = _ckpt(und)
+    und = durable_checkpoint(und, eager=False)
     deg = (
         und.select(F.col("_u").alias("_n"))
         .unionByName(und.select(F.col("_v").alias("_n")))
@@ -228,12 +220,13 @@ def triangle_count(
     u_first = (F.col("_ud") < F.col("_vd")) | (
         (F.col("_ud") == F.col("_vd")) & (F.col("_u") < F.col("_v"))
     )
-    oriented = _ckpt(
+    oriented = durable_checkpoint(
         with_deg.select(
             F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
             F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
             F.when(u_first, F.col("_vd")).otherwise(F.col("_ud")).alias("_td"),
-        )
+        ),
+        eager=False,
     )
     e1 = oriented.select(
         F.col("_s").alias("_w1s"), F.col("_t").alias("_w1t"), F.col("_td").alias("_w1d")
@@ -250,24 +243,17 @@ def triangle_count(
     # heap).  The edge side is m/num_partitions rows per task — a few MB
     # of hash map — so shuffled-hash keeps peak memory flat regardless of
     # wedge count.
-    # ``partitions``: the forced-hash build's per-task budget is
+    # Partition count: the forced-hash build's per-task budget is
     # m/partitions and it CANNOT spill — size partitions so an edge
     # slice fits executor memory (measured: 19M edges over 32 partitions
     # fails the build on an 8 GiB heap; over 128 it runs linear —
-    # SCALING.md).  None = DERIVED from the edge count: one count on the
+    # SCALING.md).  Derived from the edge count: one count on the
     # already-checkpointed oriented frame (materializes the checkpoint the
     # joins need anyway, so the extra job is a cache scan), targeting
     # ``_EDGES_PER_BUILD_TASK`` edge rows per hash build — never below the
     # session's shuffle.partitions, so small graphs keep full parallelism.
-    if partitions is None:
-        m = oriented.count()
-        try:
-            sess = int(
-                oriented.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            sess = 200
-        partitions = max(sess, -(-m // _EDGES_PER_BUILD_TASK))
+    sess = int(oriented.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    partitions = max(sess, -(-oriented.count() // _EDGES_PER_BUILD_TASK))
     e2 = e2.repartition(partitions, "_w2s")
     # rank predicate in primitive-comparison form — see u_first above; this
     # is the hot expression of the whole operator (evaluated once per
@@ -302,11 +288,8 @@ def kcore(
     dst: str = "dst",
     *,
     max_rounds: int = 8,
-    checkpoint_every: int = 3,
-    broadcast_survivors: bool = True,
     assume_distinct: bool = False,
     validate: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Nodes of the ``k``-core after ``max_rounds`` of peeling:
     ``(node, degree, converged)`` within the surviving subgraph.
@@ -325,21 +308,10 @@ def kcore(
     Scale shape: the symmetric edge frame is the only data-sized object;
     per round, degrees come from one map-side-combined count on ``_src``
     and survivors from one left-semi hash join per endpoint against the
-    (≤ nodes)-sized survivor list.  Lineage is truncated per round
-    (durable ``checkpoint_dir`` for clusters, ``localCheckpoint``
-    otherwise) so the iterated plan never re-executes the caller's build.
+    (≤ nodes)-sized broadcast survivor list.  Lineage is truncated every
+    ``_KCORE_CHECKPOINT_EVERY`` rounds (``durable_checkpoint``) so the
+    iterated plan never re-executes the caller's build.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return durable_checkpoint(df, eager=False)
-
     ab = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b")).where(
         F.col(src) != F.col(dst)
     )
@@ -354,10 +326,11 @@ def kcore(
     if not assume_distinct:
         und = und.distinct()
     # symmetric orientation: node degree == out-degree of _s
-    e = _ckpt(
+    e = durable_checkpoint(
         und.select(F.col("_u").alias("_s"), F.col("_v").alias("_t")).unionByName(
             und.select(F.col("_v").alias("_s"), F.col("_u").alias("_t"))
-        )
+        ),
+        eager=False,
     )
     # Survivor-list BROADCAST + sparse checkpointing (measured at sf0.1
     # ×4 replicas: 45.6s → 11.7s, growth 6.9× → 2.0× at 4× data): with
@@ -366,11 +339,7 @@ def kcore(
     # ALSO makes un-checkpointed rounds cheap to re-derive (a cache scan
     # + broadcast filters), so caching every round is wasteful: the
     # per-round cache generations were the super-linear term (block-store
-    # churn + shuffle-file accumulation).  ``broadcast_survivors=False``
-    # falls back to shuffle semi-joins + per-round checkpoints for graphs
-    # whose per-round survivor list itself exceeds broadcast size
-    # (billions of nodes).
-    every = checkpoint_every if broadcast_survivors else 1
+    # churn + shuffle-file accumulation).
     # Fixed-point early exit at checkpoint boundaries: surviving-edge
     # counts are monotonically non-increasing, so an UNCHANGED count
     # across a whole checkpoint window proves no round in the window
@@ -384,19 +353,17 @@ def kcore(
     # caught at the next boundary.
     prev_edges: int | None = None
     for r in range(max_rounds):
-        good = (
+        good = F.broadcast(
             e.groupBy("_s")
             .agg(F.count(F.lit(1)).alias("_d"))
             .where(F.col("_d") >= k)
             .select(F.col("_s").alias("_g"))
         )
-        if broadcast_survivors:
-            good = F.broadcast(good)
         e = e.join(good, e["_s"] == good["_g"], "left_semi").join(
             good, e["_t"] == good["_g"], "left_semi"
         )
-        if (r + 1) % every == 0 and r + 1 < max_rounds:
-            e = _ckpt(e)
+        if (r + 1) % _KCORE_CHECKPOINT_EVERY == 0 and r + 1 < max_rounds:
+            e = durable_checkpoint(e, eager=False)
             cnt = e.count()
             if cnt == prev_edges:
                 break
@@ -406,10 +373,11 @@ def kcore(
     # re-execute per reference.  ``converged`` = no surviving node is
     # below k (min over an empty core is NULL → vacuously converged);
     # a (≤1)-row frame, attached by sanctioned broadcast scalar.
-    deg = _ckpt(
+    deg = durable_checkpoint(
         e.groupBy("_s")
         .agg(F.count(F.lit(1)).alias("degree"))
-        .select(F.col("_s").alias("node"), "degree")
+        .select(F.col("_s").alias("node"), "degree"),
+        eager=False,
     )
     flag = deg.agg(
         F.coalesce(F.min(F.col("degree") >= F.lit(k)), F.lit(True)).alias(
@@ -428,12 +396,10 @@ def pagerank(
     damping: float = 0.85,
     decimals: int = 6,
     weight: str | None = None,
-    checkpoint_every: int | None = 8,
     assume_distinct: bool = False,
     repair_dangling: bool = True,
     assume_full_in_degree: bool = False,
     validate: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank: ``(node, rank)`` after ``iters`` rounds.
 
@@ -457,34 +423,18 @@ def pagerank(
     ``assume_full_in_degree`` claims on hash-sampled buckets before
     trusting them — a few extra count jobs; a violating edge list raises
     instead of silently skewing ranks.
-    ``checkpoint_every`` truncates plan lineage on long runs exactly like
-    ``dup_clusters``.  ``checkpoint_dir`` switches the truncation from
-    ``localCheckpoint`` (executor block store — spills when the edge frame
-    outgrows the in-memory store, the one-time storage step SCALING.md's
-    2× probe recorded) to a DURABLE ``checkpoint()`` against that
-    directory: writes land on stable storage, iteration cost stops
-    depending on block-store headroom, and executor loss is survivable —
-    the cluster-production mode (probed @8×, SCALING.md).
+    Lineage truncation goes through ``durable_checkpoint``: set a session
+    checkpoint dir (``spark.sparkContext.setCheckpointDir``) and every
+    truncation becomes a durable ``checkpoint()`` that survives executor
+    loss — the cluster-production mode (probed @8×, SCALING.md).
     """
     # Loop-invariant frames are referenced in EVERY iteration's subtree;
     # without truncation Spark re-executes prepare_edges (and the caller's
-    # whole edge build) once per reference.  Both checkpoint flavors
-    # materialize each once on first use (lazy, so plan introspection
-    # still works).  Measured at sf0.1 (1.2M edges, iters=5): 27.5s ->
-    # 5.4s steady-state together with the degree fold below and integer
-    # node ids.
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return durable_checkpoint(df, eager=False)
-
-    e = _ckpt(
+    # whole edge build) once per reference.  Checkpoints materialize each
+    # once on first use (lazy, so plan introspection still works).
+    # Measured at sf0.1 (1.2M edges, iters=5): 27.5s -> 5.4s steady-state
+    # together with the degree fold below and integer node ids.
+    e = durable_checkpoint(
         prepare_edges(
             edges,
             src,
@@ -493,10 +443,16 @@ def pagerank(
             assume_distinct=assume_distinct,
             repair_dangling=repair_dangling,
             validate=validate,
-        )
+        ),
+        eager=False,
     )
     if assume_full_in_degree and validate:
         _validate_full_in_degree(e)
+    if iters < 1:
+        return (
+            e.select(F.col("_src").alias("node")).distinct()
+            .select("node", portable_round(F.lit(1.0), decimals).alias("rank"))
+        )
     # out-degree folded INTO the edge frame ONCE (map-side-combined count +
     # one join here, instead of a count join inside every iteration; not a
     # per-_src window, which would put a hub supernode's whole edge list on
@@ -506,7 +462,7 @@ def pagerank(
         outdeg = e.groupBy("_src").agg(F.sum("_w").alias("_deg"))
     else:
         outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    e2 = _ckpt(e.join(outdeg, "_src"))
+    e2 = durable_checkpoint(e.join(outdeg, "_src"), eager=False)
     # ``assume_full_in_degree=True``: the caller GUARANTEES every node has
     # at least one in-edge (structural on symmetrized graphs — both trade-
     # graph queries).  Then every node appears in every iteration's
@@ -514,94 +470,64 @@ def pagerank(
     # exists to re-attach in-edge-less nodes (and the nodes frame build
     # itself) is a no-op — dropping it removes one join + one node-frame
     # exchange per iteration (round-14: plan 32 → 21 Exchanges at x67's
-    # shape), and iteration 1 folds the constant initial rank 1.0 straight
-    # into the contribution expression instead of joining a constant frame.
-    # A wrong claim silently drops in-edge-less nodes from the output.
-    if assume_full_in_degree:
-        if iters < 1:
-            # parity with the regular path's iters=0 result (the initial
-            # rank-1.0 frame) instead of an AttributeError on ranks=None
-            return (
-                e.select(F.col("_src").alias("node")).distinct()
-                .select("node", portable_round(F.lit(1.0), decimals).alias("rank"))
-            )
-        ranks = None
-        for i in range(iters):
-            if ranks is None:
-                contrib_rows = e2.select(
-                    F.col("_dst").alias("_cn"),
-                    (
-                        (F.lit(1.0) * F.col("_w") / F.col("_deg"))
-                        if weight is not None
-                        else (F.lit(1.0) / F.col("_deg"))
-                    ).alias("_c"),
-                )
-            else:
-                # SHUFFLE_HASH on the rank side: the edge stream is the
-                # dominant input and must never be sorted (SMJ sorts BOTH
-                # sides per iteration); the build side is nodes/partitions
-                # rows of (long, double) — bounded per task at any scale.
-                # Round-14 A/B: x123 5.54 -> 3.96 s, x67 -0.3 s.
-                r_side = ranks.hint("shuffle_hash").select(
-                    F.col("_n").alias("_rsrc"), F.col("_r").alias("_rval")
-                )
-                contrib_rows = e2.join(
-                    r_side, e2["_src"] == r_side["_rsrc"]
-                ).select(
-                    F.col("_dst").alias("_cn"),
-                    (
-                        (F.col("_rval") * F.col("_w") / F.col("_deg"))
-                        if weight is not None
-                        else (F.col("_rval") / F.col("_deg"))
-                    ).alias("_c"),
-                )
-            ranks = (
-                contrib_rows.groupBy("_cn")
-                .agg(F.sum("_c").alias("_sum"))
-                .select(
-                    F.col("_cn").alias("_n"),
-                    (F.lit(1.0 - damping) + damping * F.col("_sum")).alias("_r"),
-                )
-            )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-                ranks = _ckpt(ranks)
-        return ranks.select(
-            F.col("_n").alias("node"),
-            portable_round(F.col("_r"), decimals).alias("rank"),
+    # shape).  A wrong claim silently drops in-edge-less nodes from the
+    # output.
+    nodes = None
+    if not assume_full_in_degree:
+        nodes = durable_checkpoint(
+            e.select(F.col("_src").alias("_n")).distinct(), eager=False
         )
-    nodes = _ckpt(e.select(F.col("_src").alias("_n")).distinct())
-    ranks = nodes.select("_n", F.lit(1.0).alias("_r"))
+    ranks = None
     for i in range(iters):
-        # distinct column names per join side: the iterated frames all
-        # share lineage with `e`, and Spark's self-join resolution is
-        # ambiguous for repeated attribute names across iterations
-        r_side = ranks.hint("shuffle_hash").select(
-            F.col("_n").alias("_rsrc"), F.col("_r").alias("_rval")
-        )
+        if ranks is None:
+            # iteration 1 folds the constant initial rank 1.0 straight into
+            # the contribution expression instead of joining a constant
+            # frame (every ``_src`` has that rank, so the arithmetic is
+            # the join's)
+            rval, contrib_rows = F.lit(1.0), e2
+        else:
+            # SHUFFLE_HASH on the rank side: the edge stream is the
+            # dominant input and must never be sorted (SMJ sorts BOTH
+            # sides per iteration); the build side is nodes/partitions
+            # rows of (long, double) — bounded per task at any scale.
+            # Round-14 A/B: x123 5.54 -> 3.96 s, x67 -0.3 s.  Distinct
+            # column names per join side: the iterated frames all share
+            # lineage with `e`, and Spark's self-join resolution is
+            # ambiguous for repeated attribute names across iterations.
+            r_side = ranks.hint("shuffle_hash").select(
+                F.col("_n").alias("_rsrc"), F.col("_r").alias("_rval")
+            )
+            rval = F.col("_rval")
+            contrib_rows = e2.join(r_side, e2["_src"] == r_side["_rsrc"])
         contrib = (
-            e2.join(r_side, e2["_src"] == r_side["_rsrc"])
-            .select(
+            contrib_rows.select(
                 F.col("_dst").alias("_cn"),
                 (
-                    (F.col("_rval") * F.col("_w") / F.col("_deg"))
+                    (rval * F.col("_w") / F.col("_deg"))
                     if weight is not None
-                    else (F.col("_rval") / F.col("_deg"))
+                    else (rval / F.col("_deg"))
                 ).alias("_c"),
             )
             .groupBy("_cn")
             .agg(F.sum("_c").alias("_sum"))
         )
-        ranks = nodes.join(
-            contrib, nodes["_n"] == contrib["_cn"], "left"
-        ).select(
-            "_n",
-            (
-                F.lit(1.0 - damping)
-                + damping * F.coalesce(F.col("_sum"), F.lit(0.0))
-            ).alias("_r"),
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            ranks = _ckpt(ranks)
+        if nodes is None:
+            ranks = contrib.select(
+                F.col("_cn").alias("_n"),
+                (F.lit(1.0 - damping) + damping * F.col("_sum")).alias("_r"),
+            )
+        else:
+            ranks = nodes.join(
+                contrib, nodes["_n"] == contrib["_cn"], "left"
+            ).select(
+                "_n",
+                (
+                    F.lit(1.0 - damping)
+                    + damping * F.coalesce(F.col("_sum"), F.lit(0.0))
+                ).alias("_r"),
+            )
+        if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
+            ranks = durable_checkpoint(ranks, eager=False)
     return ranks.select(
         F.col("_n").alias("node"),
         portable_round(F.col("_r"), decimals).alias("rank"),

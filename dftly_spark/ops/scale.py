@@ -50,8 +50,7 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     HDFS/S3 on a cluster) whenever the user has called
     ``spark.sparkContext.setCheckpointDir(...)``, so ONE session-level
     setting makes every op's truncation points durable; no per-op
-    parameter needed (``ops.graph`` additionally accepts an explicit
-    ``checkpoint_dir`` and sets the session dir for you).
+    parameter needed.
 
     Retention: Spark does NOT delete reliable checkpoint files when the
     RDD is garbage-collected unless the session was built with

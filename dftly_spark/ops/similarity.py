@@ -587,14 +587,28 @@ def _cents_numpy(cents: DataFrame) -> "object":
     return np.asarray(_collect_centroid_lists(cents), dtype=np.float64)
 
 
-def _arrow_rows(vecs, dim: int):
-    """One pandas batch of vectors → ``(V, unit_vecs, null)``: the
-    float64 matrix with NULL vectors as NaN rows, each row's unit vector
-    as the fold path's ``unit()`` leaves it (``None`` for a NULL or
-    zero-norm vector), and the NULL-vector mask."""
+def _arrow_input(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The arrow scorers' input: ``(id, vec, _vnull)``, where Spark flags a
+    NULL vector or one with a NULL element.  numpy would read a NULL
+    element as NaN and ``argmax`` would then pick cell 1; the fold's
+    score array for such a row is all NULL, like a NULL vector's."""
+    vec = F.col(vec_col)
+    return df.select(
+        id_col, vec_col,
+        (vec.isNull() | F.exists(vec, lambda x: x.isNull())).alias("_vnull"),
+    )
+
+
+def _arrow_rows(pdf, vec_col: str, dim: int):
+    """One pandas batch of :func:`_arrow_input` rows → ``(V, unit_vecs,
+    null)``: the float64 matrix with NULL vectors as NaN rows, each row's
+    unit vector as the fold path's ``unit()`` leaves it (``None`` for a
+    NULL or zero-norm vector), and the NULL mask (a vector with a NULL
+    element counts as NULL)."""
     import numpy as np
 
-    null = vecs.isna().to_numpy()
+    vecs = pdf[vec_col]
+    null = pdf["_vnull"].to_numpy(dtype=bool)
     V = np.full((len(vecs), dim), np.nan)
     if not null.all():
         V[~null] = np.asarray(
@@ -629,8 +643,8 @@ def _assign_cells_arrow(
     ALSO numpy-normalized (pairwise-summed norm), so downstream cosines
     computed from it carry the same last-ulp caveat; zero-norm vectors
     yield a NULL ``_v`` to match the fold path's NULL-element unit(), and
-    a NULL vector yields a NULL ``_v`` and a NULL ``_cell``, as the fold's
-    all-NULL score array does."""
+    a NULL vector, or one with a NULL element, yields a NULL ``_v`` and a
+    NULL ``_cell``, as the fold's all-NULL score array does."""
     import pandas as pd
 
     C = _cents_numpy(cents)
@@ -643,14 +657,14 @@ def _assign_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V, vecs, null = _arrow_rows(pdf[vec_col], Cm.shape[1])
+            V, vecs, null = _arrow_rows(pdf, vec_col, Cm.shape[1])
             cell = pd.array((V @ Cm.T).argmax(axis=1) + 1, dtype="Int64")
             cell[null] = pd.NA
             yield pd.DataFrame(
                 {"_id": pdf[id_col].to_numpy(), "_v": vecs, "_cell": cell}
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
+    return _arrow_input(corpus, id_col, vec_col).mapInPandas(score, out_schema)
 
 
 def _probe_cells_arrow(
@@ -660,9 +674,10 @@ def _probe_cells_arrow(
     cells — via the same Arrow/numpy matmul as :func:`_assign_cells_arrow`.
     Tie rule matches the fold path's ``(-score, cell)`` struct sort: a
     STABLE descending-score argsort keeps the lower cell first on ties.
-    A NULL query vector scores NaN against every cell, which the argsort
-    puts last in cell order: it probes cells ``1..nprobe`` with a NULL
-    ``_v``, as the fold's sort of all-NULL scores does."""
+    A NULL query vector (or one with a NULL element) scores NaN against
+    every cell, which the argsort puts last in cell order: it probes cells
+    ``1..nprobe`` with a NULL ``_v``, as the fold's sort of all-NULL
+    scores does."""
     import numpy as np
     import pandas as pd
 
@@ -677,7 +692,7 @@ def _probe_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V, vecs, _ = _arrow_rows(pdf[vec_col], Cm.shape[1])
+            V, vecs, _ = _arrow_rows(pdf, vec_col, Cm.shape[1])
             top = np.argsort(-(V @ Cm.T), axis=1, kind="stable")[:, :np_probe] + 1
             yield pd.DataFrame(
                 {
@@ -687,7 +702,7 @@ def _probe_cells_arrow(
                 }
             )
 
-    return queries.select(id_col, vec_col).mapInPandas(probe, out_schema)
+    return _arrow_input(queries, id_col, vec_col).mapInPandas(probe, out_schema)
 
 
 #: centroid count above which the interpreted-fold scorer is warned about:

@@ -99,24 +99,29 @@ def test_pagerank_validate_passes_symmetrized_graph(spark):
     from dftly_spark.ops import pagerank
 
     n = _bucket0_node(spark)
-    sym = [(n, n + 30000), (n + 30000, n), (n, n + 30001), (n + 30001, n)]
-    edges = spark.createDataFrame(sym, ["src", "dst"])
-    base = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, iters=3).collect()
-    }
-    fast = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges,
-            iters=3,
-            assume_distinct=True,
-            repair_dangling=False,
-            assume_full_in_degree=True,
-            validate=True,
-        ).collect()
-    }
-    assert fast == base
+    # unweighted, then weighted with unequal weights: the first iteration
+    # folds the constant initial rank into rank·w/strength on both paths
+    sym = [(n, n + 30000, 3), (n + 30000, n, 3), (n, n + 30001, 1), (n + 30001, n, 1)]
+    edges = spark.createDataFrame(sym, ["src", "dst", "w"])
+    for weight in (None, "w"):
+        base = {
+            r["node"]: r["rank"]
+            for r in pagerank(edges, iters=3, weight=weight).collect()
+        }
+        fast = {
+            r["node"]: r["rank"]
+            for r in pagerank(
+                edges,
+                iters=3,
+                weight=weight,
+                assume_distinct=True,
+                repair_dangling=False,
+                assume_full_in_degree=True,
+                validate=True,
+            ).collect()
+        }
+        assert fast == base
+    assert base[n + 30000] > base[n + 30001]  # the weights moved rank mass
 
 
 def test_pagerank_fast_path_iters_zero_matches_regular(spark):

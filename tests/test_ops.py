@@ -347,14 +347,15 @@ def test_random_projection_preserves_distances(spark, emb):
 
 def test_no_python_udf_in_text_paths(spark, docs):
     """Text/hash operators must stay JVM-side (no BatchEvalPython)."""
-    from dftly_spark.ops import minhash_dup_pairs, quality_score, simhash64
+    from dftly_spark.ops import minhash_dup_pairs, quality_score, simhash_dup_pairs
 
-    plan = docs.select(simhash64(F.col("text")), quality_score(F.col("text")))._jdf.queryExecution().executedPlan().toString()
+    plan = docs.select(quality_score(F.col("text")))._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
-    plan2 = (
-        minhash_dup_pairs(docs, "doc_id", "text")._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BatchEvalPython" not in plan2
+    for pairs in (
+        minhash_dup_pairs(docs, "doc_id", "text"),
+        simhash_dup_pairs(docs, "doc_id", "text"),
+    ):
+        assert "BatchEvalPython" not in pairs._jdf.queryExecution().executedPlan().toString()
 
 
 def test_json_extract_fields_and_typed_parse(spark):
@@ -1292,9 +1293,10 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     """scorer="arrow" (Arrow/numpy matmul) must agree with the fold path
     wherever argmax is not knife-edged: on well-separated planted clusters
     topic assignments and ivf_topk results are identical, including the
-    first-max/lowest-cell tie convention, a NULL vector (no cell; as an
-    ivf_topk query it probes cells 1..nprobe and ranks its NULL cosines
-    by id), a zero vector and a duplicated id; unknown scorers reject."""
+    first-max/lowest-cell tie convention, a NULL vector and a vector with
+    a NULL element (no cell; as an ivf_topk query each probes cells
+    1..nprobe and ranks its NULL cosines by id), a zero vector and a
+    duplicated id; unknown scorers reject."""
     import random
 
     from dftly_spark.ops import ivf_topk, semantic_dedup_pairs, topic_assign
@@ -1317,6 +1319,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     # a NULL vector — both must exclude it from cosine thresholds/ranks
     rows.append((999, [0.0] * dim))
     rows.append((900, None))  # NULL vector
+    rows.append((901, [1.0, None] + [0.0] * (dim - 2)))  # NULL element
     rows.append((100, rows[kc][1]))  # duplicated id, same vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
@@ -1324,7 +1327,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     arrow = topic_assign(df, n_topics=kc, strategy="first", scorer="arrow")
     fold_rows = sorted(map(tuple, fold.collect()))
     assert sorted(map(tuple, arrow.collect())) == fold_rows
-    assert (900, None) in fold_rows
+    assert (900, None) in fold_rows and (901, None) in fold_rows
     # arrow plan really routes through Arrow (one python eval node)
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
@@ -1342,7 +1345,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
         for r in ivf_topk(df, q, scorer="arrow", **kw).collect()
     )
     assert got_a == got_f
-    assert sum(r[0] == 900 for r in got_f) == 5
+    assert sum(r[0] == 900 for r in got_f) == sum(r[0] == 901 for r in got_f) == 5
 
     sd_f = sorted(
         (r["id_l"], r["id_r"]) for r in

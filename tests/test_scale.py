@@ -553,6 +553,29 @@ def test_durable_checkpoint_routes_by_session_dir(spark, monkeypatch, tmp_path):
     assert calls == {"eager": False}
 
 
+def test_lineage_truncation_goes_through_durable_checkpoint():
+    """Every lineage truncation in the package calls durable_checkpoint, so
+    one session-level checkpoint dir makes all of them durable and no
+    operator changes session state.  A source scan: no Spark session."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "dftly_spark"
+    banned = {"localCheckpoint", "checkpoint", "setCheckpointDir"}
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.relative_to(pkg).as_posix() == "ops/scale.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+            ):
+                hits.append(f"{path.relative_to(pkg)}:{node.lineno} {node.func.attr}(")
+    assert hits == []
+
+
 def test_fold_scorer_warns_at_production_k(spark):
     """Explicit scorer='fold' must not be a silent footgun at its
     intended shape: k >= 1024 centroids warns to use scorer='arrow'."""
