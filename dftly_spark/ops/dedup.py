@@ -980,8 +980,9 @@ def dup_clusters(
     starts labeled with itself, and each round takes the min label across
     itself and its neighbors, converging in O(graph diameter) rounds —
     near-dup clusters are shallow (stars/chains of a few docs), so this is
-    2–3 keyed shuffles in practice, with ``localCheckpoint`` truncating the
-    iterative lineage each round (use a checkpoint dir on a real cluster).
+    2–3 keyed shuffles in practice, with ``durable_checkpoint`` truncating
+    the iterative lineage each round (reliable once the session has a
+    checkpoint dir, local otherwise).
     ``cluster_id`` is the smallest doc id in the component.
     """
     # Symmetrize with a row-local explode (not a self-union) so an expensive
@@ -1043,7 +1044,6 @@ def semantic_dedup_pairs(
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
     max_cell_size: int | None = None,
-    scorer: str = "auto",
     pair_scorer: str = "fold",
 ) -> DataFrame:
     """Semantic near-duplicate pairs via cluster-then-prune (SemDeDup shape).
@@ -1061,13 +1061,12 @@ def semantic_dedup_pairs(
     Returns ``(id_l, id_r, cos)`` with ``id_l < id_r`` and ``cos ≥
     threshold``, both members in the same cell.  Cosine folds are
     bit-identical with DuckDB's ``list_dot_product`` replay.
-    ``scorer="arrow"`` swaps the cell-assignment argmax to the Arrow/numpy
-    matmul (the production-k×dim throughput path).  The within-cell
-    cosine verify still runs as the JVM fold, but over numpy-NORMALIZED
-    vectors, so a cosine sitting exactly on ``threshold`` can move one
-    ulp and flip — the last-ulp caveat documented at
-    :func:`~dftly_spark.ops.similarity.assign_cells` applies to the pair
-    set too.
+    ``n_centroids`` picks the cell-assignment scorer as in
+    :func:`~dftly_spark.ops.similarity.assign_cells`.  At 1024 cells and
+    above that is the Arrow/numpy matmul, whose vectors are also
+    numpy-NORMALIZED, so with either ``pair_scorer`` a cosine sitting
+    exactly on ``threshold`` can move one ulp and flip — the last-ulp
+    caveat documented there applies to the pair set too.
 
     ``pair_scorer`` picks the within-cell pairwise engine: ``"fold"``
     (default — the cell self-join + interpreted JVM fold) or ``"arrow"``
@@ -1075,19 +1074,9 @@ def semantic_dedup_pairs(
     values via ascending-dimension accumulation, ~20× faster at sf1.0
     pair volumes; needs one cell's n×n double matrix per task, so cap
     degenerate cells with ``max_cell_size`` at scale).
-
-    .. note:: *changed in round 12* — the default moved from
-       ``scorer="fold"`` to ``"auto"``, which resolves to ``"arrow"``
-       at ``n_centroids`` ≥ 1024.  The repo's hash-pinned gates stay
-       bit-exact only because they run at gate-scale k (auto → fold
-       there); an existing caller at production k that relied on the
-       old bit-exact default now gets arrow tie behavior — pass
-       ``scorer="fold"`` explicitly to restore it (an info log fires
-       whenever auto resolves to arrow).
     """
-    from .similarity import _resolve_scorer, assign_cells, choose_centroid_frame, dot
+    from .similarity import assign_cells, choose_centroid_frame, dot
 
-    scorer = _resolve_scorer(scorer, n_centroids, "semantic_dedup_pairs")
     cents = choose_centroid_frame(
         corpus,
         id_col=id_col,
@@ -1098,10 +1087,7 @@ def semantic_dedup_pairs(
         kmeans_iters=kmeans_iters,
         kmeans_init=kmeans_init,
     )
-    cells = assign_cells(
-        corpus, cents, id_col=id_col, vec_col=vec_col, scorer=scorer,
-        n_centroids=n_centroids,
-    )
+    cells = assign_cells(corpus, cents, n_centroids, id_col=id_col, vec_col=vec_col)
     if max_cell_size is not None:
         from pyspark.sql import Window
 
@@ -1141,6 +1127,65 @@ def semantic_dedup_pairs(
     )
 
 
+def _no_pairs():
+    """The pair kernels' empty ``(id_l, id_r, cos)`` frame."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "id_l": pd.Series(dtype="int64"),
+            "id_r": pd.Series(dtype="int64"),
+            "cos": pd.Series(dtype="float64"),
+        }
+    )
+
+
+def _pair_matrix(pdf):
+    """``(ids, M)`` for the pair kernels: a non-empty batch of non-NULL
+    ``(_id, _v)`` rows sorted by id (stable) as a float64 matrix, minus
+    rows with a NaN element (a zero-norm vector's ``unit``)."""
+    import numpy as np
+
+    ids = pdf["_id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    M = np.asarray(
+        [np.asarray(v, dtype=np.float64) for v in pdf["_v"].to_numpy()[order]]
+    )
+    keep = ~np.isnan(M).any(axis=1)
+    return ids[keep], M[keep]
+
+
+def _cos_matrix(A, B):
+    """``A @ B.T`` accumulated in ASCENDING DIMENSION ORDER — for every
+    pair, exactly the JVM fold's sequence of IEEE-double multiply-then-add
+    (a BLAS matmul would reorder it)."""
+    import numpy as np
+
+    C = np.zeros((A.shape[0], B.shape[0]))
+    buf = np.empty_like(C)
+    for k in range(A.shape[1]):
+        np.multiply(A[:, k][:, None], B[:, k][None, :], out=buf)
+        C += buf
+    return C
+
+
+def _self_pairs(ids, M, threshold: float):
+    """Qualifying pairs within one set of rows, each once as ``(lower,
+    higher)`` in id order; equal-id pairs are skipped, as the fold's
+    ``id_l < id_r`` predicate skips them."""
+    import numpy as np
+    import pandas as pd
+
+    if len(ids) < 2:
+        return _no_pairs()
+    C = _cos_matrix(M, M)
+    iu, ju = np.triu_indices(len(ids), k=1)
+    cos = C[iu, ju]
+    mask = (cos >= threshold) & (ids[iu] != ids[ju])
+    return pd.DataFrame({"id_l": ids[iu[mask]], "id_r": ids[ju[mask]], "cos": cos[mask]})
+
+
 def _cell_pairs_arrow(
     cells: DataFrame, threshold: float, cell_col: str = "_cell"
 ) -> DataFrame:
@@ -1172,42 +1217,10 @@ def _cell_pairs_arrow(
     import pandas as pd
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        empty = pd.DataFrame(
-            {
-                "id_l": pd.Series(dtype="int64"),
-                "id_r": pd.Series(dtype="int64"),
-                "cos": pd.Series(dtype="float64"),
-            }
-        )
         pdf = pdf[pdf["_v"].notna()]
         if len(pdf) < 2:
-            return empty
-        ids = pdf["_id"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        M = np.asarray(
-            [np.asarray(v, dtype=np.float64) for v in pdf["_v"].to_numpy()[order]]
-        )
-        keep = ~np.isnan(M).any(axis=1)
-        ids, M = ids[keep], M[keep]
-        n = len(ids)
-        if n < 2:
-            return empty
-        # ascending-k accumulation == the fold's operation order per pair
-        C = np.zeros((n, n))
-        buf = np.empty((n, n))
-        for k in range(M.shape[1]):
-            col = M[:, k]
-            np.multiply(col[:, None], col[None, :], out=buf)
-            C += buf
-        iu, ju = np.triu_indices(n, k=1)
-        cos = C[iu, ju]
-        mask = (cos >= threshold) & (ids[iu] != ids[ju])
-        return pd.DataFrame(
-            {"id_l": ids[iu[mask]], "id_r": ids[ju[mask]], "cos": cos[mask]}
-        )
+            return _no_pairs()
+        return _self_pairs(*_pair_matrix(pdf), threshold)
 
     id_type = cells.schema["_id"].dataType.simpleString()
     return (
@@ -1245,61 +1258,28 @@ def _allpairs_arrow(
     def per_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        empty = pd.DataFrame(
-            {
-                "id_l": pd.Series(dtype="int64"),
-                "id_r": pd.Series(dtype="int64"),
-                "cos": pd.Series(dtype="float64"),
-            }
-        )
         pdf = pdf[pdf["_v"].notna()]
         if len(pdf) < 2:
-            return empty
+            return _no_pairs()
         lo, hi = int(pdf["_lo"].iloc[0]), int(pdf["_hi"].iloc[0])
-
-        def mat(sub):
-            ids = sub["_id"].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in sub["_v"].to_numpy()[order]]
-            )
-            keep = ~np.isnan(M).any(axis=1)
-            return ids[keep], M[keep]
-
-        def cos_matrix(A, B):
-            C = np.zeros((A.shape[0], B.shape[0]))
-            buf = np.empty_like(C)
-            for k in range(A.shape[1]):
-                np.multiply(A[:, k][:, None], B[:, k][None, :], out=buf)
-                C += buf
-            return C
-
         if lo == hi:
-            ids, M = mat(pdf)
-            if len(ids) < 2:
-                return empty
-            C = cos_matrix(M, M)
-            iu, ju = np.triu_indices(len(ids), k=1)
-            il, ir, cos = ids[iu], ids[ju], C[iu, ju]
             # duplicate ids share a hash block, so only this branch can
-            # pair a row with an equal id; the fold's id_l < id_r skips it
-            mask = (cos >= threshold) & (il != ir)
-        else:
-            a = pdf[pdf["_blk"] == lo]
-            b = pdf[pdf["_blk"] == hi]
-            if len(a) == 0 or len(b) == 0:
-                return empty
-            ia, Ma = mat(a)
-            ib, Mb = mat(b)
-            if len(ia) == 0 or len(ib) == 0:
-                return empty
-            C = cos_matrix(Ma, Mb)
-            gi, gj = np.meshgrid(np.arange(len(ia)), np.arange(len(ib)), indexing="ij")
-            il = np.minimum(ia[gi.ravel()], ib[gj.ravel()])
-            ir = np.maximum(ia[gi.ravel()], ib[gj.ravel()])
-            cos = C.ravel()
-            mask = cos >= threshold
+            # pair a row with an equal id
+            return _self_pairs(*_pair_matrix(pdf), threshold)
+        a = pdf[pdf["_blk"] == lo]
+        b = pdf[pdf["_blk"] == hi]
+        if len(a) == 0 or len(b) == 0:
+            return _no_pairs()
+        ia, Ma = _pair_matrix(a)
+        ib, Mb = _pair_matrix(b)
+        if len(ia) == 0 or len(ib) == 0:
+            return _no_pairs()
+        C = _cos_matrix(Ma, Mb)
+        gi, gj = np.meshgrid(np.arange(len(ia)), np.arange(len(ib)), indexing="ij")
+        il = np.minimum(ia[gi.ravel()], ib[gj.ravel()])
+        ir = np.maximum(ia[gi.ravel()], ib[gj.ravel()])
+        cos = C.ravel()
+        mask = cos >= threshold
         return pd.DataFrame({"id_l": il[mask], "id_r": ir[mask], "cos": cos[mask]})
 
     id_type = base.schema["_id"].dataType.simpleString()

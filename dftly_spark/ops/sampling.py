@@ -617,7 +617,7 @@ def cluster_balanced_sample(
     (cluster-side Lloyd — the k×dim matrix never touches the driver or
     the plan text; it attaches to the scan as a checkpointed 1-row
     broadcast); assignment is one broadcast-matrix argmax scan
-    (``assign_cells``); the cap is one window keyed on ``(cell)`` over
+    (``assign_cells``, whose scorer follows ``n_cells``); the cap is one window keyed on ``(cell)`` over
     ≤ corpus rows — the same single-shuffle shape as ``cap_per_group``.
     For pathological cell skew, pre-salt with ``cap_per_group`` on the
     assigned frame instead.
@@ -637,7 +637,6 @@ def cluster_balanced_sample(
         seed=seed,
         kmeans_iters=kmeans_iters,
         kmeans_init=kmeans_init,
-        scorer="fold",
     ).select(F.col(id_col), F.col("topic").cast("int").alias("cell"))
     w = Window.partitionBy("cell").orderBy(
         _mix(F.col(id_col), seed), F.col(id_col)

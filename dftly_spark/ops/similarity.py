@@ -293,7 +293,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     iters: int = 5,
-    init: list[list[float]] | None = None,
     id_col: str = "vec_id",
     seed: int = 42,
     init_strategy: str = "sample",
@@ -310,31 +309,18 @@ def kmeans_centroids(
     production IVF shapes (k=65k, dim=1k) the ~0.5 GB matrix never rides
     py4j per iteration.  Empty cells keep their previous centroid.
 
-    ``init_strategy`` picks the starting centroids when ``init`` is not
-    given, cluster-side (no driver read): ``"sample"`` (seeded
-    hash-ordered sample — default) or ``"first"`` (lowest-id vectors —
-    replayable by an external engine without xxhash64, which is what the
-    x56 driver oracle needs).  An explicit ``init`` list is unit-normalized
-    and used as given.
+    ``init_strategy`` picks the starting centroids, cluster-side (no
+    driver read): ``"sample"`` (seeded hash-ordered sample — default) or
+    ``"first"`` (lowest-id vectors — replayable by an external engine
+    without xxhash64, which is what the x56 driver oracle needs).
     """
-    if init is None:
-        return _collect_centroid_lists(
-            choose_centroid_frame(
-                corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
-                strategy="kmeans", seed=seed, kmeans_iters=iters,
-                kmeans_init=init_strategy,
-            )
+    return _collect_centroid_lists(
+        choose_centroid_frame(
+            corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
+            strategy="kmeans", seed=seed, kmeans_iters=iters,
+            kmeans_init=init_strategy,
         )
-    cdf = corpus.sparkSession.createDataFrame(
-        [
-            (ci + 1, i, float(x))
-            for ci, c in enumerate(init)
-            for i, x in enumerate(_unit_list([float(x) for x in c]))
-        ],
-        "_cell int, _i int, _m double",
-    ).transform(durable_checkpoint)
-    base = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
-    return _collect_centroid_lists(_lloyd(base, cdf, iters))
+    )
 
 
 def _collect_centroid_lists(cdf: DataFrame) -> list[list[float]]:
@@ -387,14 +373,10 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
     keyed avg, and the unit norm is a LEFT FOLD over dim order
     (``F.aggregate``, Python's sequential ``sum(v*v)``) — a window SUM
     would reorder the partial sums."""
-    dot = lambda a, b: F.aggregate(  # noqa: E731 — shared fold shape
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     for _ in range(iters):
         cmat = _matrix_frame(cdf)
-        scores = F.transform(F.col("_cm"), lambda c: dot(F.col("_v"), c))
         assigned = base.crossJoin(F.broadcast(cmat)).select(
-            "_v", F.array_position(scores, F.array_max(scores)).alias("_cell")
+            "_v", _argmax_cell(_cell_scores(F.col("_v"))).alias("_cell")
         )
         means = (
             assigned.select("_cell", F.posexplode("_v").alias("_i", "_x"))
@@ -461,13 +443,6 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
             .transform(durable_checkpoint)
         )
     return cdf
-
-
-def _unit_list(c: list[float]) -> list[float]:
-    import math
-
-    n = math.sqrt(sum(v * v for v in c))
-    return [x / n for x in c] if n else c
 
 
 def choose_centroid_frame(
@@ -638,9 +613,10 @@ def _assign_cells_arrow(
     (``argmax`` returns the FIRST maximum = lowest cell).  BLAS reorders
     the per-dot accumulation (blocking/FMA), so scores can differ from
     the sequential fold in the last ulp — argmax flips only on
-    effectively-tied cells, which is why this scorer is opt-in and the
-    hash-pinned gate queries stay on the fold.  The returned ``_v`` is
-    ALSO numpy-normalized (pairwise-summed norm), so downstream cosines
+    effectively-tied cells, which is why it runs only at production k
+    (:func:`_centroid_matrix`) and the hash-pinned gate queries stay on
+    the fold.  The returned ``_v`` is ALSO numpy-normalized
+    (pairwise-summed norm), so downstream cosines
     computed from it carry the same last-ulp caveat; zero-norm vectors
     yield a NULL ``_v`` to match the fold path's NULL-element unit(), and
     a NULL vector, or one with a NULL element, yields a NULL ``_v`` and a
@@ -705,93 +681,57 @@ def _probe_cells_arrow(
     return _arrow_input(queries, id_col, vec_col).mapInPandas(probe, out_schema)
 
 
-#: centroid count above which the interpreted-fold scorer is warned about:
-#: at k=1024 the ~10 ns-per-multiply-add HOF fold is already ~order-of-
-#: magnitude behind the Arrow matmul (SCALING.md probes 30x at k=4096 x
-#: dim=512 and 164x at k=8192 x dim=768).
-_FOLD_WARN_CELLS = 1024
+#: centroid count at which the cell scorers leave the interpreted fold for
+#: the Arrow/numpy matmul: at k=1024 the ~10 ns-per-multiply-add HOF fold
+#: is already ~order-of-magnitude behind (SCALING.md probes 30x at
+#: k=4096 x dim=512 and 164x at k=8192 x dim=768).
+_ARROW_CELLS = 1024
 
 
-def _warn_fold_at_scale(k: int, where: str) -> None:
-    """Advise scorer='arrow' when the default fold meets a production k.
+def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | None:
+    """The one choice between the two cell scorers, made from the centroid
+    count ``k`` alone and logged (INFO) with its inputs either way.
 
-    'fold' stays the default because it is hash-exact (oracle-replayable,
-    no BLAS last-ulp tie drift) — but a user running the op at its intended
-    shape should not have to discover the flag from the docs after a slow
-    job, so the mismatch warns once per call site.
-    """
-    if k >= _FOLD_WARN_CELLS:
-        import warnings
-
-        warnings.warn(
-            f"{where}: scorer='fold' (default, hash-exact) with {k} "
-            f"centroids — the interpreted score fold is 30-160x slower than "
-            f"scorer='arrow' at production k×dim; pass scorer='arrow' "
-            f"unless bit-identical tie behavior is required",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-
-
-def _log_auto_arrow(k: int, where: str) -> None:
-    """Log (info) that ``scorer="auto"`` picked the Arrow path.
-
-    The arrow matmul diverges from the interpreted fold in the last ulp
-    (BLAS accumulation order), which can flip effectively-tied cell
-    assignments — a hash-pinned pipeline silently flipped onto it by the
-    round-12 default change should see WHY its hashes moved without
-    turning on debug logging."""
+    Below ``_ARROW_CELLS`` the hash-exact interpreted fold scores: gate
+    and oracle scale stay replayable with zero Python-on-data, and the
+    return value is its centroid matrix — the 1-row ``_cm`` frame,
+    eagerly checkpointed so the k×dim aggregation runs once at build time
+    and every consumer plan sees a 1-row scan.  At or above it the Arrow
+    matmul scores (30–160× on the SCALING.md probes) and the return value
+    is ``None``.  BLAS reorders the per-dot accumulation, so arrow scores
+    can differ from the fold's in the last ulp and flip effectively-tied
+    cells."""
     import logging
 
+    choice = "arrow" if k >= _ARROW_CELLS else "fold"
     logging.getLogger(__name__).info(
-        "%s: scorer='auto' resolved to 'arrow' at %d centroids "
-        "(>= %d); pass scorer='fold' for bit-exact tie behavior",
-        where,
-        k,
-        _FOLD_WARN_CELLS,
+        "%s: %s cell scorer at k=%d centroids (arrow from k >= %d)",
+        where, choice, k, _ARROW_CELLS,
     )
+    if choice == "arrow":
+        return None
+    return _matrix_frame(cents).transform(durable_checkpoint)
 
 
-def _resolve_scorer(scorer: str, k: int | None, where: str) -> str:
-    """Resolve the ``scorer`` option against the centroid count.
+def _cell_scores(v: SparkColumn) -> SparkColumn:
+    """``v``'s dot product with every centroid of the attached 1-row
+    ``_cm`` matrix — the fold every cell scorer shares (Lloyd's assign
+    step, corpus assignment, query probing).  Fold order matches DuckDB's
+    ``list_dot_product`` bit-for-bit."""
+    return F.transform(F.col("_cm"), lambda c: dot(v, c))
 
-    ``"auto"`` (the default on every centroid consumer) picks
-    ``"arrow"`` at k ≥ ``_FOLD_WARN_CELLS`` — the shape where the
-    interpreted fold is 30–160× behind the Arrow matmul (SCALING.md) —
-    and the hash-exact ``"fold"`` below it, so gate-scale runs stay
-    oracle-replayable with zero Python-on-data while production shapes
-    get the fast path without knowing the flag.  Explicit ``"fold"`` is
-    honored always (bit-exact ties) but warns at production k; explicit
-    ``"arrow"`` is honored always.
 
-    .. note:: *changed in round 12* — the default on every centroid
-       consumer moved from ``"fold"`` to ``"auto"``, so callers at
-       k ≥ 1024 now ride the Arrow/BLAS path by default.  Its last-ulp
-       score divergence can flip effectively-tied cell assignments; a
-       hash-pinned pipeline that needs the old bit-exact ties must pass
-       ``scorer="fold"`` explicitly.  When auto resolves to arrow an
-       informational log line is emitted so pinned pipelines notice."""
-    if scorer == "auto":
-        if k is not None and k >= _FOLD_WARN_CELLS:
-            _log_auto_arrow(k, where)
-            return "arrow"
-        return "fold"
-    if scorer == "fold":
-        if k is not None:
-            _warn_fold_at_scale(k, where)
-        return "fold"
-    if scorer == "arrow":
-        return "arrow"
-    raise ValueError(f"scorer must be 'auto', 'fold', or 'arrow', got {scorer!r}")
+def _argmax_cell(scores: SparkColumn) -> SparkColumn:
+    """1-based index of the first maximum score: the lowest cell wins ties."""
+    return F.array_position(scores, F.array_max(scores))
 
 
 def _with_cell_scores(
     df: DataFrame, cmat: DataFrame, id_expr, vec_col: str, id_alias: str, v_alias: str
 ) -> DataFrame:
     """``(id_alias, v_alias, _s)`` — each row's vector with ``_s``, its
-    dot product against every centroid of the 1-row ``_cm`` matrix frame
-    (attached as a broadcast).  Fold order matches DuckDB's
-    ``list_dot_product`` bit-for-bit."""
+    :func:`_cell_scores` against the 1-row ``_cm`` matrix frame (attached
+    as a broadcast)."""
     # alias the cast vector to an ATTRIBUTE before the fold captures it:
     # expressions captured by interpreted HOF lambdas re-evaluate per outer
     # element, so a captured cast would re-materialize the array once per
@@ -800,90 +740,90 @@ def _with_cell_scores(
     return (
         df.crossJoin(F.broadcast(cmat))
         .select(id_expr.alias(id_alias), v.alias(v_alias), "_cm")
-        .select(
-            id_alias,
-            v_alias,
-            F.transform(
-                F.col("_cm"),
-                lambda cv: F.aggregate(
-                    F.zip_with(F.col(v_alias), cv, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                ),
-            ).alias("_s"),
+        .select(id_alias, v_alias, _cell_scores(F.col(v_alias)).alias("_s"))
+    )
+
+
+def _assign(
+    corpus: DataFrame,
+    cents: DataFrame,
+    cmat: DataFrame | None,
+    *,
+    id_col: str,
+    vec_col: str,
+    id_alias: str,
+    v_alias: str,
+) -> DataFrame:
+    """``(id_alias, v_alias, _cell)`` on the scorer :func:`_centroid_matrix`
+    chose: the fold against ``cmat``, or the arrow matmul when it is
+    ``None``."""
+    if cmat is None:
+        return _assign_cells_arrow(
+            corpus, cents, id_col=id_col, vec_col=vec_col
+        ).select(F.col("_id").alias(id_alias), F.col("_v").alias(v_alias), "_cell")
+    c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, id_alias, v_alias)
+    # Separate select so `_s` is computed once, not inlined per reference.
+    return c.select(
+        id_alias,
+        unit(F.col(v_alias)).alias(v_alias),
+        _argmax_cell(F.col("_s")).alias("_cell"),
+    )
+
+
+def _probe(
+    queries: DataFrame,
+    cents: DataFrame,
+    cmat: DataFrame | None,
+    *,
+    id_col: str,
+    vec_col: str,
+    nprobe: int,
+) -> DataFrame:
+    """``(_qid, _qv, _cell)`` — each query's ``nprobe`` nearest cells, one
+    row per probe, on the scorer :func:`_centroid_matrix` chose (as
+    :func:`_assign`)."""
+    if cmat is None:
+        return _probe_cells_arrow(
+            queries, cents, id_col=id_col, vec_col=vec_col, nprobe=nprobe
+        ).select(F.col("_id").alias("_qid"), F.col("_v").alias("_qv"), "_cell")
+    q = _with_cell_scores(queries, cmat, F.col(id_col), vec_col, "_qid", "_qv")
+    # top-nprobe cells per query: sort (−score, cell-index) structs, slice.
+    ranked = F.array_sort(
+        F.zip_with(
+            F.col("_s"),
+            F.sequence(F.lit(1), F.size(F.col("_s"))),
+            lambda s, i: F.struct((-s).alias("neg"), i.alias("cell")),
         )
+    )
+    probes = F.transform(
+        F.slice(ranked, 1, nprobe), lambda st: st["cell"].cast("long")
+    )
+    return q.select(
+        "_qid", unit(F.col("_qv")).alias("_qv"), F.explode(probes).alias("_cell")
     )
 
 
 def assign_cells(
     corpus: DataFrame,
     cents: DataFrame,
+    k: int,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scorer: str = "auto",
-    n_centroids: int | None = None,
 ) -> DataFrame:
     """``(_id, _v, _cell)`` — unit-normalized vectors with their nearest
     centroid cell (argmax dot; first/lowest cell wins ties).  Centroids are
     unit vectors, so argmax(dot) ≡ argmax(cosine) with no per-row norm.
 
-    ``cents`` is the long-form ``(_cell, _i, _m)`` frame from
-    :func:`choose_centroid_frame`; the matrix reaches the executors as a
-    checkpointed 1-row broadcast.
-
-    ``scorer`` — ``"auto"`` (default) resolves by centroid count: the
-    hash-exact interpreted ``"fold"`` below ``_FOLD_WARN_CELLS``,
-    ``"arrow"`` at production k (30–160× on the SCALING.md probes).
-    The count comes from the ``n_centroids`` hint; WITHOUT the hint auto
-    resolves to ``"fold"`` (with a warning) rather than counting the
-    frame, because counting would run an eager Spark job at plan-build
-    time — re-executing a lazily-built centroid pipeline.  ``"arrow"``
-    switches the k×dim score computation to an Arrow-batched numpy matmul
-    (:func:`_assign_cells_arrow`), at the cost of last-ulp score
-    differences (BLAS accumulation order), so tie-sensitive hash-pinned
-    comparisons should pass ``"fold"`` explicitly.  The production-k
-    warning for an explicit ``"fold"`` fires once, at the resolving call
-    site (the public ops, or :func:`_resolve_scorer` for direct use)."""
-    if scorer == "auto":
-        # no n_centroids hint: resolve to the hash-exact fold rather than
-        # counting the frame — counting would run an eager Spark action at
-        # plan-BUILD time, silently executing the whole upstream pipeline
-        # (e.g. a kmeans fit) an extra time for a lazily-built frame.
-        # Callers at production k pass the hint (or scorer='arrow') to get
-        # the fast path; the warning says so.
-        if n_centroids is None:
-            import warnings
-
-            warnings.warn(
-                "assign_cells: scorer='auto' with no n_centroids hint "
-                "resolves to the hash-exact 'fold' scorer (counting the "
-                "frame would run an eager job at plan-build time); pass "
-                "n_centroids= or scorer='arrow' for the fast path at "
-                "k >= 1024",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            scorer = "fold"
-        elif n_centroids >= _FOLD_WARN_CELLS:
-            _log_auto_arrow(n_centroids, "assign_cells")
-            scorer = "arrow"
-        else:
-            scorer = "fold"
-    if scorer == "arrow":
-        return _assign_cells_arrow(corpus, cents, id_col=id_col, vec_col=vec_col)
-    if scorer != "fold":
-        raise ValueError(f"scorer must be 'auto', 'fold', or 'arrow', got {scorer!r}")
-    # eager 1-row checkpoint: the k×dim aggregation runs once at build
-    # time and the consumer plan sees a 1-row scan (no Exchange rides
-    # into every downstream plan)
-    cmat = _matrix_frame(cents).transform(durable_checkpoint)
-    c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, "_id", "_v")
-    # Separate select so `_s` is computed once, not inlined per reference.
-    return c.select(
-        "_id",
-        unit(F.col("_v")).alias("_v"),
-        F.array_position(F.col("_s"), F.array_max(F.col("_s"))).alias("_cell"),
+    ``cents`` is the long-form ``(_cell, _i, _m)`` frame of ``k`` cells
+    from :func:`choose_centroid_frame`.  ``k`` picks the scorer
+    (:func:`_centroid_matrix`): the hash-exact interpreted fold against a
+    checkpointed 1-row broadcast of the matrix below 1024 cells, the
+    Arrow-batched numpy matmul (:func:`_assign_cells_arrow`) at or above,
+    with its last-ulp score caveat."""
+    return _assign(
+        corpus, cents, _centroid_matrix(cents, k, "assign_cells"),
+        id_col=id_col, vec_col=vec_col, id_alias="_id", v_alias="_v",
     )
 
 
@@ -897,7 +837,6 @@ def topic_assign(
     seed: int = 42,
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
-    scorer: str = "auto",
 ) -> DataFrame:
     """Assign every embedding to a centroid cell: ``(id_col, topic)``.
 
@@ -910,14 +849,8 @@ def topic_assign(
     ``strategy`` as in :func:`choose_centroid_frame`; ``"kmeans"`` gives
     the balanced cells a real deployment wants.  The matrix stays
     cluster-resident and reaches the executors as a 1-row broadcast.
-    ``scorer`` — ``"auto"`` (default) resolves by ``n_topics``: the
-    hash-exact fold below 1024 cells, the Arrow/numpy matmul path above
-    (see :func:`assign_cells`); last-ulp score divergence documented
-    there — pass ``"fold"`` explicitly for hash-pinned comparisons.
+    ``n_topics`` picks the scorer as in :func:`assign_cells`.
     """
-    # resolve (and fail fast on a typo) BEFORE the centroid fit — a
-    # kmeans build at production k runs minutes of jobs
-    scorer = _resolve_scorer(scorer, n_topics, "topic_assign")
     cents = choose_centroid_frame(
         corpus,
         id_col=id_col,
@@ -929,12 +862,7 @@ def topic_assign(
         kmeans_init=kmeans_init,
     )
     return assign_cells(
-        corpus,
-        cents,
-        id_col=id_col,
-        vec_col=vec_col,
-        scorer=scorer,
-        n_centroids=n_topics,
+        corpus, cents, n_topics, id_col=id_col, vec_col=vec_col
     ).select(F.col("_id").alias(id_col), F.col("_cell").alias("topic"))
 
 
@@ -952,7 +880,6 @@ def ivf_topk(
     strategy: str = "first",
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
-    scorer: str = "auto",
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index.
 
@@ -980,19 +907,13 @@ def ivf_topk(
     k=65k×dim=1k (≈ 0.5 GB), where plan literals break the plan/py4j
     layer.
 
-    ``scorer`` — ``"auto"`` (default) resolves by ``n_centroids``: the
-    hash-exact ``"fold"`` below 1024 cells (gate/oracle scale), the
-    Arrow matmul above (production scale — 30-160× on the SCALING.md
-    probes).  ``"arrow"`` computes BOTH the corpus cell assignment and the
-    query nprobe ranking as Arrow-batched numpy matmuls — the throughput
-    path at production k×dim (the interpreted fold is ~10 ns per
-    multiply-add; see :func:`assign_cells`).  The candidate re-rank stays
-    the JVM-side exact-cosine fold either way (per-pair, k-independent).
-    Last-ulp score divergence from BLAS accumulation order means
-    effectively-tied cells/probes can differ from the fold path — pass
-    ``"fold"`` explicitly for hash-pinned comparisons.
+    ``n_centroids`` picks one scorer for both the corpus cell assignment
+    and the query nprobe ranking (:func:`_centroid_matrix`): the
+    hash-exact fold below 1024 cells, Arrow-batched numpy matmuls at or
+    above, where effectively-tied cells/probes can differ from the fold in
+    the last ulp.  The candidate re-rank is the JVM-side exact-cosine fold
+    either way (per-pair, k-independent).
     """
-    scorer = _resolve_scorer(scorer, n_centroids, "ivf_topk")
     cents = choose_centroid_frame(
         corpus,
         id_col=id_col,
@@ -1003,50 +924,16 @@ def ivf_topk(
         kmeans_iters=kmeans_iters,
         kmeans_init=kmeans_init,
     )
-
-    if scorer == "arrow":
-        c = _assign_cells_arrow(
-            corpus, cents, id_col=id_col, vec_col=vec_col
-        ).select(
-            F.col("_id").alias("_cid"), F.col("_v").alias("_cv"), "_cell"
-        )
-        q = _probe_cells_arrow(
-            queries, cents, id_col=query_id_col, vec_col=vec_col, nprobe=nprobe
-        ).select(
-            F.col("_id").alias("_qid"), F.col("_v").alias("_qv"), "_cell"
-        )
-    else:
-        # Centroids are unit vectors, so argmax(dot) == argmax(cosine): no
-        # per-row normalization needed for cell assignment/probing.  Eager
-        # 1-row checkpoint: referenced by BOTH the corpus-assignment and
-        # query-probe sides — without it the k×dim aggregation would
-        # execute twice and ride both plans as an Exchange.
-        cmat = _matrix_frame(cents).transform(durable_checkpoint)
-        c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, "_cid", "_cv")
-        # Separate select so `_s` is computed once, not inlined per reference.
-        c = c.select(
-            "_cid",
-            unit(F.col("_cv")).alias("_cv"),
-            F.array_position(F.col("_s"), F.array_max(F.col("_s"))).alias("_cell"),
-        )
-        q = _with_cell_scores(
-            queries, cmat, F.col(query_id_col), vec_col, "_qid", "_qv"
-        )
-        # top-nprobe cells per query: sort (−score, cell-index) structs, slice.
-        ranked = F.array_sort(
-            F.zip_with(
-                F.col("_s"),
-                F.sequence(F.lit(1), F.size(F.col("_s"))),
-                lambda s, i: F.struct((-s).alias("neg"), i.alias("cell")),
-            )
-        )
-        probes = F.transform(
-            F.slice(ranked, 1, nprobe), lambda st: st["cell"].cast("long")
-        )
-        q = q.select(
-            "_qid", unit(F.col("_qv")).alias("_qv"), F.explode(probes).alias("_cell")
-        )
-
+    # one matrix for both sides: without the shared checkpoint the k×dim
+    # aggregation would execute twice and ride both plans as an Exchange
+    cmat = _centroid_matrix(cents, n_centroids, "ivf_topk")
+    c = _assign(
+        corpus, cents, cmat,
+        id_col=id_col, vec_col=vec_col, id_alias="_cid", v_alias="_cv",
+    )
+    q = _probe(
+        queries, cents, cmat, id_col=query_id_col, vec_col=vec_col, nprobe=nprobe
+    )
     scored = c.join(F.broadcast(q), "_cell").select(
         F.col("_qid").alias(query_id_col),
         F.col("_cid").alias(id_col),

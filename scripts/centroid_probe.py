@@ -4,7 +4,8 @@
 The k×dim centroid matrix reaches the executors as a checkpointed 1-row
 broadcast, so the optimized plan stays the same size at any k; the score
 computation is either the interpreted JVM fold or the Arrow/numpy matmul.
-This probe measures both scorers at a production-like shape (default
+The library picks one from k alone (arrow at k >= 1024); this probe calls
+both private scorers directly at a production-like shape (default
 k=4096, dim=512) and prints:
 
   * driver-side plan-build wall time (centroid selection + matrix build)
@@ -30,6 +31,8 @@ K = int(sys.argv[1]) if len(sys.argv) > 1 else 4096
 DIM = int(sys.argv[2]) if len(sys.argv) > 2 else 512
 MODES = tuple(sys.argv[3].split(",")) if len(sys.argv) > 3 else ("fold", "arrow")
 N_ROWS = max(2 * K, 16384)
+if not set(MODES) <= {"fold", "arrow"}:
+    sys.exit(f"modes must be fold and/or arrow, got {','.join(MODES)}")
 
 
 def main() -> None:
@@ -59,12 +62,23 @@ def main() -> None:
     )
     emb.count()
 
-    from dftly_spark.ops.similarity import topic_assign
+    from dftly_spark.ops.scale import durable_checkpoint
+    from dftly_spark.ops.similarity import _assign, _matrix_frame, choose_centroid_frame
+
+    def assign(mode: str):
+        cents = choose_centroid_frame(emb, n_centroids=K, strategy="first")
+        # the fold scores against the checkpointed 1-row matrix; no matrix
+        # (None) is the arrow matmul
+        cmat = _matrix_frame(cents).transform(durable_checkpoint) if mode == "fold" else None
+        return _assign(
+            emb, cents, cmat,
+            id_col="vec_id", vec_col="embedding", id_alias="_id", v_alias="_v",
+        )
 
     results = {}
     for mode in MODES:
         t0 = time.perf_counter()
-        out = topic_assign(emb, n_topics=K, strategy="first", scorer=mode)
+        out = assign(mode)
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         t_build = time.perf_counter() - t0
         t1 = time.perf_counter()

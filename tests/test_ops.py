@@ -1289,17 +1289,18 @@ def test_snapshot_diff_compare_cols_subset(spark):
         snapshot_diff(old, new, "k", compare_cols=["nope"])
 
 
-def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
-    """scorer="arrow" (Arrow/numpy matmul) must agree with the fold path
+def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
+    """The arrow cell scorer (Arrow/numpy matmul, forced here by lowering
+    the centroid-count threshold) must agree with the fold path
     wherever argmax is not knife-edged: on well-separated planted clusters
     topic assignments and ivf_topk results are identical, including the
     first-max/lowest-cell tie convention, a NULL vector and a vector with
     a NULL element (no cell; as an ivf_topk query each probes cells
     1..nprobe and ranks its NULL cosines by id), a zero vector and a
-    duplicated id; unknown scorers reject."""
+    duplicated id."""
     import random
 
-    from dftly_spark.ops import ivf_topk, semantic_dedup_pairs, topic_assign
+    from dftly_spark.ops import ivf_topk, semantic_dedup_pairs, similarity, topic_assign
 
     rng = random.Random(5)
     dim, kc = 16, 4
@@ -1323,8 +1324,13 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     rows.append((100, rows[kc][1]))  # duplicated id, same vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
+    def arrow_scored(build):
+        with monkeypatch.context() as m:
+            m.setattr(similarity, "_ARROW_CELLS", 1)
+            return build()
+
     fold = topic_assign(df, n_topics=kc, strategy="first")
-    arrow = topic_assign(df, n_topics=kc, strategy="first", scorer="arrow")
+    arrow = arrow_scored(lambda: topic_assign(df, n_topics=kc, strategy="first"))
     fold_rows = sorted(map(tuple, fold.collect()))
     assert sorted(map(tuple, arrow.collect())) == fold_rows
     assert (900, None) in fold_rows and (901, None) in fold_rows
@@ -1342,7 +1348,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     )
     got_a = sorted(
         (r["query_id"], r["vec_id"], r["rank"])
-        for r in ivf_topk(df, q, scorer="arrow", **kw).collect()
+        for r in arrow_scored(lambda: ivf_topk(df, q, **kw)).collect()
     )
     assert got_a == got_f
     assert sum(r[0] == 900 for r in got_f) == sum(r[0] == 901 for r in got_f) == 5
@@ -1354,13 +1360,11 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark):
     )
     sd_a = sorted(
         (r["id_l"], r["id_r"]) for r in
-        semantic_dedup_pairs(df, threshold=0.9, n_centroids=kc,
-                             strategy="first", scorer="arrow").collect()
+        arrow_scored(lambda: semantic_dedup_pairs(
+            df, threshold=0.9, n_centroids=kc, strategy="first"
+        )).collect()
     )
     assert sd_a == sd_f and len(sd_a) > 0
-
-    with pytest.raises(ValueError, match="scorer"):
-        topic_assign(df, n_topics=kc, scorer="blas")
 
 
 def test_topic_assign_covers_corpus_no_shuffle(spark, emb):
@@ -1551,9 +1555,9 @@ def test_doc_tokens_rejects_missing_column(spark, docs):
 def test_kmeans_fit_collects_once(spark, monkeypatch):
     """Round-4 contract: Lloyd refinement is DataFrame-resident — the
     centroid matrix rides py4j exactly once (the final collect), never per
-    iteration.  The init is never collected either (an explicit init is
-    shipped once; otherwise it is built cluster-side), so total collect()
-    calls must be 1 regardless of iters."""
+    iteration.  The init is never collected either (it is built
+    cluster-side), so total collect() calls must be 1 regardless of
+    iters."""
     # pyspark 4: the session builds classic.DataFrame instances whose
     # collect overrides the pyspark.sql.DataFrame abstract — patch the
     # concrete class
@@ -1561,8 +1565,12 @@ def test_kmeans_fit_collects_once(spark, monkeypatch):
 
     from dftly_spark.ops.similarity import kmeans_centroids
 
+    # the three lowest ids are the axes, so init_strategy="first" starts
+    # Lloyd from the identity matrix
+    axes = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
     df = spark.createDataFrame(
-        [(i, [float(i % 4), float((i * 3) % 5), 1.0]) for i in range(40)],
+        list(enumerate(axes))
+        + [(i, [float(i % 4), float((i * 3) % 5), 1.0]) for i in range(3, 40)],
         "vec_id long, embedding array<double>",
     )
     calls = {"n": 0}
@@ -1573,16 +1581,13 @@ def test_kmeans_fit_collects_once(spark, monkeypatch):
         return orig(self)
 
     monkeypatch.setattr(_DF, "collect", counting)
-    cents = kmeans_centroids(
-        df, n_centroids=3, iters=4, init=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
-    )
+    cents = kmeans_centroids(df, n_centroids=3, iters=4, init_strategy="first")
     assert calls["n"] == 1
     assert len(cents) == 3 and all(len(c) == 3 for c in cents)
     # unit length
     for c in cents:
         assert abs(sum(x * x for x in c) - 1.0) < 1e-9
-    # without an explicit init the init is built cluster-side too: still
-    # exactly one collect, the final read
+    # at any init strategy: still exactly one collect, the final read
     for strategy in ("first", "sample"):
         calls["n"] = 0
         cents = kmeans_centroids(df, n_centroids=3, iters=2, init_strategy=strategy)

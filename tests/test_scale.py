@@ -576,81 +576,69 @@ def test_lineage_truncation_goes_through_durable_checkpoint():
     assert hits == []
 
 
-def test_fold_scorer_warns_at_production_k(spark):
-    """Explicit scorer='fold' must not be a silent footgun at its
-    intended shape: k >= 1024 centroids warns to use scorer='arrow'."""
-    import warnings
+def _ivf_self_topk(vecs, k):
+    from dftly_spark.ops import ivf_topk
 
-    from dftly_spark.ops.similarity import _warn_fold_at_scale, ivf_topk
+    queries = vecs.limit(2).withColumnRenamed("vec_id", "query_id")
+    return ivf_topk(vecs, queries, k=2, n_centroids=k, nprobe=1)
 
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        _warn_fold_at_scale(1024, "assign_cells")
-        _warn_fold_at_scale(16, "assign_cells")
-    assert len(w) == 1 and "scorer='arrow'" in str(w[0].message)
 
+def _centroid_consumers():
+    from dftly_spark.ops import cluster_balanced_sample, semantic_dedup_pairs, topic_assign
+
+    return {
+        "topic_assign": lambda vecs, k: topic_assign(vecs, n_topics=k),
+        "ivf_topk": _ivf_self_topk,
+        "semantic_dedup_pairs": lambda vecs, k: semantic_dedup_pairs(
+            vecs, n_centroids=k, threshold=0.9
+        ),
+        "cluster_balanced_sample": lambda vecs, k: cluster_balanced_sample(
+            vecs, n_cells=k, cap=5, kmeans_iters=1
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "consumer",
+    ["topic_assign", "ivf_topk", "semantic_dedup_pairs", "cluster_balanced_sample"],
+)
+def test_auto_scorer_resolves_by_centroid_count(spark, monkeypatch, caplog, consumer):
+    """Every centroid consumer stays on the hash-exact fold below the
+    centroid-count threshold and runs the Arrow matmul at or above it —
+    decided from the op's own centroid count, logged with its inputs."""
+    import logging
+
+    from dftly_spark.ops import dedup as _dedup
     from dftly_spark.ops import similarity as _sim
 
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
-    # lower the threshold so a laptop-sized corpus exercises the warn path
-    # end-to-end without building a 2048-cell index
-    orig = _sim._FOLD_WARN_CELLS
-    _sim._FOLD_WARN_CELLS = 4
-    try:
-        with warnings.catch_warnings(record=True) as w:
-            warnings.simplefilter("always")
-            ivf_topk(
-                vecs,
-                vecs.limit(2).withColumnRenamed("vec_id", "query_id"),
-                k=2,
-                n_centroids=4,
-                nprobe=1,
-                scorer="fold",
-            )
-    finally:
-        _sim._FOLD_WARN_CELLS = orig
-    assert any("ivf_topk" in str(x.message) for x in w)
-
-
-def test_auto_scorer_resolves_by_centroid_count(spark):
-    """scorer='auto' (the default) stays on the hash-exact fold at gate
-    scale and flips to the Arrow matmul at production k — resolved from
-    the op's own n_centroids, no user flag needed."""
-    import warnings
-
-    from dftly_spark.ops import similarity as _sim
-    from dftly_spark.ops.similarity import _resolve_scorer, topic_assign
-
-    assert _resolve_scorer("auto", 16, "t") == "fold"
-    assert _resolve_scorer("auto", _sim._FOLD_WARN_CELLS, "t") == "arrow"
-    assert _resolve_scorer("arrow", 4, "t") == "arrow"
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        assert _resolve_scorer("fold", _sim._FOLD_WARN_CELLS, "t") == "fold"
-    assert len(w) == 1
-
+    build = _centroid_consumers()[consumer]
+    # semantic_dedup_pairs truncates the lineage of its cell frame, which
+    # would hide the scorer from the plan: keep that frame inline here
+    monkeypatch.setattr(_dedup, "durable_checkpoint", lambda df, eager=True: df)
     vecs = spark.createDataFrame(
         [(i, [float(i % 5), 1.0, float(i % 2)]) for i in range(40)],
         "vec_id long, embedding array<float>",
     )
-    # end-to-end: below the threshold the default plan has NO Python
-    # stage; above it (threshold lowered) the Arrow scorer appears
-    orig = _sim._FOLD_WARN_CELLS
-    try:
-        small = topic_assign(vecs, n_topics=4)
-        assert "MapInPandas" not in small._jdf.queryExecution().toString()
-        _sim._FOLD_WARN_CELLS = 4
-        big = topic_assign(vecs, n_topics=4)
-        assert "MapInPandas" in big._jdf.queryExecution().toString()
-    finally:
-        _sim._FOLD_WARN_CELLS = orig
-    # same assignments either way on well-separated inputs
-    a = {r["vec_id"]: r["topic"] for r in small.collect()}
-    b = {r["vec_id"]: r["topic"] for r in big.collect()}
-    assert a == b
+    k = 4
+    # lower the threshold so a laptop-sized corpus takes both paths
+    # without building a 1024-cell index
+    got = {}
+    for threshold in (k + 1, k):
+        monkeypatch.setattr(_sim, "_ARROW_CELLS", threshold)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=_sim.__name__):
+            out = build(vecs, k)
+        arrow = k >= threshold
+        choice = "arrow" if arrow else "fold"
+        plan = out._jdf.queryExecution().toString()
+        assert ("MapInPandas" in plan) == arrow
+        assert any(
+            f"{choice} cell scorer at k={k} centroids" in r.getMessage()
+            for r in caplog.records
+        )
+        got[choice] = sorted(map(tuple, out.collect()))
+    # same result either way on well-separated inputs
+    assert got["arrow"] == got["fold"]
 
 
 def test_topk_recall_counts_overlap(spark):
