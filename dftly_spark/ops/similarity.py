@@ -17,12 +17,17 @@ deterministic left-to-right summation — reproducible across engines).
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from .scale import durable_checkpoint
 
 from ..sqlgen import portable_round
+
+if TYPE_CHECKING:
+    from pyspark import Broadcast
 
 
 def dot(a: SparkColumn, b: SparkColumn, dim: int | None = None) -> SparkColumn:
@@ -600,7 +605,7 @@ def _arrow_rows(pdf, vec_col: str, dim: int):
 
 
 def _assign_cells_arrow(
-    corpus: DataFrame, cents, *, id_col: str, vec_col: str
+    corpus: DataFrame, bc: Broadcast, *, id_col: str, vec_col: str
 ) -> DataFrame:
     """``(_id, _v, _cell)`` via an Arrow-batched numpy matmul.
 
@@ -623,8 +628,6 @@ def _assign_cells_arrow(
     NULL ``_cell``, as the fold's all-NULL score array does."""
     import pandas as pd
 
-    C = _cents_numpy(cents)
-    bc = corpus.sparkSession.sparkContext.broadcast(C)
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_schema = f"_id {id_type}, _v array<double>, _cell long"
 
@@ -644,7 +647,7 @@ def _assign_cells_arrow(
 
 
 def _probe_cells_arrow(
-    queries: DataFrame, cents, *, id_col: str, vec_col: str, nprobe: int
+    queries: DataFrame, bc: Broadcast, *, id_col: str, vec_col: str, nprobe: int
 ) -> DataFrame:
     """Exploded ``(_id, _v, _cell)`` rows — each query's ``nprobe`` nearest
     cells — via the same Arrow/numpy matmul as :func:`_assign_cells_arrow`.
@@ -657,14 +660,12 @@ def _probe_cells_arrow(
     import numpy as np
     import pandas as pd
 
-    C = _cents_numpy(cents)
-    np_probe = min(int(nprobe), C.shape[0])
-    bc = queries.sparkSession.sparkContext.broadcast(C)
     id_type = queries.schema[id_col].dataType.simpleString()
     out_schema = f"_id {id_type}, _v array<double>, _cell long"
 
     def probe(batches):
         Cm = bc.value
+        np_probe = min(int(nprobe), Cm.shape[0])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -688,7 +689,7 @@ def _probe_cells_arrow(
 _ARROW_CELLS = 1024
 
 
-def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | None:
+def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | Broadcast:
     """The one choice between the two cell scorers, made from the centroid
     count ``k`` alone and logged (INFO) with its inputs either way.
 
@@ -698,9 +699,10 @@ def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | None:
     eagerly checkpointed so the k×dim aggregation runs once at build time
     and every consumer plan sees a 1-row scan.  At or above it the Arrow
     matmul scores (30–160× on the SCALING.md probes) and the return value
-    is ``None``.  BLAS reorders the per-dot accumulation, so arrow scores
-    can differ from the fold's in the last ulp and flip effectively-tied
-    cells."""
+    is its centroid matrix as a numpy broadcast variable: one k×dim
+    driver pull, shared by every kernel the caller runs.  BLAS reorders
+    the per-dot accumulation, so arrow scores can differ from the fold's
+    in the last ulp and flip effectively-tied cells."""
     import logging
 
     choice = "arrow" if k >= _ARROW_CELLS else "fold"
@@ -709,7 +711,7 @@ def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | None:
         where, choice, k, _ARROW_CELLS,
     )
     if choice == "arrow":
-        return None
+        return cents.sparkSession.sparkContext.broadcast(_cents_numpy(cents))
     return _matrix_frame(cents).transform(durable_checkpoint)
 
 
@@ -746,8 +748,7 @@ def _with_cell_scores(
 
 def _assign(
     corpus: DataFrame,
-    cents: DataFrame,
-    cmat: DataFrame | None,
+    cmat: DataFrame | Broadcast,
     *,
     id_col: str,
     vec_col: str,
@@ -755,11 +756,11 @@ def _assign(
     v_alias: str,
 ) -> DataFrame:
     """``(id_alias, v_alias, _cell)`` on the scorer :func:`_centroid_matrix`
-    chose: the fold against ``cmat``, or the arrow matmul when it is
-    ``None``."""
-    if cmat is None:
+    chose: the fold against a ``cmat`` frame, or the arrow matmul against a
+    ``cmat`` broadcast."""
+    if not isinstance(cmat, DataFrame):
         return _assign_cells_arrow(
-            corpus, cents, id_col=id_col, vec_col=vec_col
+            corpus, cmat, id_col=id_col, vec_col=vec_col
         ).select(F.col("_id").alias(id_alias), F.col("_v").alias(v_alias), "_cell")
     c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, id_alias, v_alias)
     # Separate select so `_s` is computed once, not inlined per reference.
@@ -772,8 +773,7 @@ def _assign(
 
 def _probe(
     queries: DataFrame,
-    cents: DataFrame,
-    cmat: DataFrame | None,
+    cmat: DataFrame | Broadcast,
     *,
     id_col: str,
     vec_col: str,
@@ -782,9 +782,9 @@ def _probe(
     """``(_qid, _qv, _cell)`` — each query's ``nprobe`` nearest cells, one
     row per probe, on the scorer :func:`_centroid_matrix` chose (as
     :func:`_assign`)."""
-    if cmat is None:
+    if not isinstance(cmat, DataFrame):
         return _probe_cells_arrow(
-            queries, cents, id_col=id_col, vec_col=vec_col, nprobe=nprobe
+            queries, cmat, id_col=id_col, vec_col=vec_col, nprobe=nprobe
         ).select(F.col("_id").alias("_qid"), F.col("_v").alias("_qv"), "_cell")
     q = _with_cell_scores(queries, cmat, F.col(id_col), vec_col, "_qid", "_qv")
     # top-nprobe cells per query: sort (−score, cell-index) structs, slice.
@@ -822,7 +822,7 @@ def assign_cells(
     Arrow-batched numpy matmul (:func:`_assign_cells_arrow`) at or above,
     with its last-ulp score caveat."""
     return _assign(
-        corpus, cents, _centroid_matrix(cents, k, "assign_cells"),
+        corpus, _centroid_matrix(cents, k, "assign_cells"),
         id_col=id_col, vec_col=vec_col, id_alias="_id", v_alias="_v",
     )
 
@@ -925,14 +925,15 @@ def ivf_topk(
         kmeans_init=kmeans_init,
     )
     # one matrix for both sides: without the shared checkpoint the k×dim
-    # aggregation would execute twice and ride both plans as an Exchange
+    # aggregation would execute twice and ride both plans as an Exchange;
+    # on the arrow path, one driver pull and one broadcast serve both
     cmat = _centroid_matrix(cents, n_centroids, "ivf_topk")
     c = _assign(
-        corpus, cents, cmat,
+        corpus, cmat,
         id_col=id_col, vec_col=vec_col, id_alias="_cid", v_alias="_cv",
     )
     q = _probe(
-        queries, cents, cmat, id_col=query_id_col, vec_col=vec_col, nprobe=nprobe
+        queries, cmat, id_col=query_id_col, vec_col=vec_col, nprobe=nprobe
     )
     scored = c.join(F.broadcast(q), "_cell").select(
         F.col("_qid").alias(query_id_col),

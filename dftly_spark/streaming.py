@@ -210,52 +210,6 @@ def tumbling_agg(
     )
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str = "user_id",
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    watermark: str = "1 hour",
-    lookback: str = "30 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream join: right events within ``lookback``
-    BEFORE each left event, per key.
-
-    This is Spark's native stream-stream inner join with an event-time
-    range condition — the constraint is what lets the engine BOUND state:
-    each side buffers only ``watermark + lookback`` of history, then
-    evicts.  (Contrast :func:`~dftly_spark.ops.joins.asof_join_stream`,
-    which keeps one row per key forever and returns only the latest match;
-    this returns ALL matches in the window and needs no per-key ordering
-    assumption.)
-
-    Column names: left columns keep their names, right's ts comes back as
-    ``right_ts`` and its remaining columns with a ``right_`` prefix.
-    """
-    l = left.withWatermark(left_ts, watermark).alias("l")
-    r_renamed = right.select(
-        F.col(on).alias("__ron"),
-        F.col(right_ts).alias("right_ts"),
-        *[
-            F.col(c).alias(f"right_{c}")
-            for c in right.columns
-            if c not in (on, right_ts)
-        ],
-    )
-    r = r_renamed.withWatermark("right_ts", watermark).alias("r")
-    cond = (
-        (F.col(f"l.{on}") == F.col("r.__ron"))
-        & (F.col("right_ts") <= F.col(f"l.{left_ts}"))
-        & (
-            F.col("right_ts")
-            >= F.col(f"l.{left_ts}") - F.expr(f"INTERVAL {lookback}")
-        )
-    )
-    return l.join(r, cond, "inner").drop("__ron")
-
-
 def hopping_agg(
     df: DataFrame,
     ts_col: str,

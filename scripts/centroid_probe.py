@@ -63,15 +63,20 @@ def main() -> None:
     emb.count()
 
     from dftly_spark.ops.scale import durable_checkpoint
-    from dftly_spark.ops.similarity import _assign, _matrix_frame, choose_centroid_frame
+    from dftly_spark.ops.similarity import (
+        _assign, _cents_numpy, _matrix_frame, choose_centroid_frame,
+    )
 
     def assign(mode: str):
         cents = choose_centroid_frame(emb, n_centroids=K, strategy="first")
-        # the fold scores against the checkpointed 1-row matrix; no matrix
-        # (None) is the arrow matmul
-        cmat = _matrix_frame(cents).transform(durable_checkpoint) if mode == "fold" else None
+        # the fold scores against the checkpointed 1-row matrix frame, the
+        # arrow matmul against a broadcast numpy matrix
+        if mode == "fold":
+            cmat = _matrix_frame(cents).transform(durable_checkpoint)
+        else:
+            cmat = spark.sparkContext.broadcast(_cents_numpy(cents))
         return _assign(
-            emb, cents, cmat,
+            emb, cmat,
             id_col="vec_id", vec_col="embedding", id_alias="_id", v_alias="_v",
         )
 

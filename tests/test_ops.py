@@ -1367,6 +1367,35 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
     assert sd_a == sd_f and len(sd_a) > 0
 
 
+def test_ivf_topk_arrow_pulls_centroids_once(spark, emb, monkeypatch):
+    """On the arrow scorer, the corpus assignment and the query probing
+    share one driver pull of the centroid frame and one broadcast: at
+    k=65k x dim=1k each extra pull is another 0.5 GB on the driver."""
+    from pyspark import SparkContext
+
+    from dftly_spark.ops import ivf_topk, similarity
+
+    frame = type(emb)  # the concrete DataFrame class, which defines collect
+    pulls, broadcasts = [], []
+    collect, broadcast = frame.collect, SparkContext.broadcast
+
+    def counted_collect(df):
+        if df.columns == ["_cell", "_i", "_m"]:
+            pulls.append(df)
+        return collect(df)
+
+    def counted_broadcast(sc, value):
+        broadcasts.append(value)
+        return broadcast(sc, value)
+
+    q = emb.where(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), "embedding")
+    monkeypatch.setattr(similarity, "_ARROW_CELLS", 1)
+    monkeypatch.setattr(frame, "collect", counted_collect)
+    monkeypatch.setattr(SparkContext, "broadcast", counted_broadcast)
+    ivf_topk(emb, q, k=5, n_centroids=4, nprobe=2, strategy="first")
+    assert (len(pulls), len(broadcasts)) == (1, 1)
+
+
 def test_topic_assign_covers_corpus_no_shuffle(spark, emb):
     from dftly_spark.ops import topic_assign
 

@@ -1,0 +1,92 @@
+"""The scripts stay runnable: they parse, none shadows a standard-library
+module, what they import from the package exists, and the docs name only
+scripts that exist.  The last test runs ``scripts/profile_queries.py`` on
+two queries in the shared session."""
+
+import ast
+import importlib
+import importlib.util
+import pathlib
+import re
+import sys
+
+import pytest
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+SCRIPTS = sorted((ROOT / "scripts").glob("*.py"))
+SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: p.name)
+def test_script_parses_and_its_package_imports_exist(path):
+    # a script's directory heads sys.path for every script in it, so a
+    # stdlib name (say profile.py) would replace that module for all of
+    # them (pyspark imports cProfile, which imports profile)
+    assert path.stem not in sys.stdlib_module_names, f"{path.name} shadows the standard library"
+    tree = ast.parse(path.read_text(), str(path))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.startswith("dftly_spark"):
+                    importlib.import_module(alias.name)
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith("dftly_spark"):
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                assert hasattr(mod, alias.name) or importlib.util.find_spec(
+                    f"{node.module}.{alias.name}"
+                ), f"{path.name}: {node.module} has no {alias.name}"
+
+
+@pytest.mark.parametrize("doc", ["README.md", ".claude/skills/verify/SKILL.md"])
+def test_docs_name_existing_scripts(doc):
+    named = set(re.findall(r"scripts/([\w.]+\.py)", (ROOT / doc).read_text()))
+    assert named, f"{doc} names no script"
+    assert named <= {p.name for p in SCRIPTS}, f"{doc} names missing {named - {p.name for p in SCRIPTS}}"
+
+
+def test_profile_records_two_queries(spark, tmp_path):
+    """``profile()`` in the shared session: one full record per query, a
+    plan dump each, and every patch the tracer made is undone."""
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    import __spark_entry__ as entry
+    from dftly_spark.parser import Parser
+
+    spec = importlib.util.spec_from_file_location("profile_script", ROOT / "scripts/profile_queries.py")
+    profile = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(profile)
+
+    def patchable():
+        bindings = {(m.__name__, "parse_str"): m.parse_str for m in list(sys.modules.values())
+                    if getattr(m, "__name__", "").startswith("dftly_spark") and "parse_str" in m.__dict__}
+        return {
+            **bindings,
+            ("Parser", "__call__"): Parser.__dict__["__call__"],
+            ("Parser", "to_spark"): Parser.__dict__["to_spark"],
+            ("JavaClient", "send_command"): py4j.clientserver.JavaClient.send_command,
+            ("GatewayClient", "send_command"): py4j.java_gateway.GatewayClient.send_command,
+        }
+
+    before, metadata_len = patchable(), spark.conf.get("spark.sql.maxMetadataStringLength")
+    names = ["q01_project_arith", "q13_ts_diff_totals"]
+    recs = list(profile.profile(spark, SF_DIR, entry.queries(), names, 1, str(tmp_path), "0"))
+    assert patchable() == before
+    assert spark.conf.get("spark.sql.maxMetadataStringLength") == metadata_len
+    assert [r["query"] for r in recs] == names
+    keys = {
+        "query", "reps_s", "min_s", "median_s",
+        "strform_s", "parser_s", "nodes_s", "compile_s", "build_s", "build_py4j_calls",
+        "pre_action_jobs", "pre_action_task_s", "analysis_ms", "optimization_ms", "planning_ms",
+        "action_s", "action_jobs", "action_tasks", "action_run_s", "action_cpu_s",
+        "shuffle_write_mb", "spill_mb", "failed_tasks",
+        "n_exchange", "n_bcast_exchange", "n_bnl", "n_cartesian", "n_window", "n_codegen",
+        "n_python", "scan_cols_max",
+    }
+    for r in recs:
+        assert set(r) == keys, r
+        assert r["pre_action_jobs"] >= 1 and r["action_jobs"] >= 1
+        assert r["n_python"] == 0 and r["scan_cols_max"] > 0
+        assert len(r["reps_s"]) == 1 and r["min_s"] == r["median_s"] == r["reps_s"][0]
+        dump = (tmp_path / f"{r['query']}.txt").read_text()
+        assert dump.startswith("# PYTHONHASHSEED=0\n") and "# execution 1\n" in dump

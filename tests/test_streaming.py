@@ -157,37 +157,6 @@ def test_asof_join_stream_state_is_bounded(spark):
     assert [f.name for f in _ASOF_STATE.fields] == ["right_ts_us", "right_value"]
 
 
-def test_stream_interval_join_matches_batch(spark):
-    """Native watermarked stream-stream range join ≡ batch inequality join."""
-    from dftly_spark.streaming import stream_interval_join
-
-    ev = stream_table(spark, SF_DIR, "events")
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id")
-    )
-    out = stream_interval_join(
-        purch, clicks, on="user_id", watermark="365 days", lookback="30 minutes"
-    )
-    got = _run_to_memory(spark, out, "stream_ivj")
-    b = _batch_events(spark)
-    bp = b.where(F.col("event_type") == "purchase").alias("p")
-    bc = b.where(F.col("event_type") == "click").alias("c")
-    batch = bp.join(
-        bc,
-        (F.col("p.user_id") == F.col("c.user_id"))
-        & (F.col("c.ts") <= F.col("p.ts"))
-        & (F.col("c.ts") >= F.col("p.ts") - F.expr("INTERVAL 30 minutes")),
-    ).select(F.col("p.event_id").alias("event_id"), F.col("c.event_id").alias("click_id"))
-    assert {(r.event_id, r.right_click_id) for r in got.select("event_id", "right_click_id").collect()} == {
-        (r.event_id, r.click_id) for r in batch.collect()
-    }
-    # the physical plan is a stateful symmetric hash join, not a nested loop
-    assert out.isStreaming
-
-
 def test_stream_static_broadcast_enrichment(spark):
     """Stream-static dimension join: the static side broadcasts, the stream
     never shuffles — the standard streaming enrichment shape."""
