@@ -752,26 +752,16 @@ def _x67(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer node ids (customer = 2k, supplier = 2k+1): 8-byte shuffle
     # keys where strings would triple the exchanged bytes over the 1.2M
     # edges this graph produces
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
+    pairs = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
+        (F.col("o_custkey") * 2).alias("c"),
+        (F.col("l_suppkey") * 2 + 1).alias("s"),
     )
+    # one row per join row in each direction; the operator collapses the
+    # repeats
     edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
-    # structural guarantees of this graph: pairs is distinct and the two
-    # directions cannot collide (even vs odd ids), so the edge list is
-    # distinct; symmetrization means every node has an out-edge AND an
-    # in-edge (assume_full_in_degree drops the per-iteration nodes join —
-    # round 14).  Skipping the guard shuffles is sound here.
-    return pagerank(
-        edges, iters=5, damping=0.85, assume_distinct=True,
-        repair_dangling=False, assume_full_in_degree=True,
-    )
+    return pagerank(edges, iters=5, damping=0.85)
 
 
 _q(

@@ -348,14 +348,11 @@ def _x107(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import basket_pairs, triangle_count
 
     _prep(spark)
-    edges = (
-        basket_pairs(_t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
-        .select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
-        .distinct()
-    )
-    # the .distinct() above already canonicalized (item_a < item_b) and
-    # deduplicated across orders — skip the operator's second dedup
-    return triangle_count(edges, assume_distinct=True)
+    edges = basket_pairs(
+        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
+    ).select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
+    # a pair shared by many orders repeats; the operator collapses it
+    return triangle_count(edges)
 
 
 _q(
@@ -566,13 +563,11 @@ def _x111(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dftly_spark.ops import basket_pairs, kcore
 
     _prep(spark)
-    edges = (
-        basket_pairs(_t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey")
-        .select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
-        .distinct()
-    )
-    # distinct canonical pairs already — skip the operator's second dedup
-    return kcore(edges, 80, max_rounds=8, assume_distinct=True)
+    edges = basket_pairs(
+        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
+    ).select(F.col("item_a").alias("src"), F.col("item_b").alias("dst"))
+    # a pair shared by many orders repeats; the operator collapses it
+    return kcore(edges, 80, max_rounds=8)
 
 
 _q(

@@ -66,25 +66,17 @@ def _x123(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    pairs = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
+    pairs = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
+        (F.col("o_custkey") * 2).alias("c"),
+        (F.col("l_suppkey") * 2 + 1).alias("s"),
+        F.lit(1).alias("w"),
     )
+    # one weight-1 row per join row in each direction: the operator sums
+    # parallel edges, so an edge's weight is its lineitem count
     edges = pairs.select(
         F.col("c").alias("src"), F.col("s").alias("dst"), "w"
     ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"), "w"))
-    # grouped pairs are distinct and even/odd ids cannot collide across
-    # directions; symmetrization gives every node an out-edge and an
-    # in-edge (assume_full_in_degree drops the per-iteration nodes join)
-    return pagerank(
-        edges, iters=5, damping=0.85, weight="w",
-        assume_distinct=True, repair_dangling=False,
-        assume_full_in_degree=True,
-    )
+    return pagerank(edges, iters=5, damping=0.85, weight="w")
 
 
 _q(

@@ -76,7 +76,7 @@ from .dedup import (
     simhash_dup_pairs,
     word_shingles,
 )
-from .graph import kcore, pagerank, prepare_edges, triangle_count
+from .graph import kcore, pagerank, triangle_count
 from .quality import calibration_curve, expect, expect_observed, roc_auc, roc_auc_by_group, spearman_corr
 from .entity import fuzzy_index, fuzzy_join
 from .pca import pca_top_component
@@ -194,7 +194,7 @@ __all__ = [
     "melt", "pivot_wide", "pca_top_component", "basket_pairs", "cooccurrence_pmi", "distinct_counts", "line_filter", "dedup_lines",
     "ewma", "edit_distance_pairs", "mad_outliers", "expect", "expect_observed", "roc_auc", "roc_auc_by_group",
     "fit_scalar_quantizer", "quantize_embeddings", "quantization_fidelity",
-    "kcore", "pagerank", "prepare_edges", "triangle_count", "ranking_metrics", "pool_embeddings",
+    "kcore", "pagerank", "triangle_count", "ranking_metrics", "pool_embeddings",
     "fuzzy_join", "fuzzy_index", "pareto_front", "calibration_curve",
     "salted_join", "winsorize", "impute_nulls", "group_trend",
     "cms_build", "cms_estimate", "cms_join_size", "corr_matrix", "group_entropy",

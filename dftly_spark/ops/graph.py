@@ -16,6 +16,10 @@ Dangling nodes get SELF-LOOPS at prep time — the common production choice
 (it conserves total rank mass without a second pass over the rank frame per
 iteration), and the choice that keeps the update rule a single
 relational expression an external engine can replay verbatim.
+
+Every operator takes the edge list as it comes: it drops edges with a NULL
+endpoint, collapses duplicate edges and repairs what its algorithm needs
+itself.  No caller claim about the input selects a different path.
 """
 
 from __future__ import annotations
@@ -42,128 +46,31 @@ _EDGES_PER_BUILD_TASK = 150_000
 _KCORE_CHECKPOINT_EVERY = 3
 _PAGERANK_CHECKPOINT_EVERY = 8
 
-# Hash buckets for the opt-in ``validate=True`` sampled assertions: the
-# checked subset is rows whose key hashes into bucket 0, ~1/32 of keys.
-_VALIDATE_BUCKETS = 32
+# PageRank output rounding: per-destination float sums are partition-order
+# dependent at ~1e-15 per iteration, so ranks are cut to this many decimals.
+_PAGERANK_DECIMALS = 6
 
 
-def _validate_distinct(df: DataFrame, cols: list[str], claim: str) -> None:
-    """Debug guard for ``assume_distinct``: sampled duplicate detection.
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct undirected edges ``(_u, _v)`` with ``_u < _v``.
 
-    Hash-BUCKET sampling, not row sampling: every copy of a duplicated key
-    carries the same ``xxhash64``, so all copies land in the sampled bucket
-    together and any duplicate whose key falls in the bucket IS caught
-    (per-duplicate detection probability = 1/``_VALIDATE_BUCKETS``, vs an
-    independent-row sample which usually keeps only one copy and sees
-    nothing).  Runs one count job eagerly — debug mode, opt-in.
+    ``src != dst`` is NULL for a NULL endpoint, so the filter drops those
+    edges along with self-loops; ``least``/``greatest`` make ``(a, b)`` and
+    ``(b, a)`` one row before the dedup.
     """
-    sampled = df.where(
-        F.pmod(F.xxhash64(*cols), F.lit(_VALIDATE_BUCKETS)) == 0
-    ).select(*cols)
-    n_rows = sampled.count()
-    n_keys = sampled.distinct().count()
-    if n_rows != n_keys:
-        raise ValueError(
-            f"validate=True: {claim} is FALSE — the sampled hash bucket holds "
-            f"{n_rows} rows over {n_keys} distinct keys; drop the assume_* "
-            "flag (or fix the edge build) to avoid silently wrong results"
-        )
-
-
-def _validate_full_in_degree(e: DataFrame) -> None:
-    """Debug guard for ``assume_full_in_degree``: sampled in-edge check.
-
-    A node appears among destinations iff it appears among the SAME hash
-    bucket's destinations, so both sides of the anti-join are pre-filtered
-    to one bucket — the check costs two bucket scans, not a full dedup.
-    """
-    bucket = lambda c: F.pmod(F.xxhash64(c), F.lit(_VALIDATE_BUCKETS)) == 0  # noqa: E731
-    srcs = e.select(F.col("_src").alias("_n")).where(bucket(F.col("_n"))).distinct()
-    dsts = e.select(F.col("_dst").alias("_m")).where(bucket(F.col("_m"))).distinct()
-    missing = srcs.join(dsts, srcs["_n"] == dsts["_m"], "left_anti").count()
-    if missing:
-        raise ValueError(
-            f"validate=True: assume_full_in_degree is FALSE — {missing} sampled "
-            "node(s) have no in-edge; their ranks would silently drop from the "
-            "output.  Drop the flag (or symmetrize the graph)."
-        )
-
-
-def prepare_edges(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    weight: str | None = None,
-    assume_distinct: bool = False,
-    repair_dangling: bool = True,
-    validate: bool = False,
-) -> DataFrame:
-    """Distinct edges + self-loops for dangling nodes: ``(_src, _dst)``.
-
-    A node with no out-edges would leak rank mass every iteration; the
-    self-loop repair keeps the transition matrix stochastic with one
-    left-anti join, done ONCE before iterating.
-
-    Each guard costs a shuffle over the edge list, so callers that
-    GUARANTEE the property can skip it: ``assume_distinct=True`` when the
-    edge list is already deduplicated (e.g. built by a distinct),
-    ``repair_dangling=False`` when every node provably has an out-edge
-    (e.g. a symmetrized/bidirectional graph).  Wrong claims silently skew
-    ranks — only pass them when the property is structural.
-    """
-    if weight is not None:
-        e = edges.select(
-            F.col(src).alias("_src"), F.col(dst).alias("_dst"),
-            F.col(weight).cast("double").alias("_w"),
-        )
-        # the weighted update divides by out-strength: null or non-positive
-        # weights would null contributions (non-ANSI divide) or flip signs,
-        # silently destroying rank mass — drop them here (a node whose
-        # edges ALL drop becomes dangling and gets the self-loop repair)
-        e = e.where(F.col("_w") > 0)
-        if assume_distinct and validate:
-            _validate_distinct(e, ["_src", "_dst"], "assume_distinct (prepare_edges)")
-        if not assume_distinct:
-            # parallel weighted edges COMBINE (sum), the weighted analog of
-            # the unweighted distinct
-            e = e.groupBy("_src", "_dst").agg(F.sum("_w").alias("_w"))
-    else:
-        e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-        if assume_distinct and validate:
-            _validate_distinct(e, ["_src", "_dst"], "assume_distinct (prepare_edges)")
-        if not assume_distinct:
-            e = e.distinct()
-    if not repair_dangling:
-        return e
-    nodes = (
-        e.select(F.col("_src").alias("_n"))
-        .unionByName(e.select(F.col("_dst").alias("_n")))
+    return (
+        edges.where(F.col(src) != F.col(dst))
+        .select(F.least(src, dst).alias("_u"), F.greatest(src, dst).alias("_v"))
         .distinct()
     )
-    dangling = nodes.join(
-        e.select("_src").distinct(), nodes["_n"] == F.col("_src"), "left_anti"
-    )
-    loop_cols = [F.col("_n").alias("_src"), F.col("_n").alias("_dst")]
-    if weight is not None:
-        loop_cols.append(F.lit(1.0).alias("_w"))
-    return e.unionByName(dangling.select(*loop_cols))
 
 
-def triangle_count(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    assume_distinct: bool = False,
-    validate: bool = False,
-) -> DataFrame:
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node triangle counts: ``(node, triangles)`` for an undirected graph.
 
-    ``validate=True`` (debug mode) asserts an ``assume_distinct`` claim on
-    a hash-sampled bucket of the canonical edge frame before trusting it —
-    one extra count job; a violating edge list raises instead of silently
-    double-counting triangles.
+    Input contract: any edge list.  Direction is ignored, duplicate and
+    reversed-duplicate edges count once, and self-loops and edges with a
+    NULL endpoint are dropped.  A node in no triangle is absent.
 
     Degree-oriented wedge closing (the MapReduce-classic node-iterator++
     layout): edges are canonicalized undirected, then ORIENTED from the
@@ -178,27 +85,12 @@ def triangle_count(
     Counts are orientation-invariant, so any engine can replay them with
     plain id-ordered enumeration.
     """
-    ab = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b")).where(
-        F.col(src) != F.col(dst)
-    )
     # The canonical edge frame is referenced four times (two degree joins +
     # the orientation) and the oriented frame three times (both wedge sides
     # + the closer) — without lineage truncation the caller's whole edge
     # build re-executes (and re-broadcasts) once per reference, which is
     # both 5× the work and the actual heap blowup on small executors.
-    # assume_distinct: the caller GUARANTEES the edge list is already a
-    # distinct set of canonical (src < dst) undirected edges (e.g. it just
-    # ran .distinct() on basket-explode output) — the canonicalizing
-    # projection stays (row-local) but the dedup exchange is skipped.  A
-    # wrong claim double-counts triangles through parallel edges.
-    und = ab.select(
-        F.least("_a", "_b").alias("_u"), F.greatest("_a", "_b").alias("_v")
-    )
-    if assume_distinct and validate:
-        _validate_distinct(und, ["_u", "_v"], "assume_distinct (triangle_count)")
-    if not assume_distinct:
-        und = und.distinct()
-    und = durable_checkpoint(und, eager=False)
+    und = durable_checkpoint(_undirected(edges, src, dst), eager=False)
     deg = (
         und.select(F.col("_u").alias("_n"))
         .unionByName(und.select(F.col("_v").alias("_n")))
@@ -288,11 +180,13 @@ def kcore(
     dst: str = "dst",
     *,
     max_rounds: int = 8,
-    assume_distinct: bool = False,
-    validate: bool = False,
 ) -> DataFrame:
     """Nodes of the ``k``-core after ``max_rounds`` of peeling:
     ``(node, degree, converged)`` within the surviving subgraph.
+
+    Input contract: any edge list, read as an undirected simple graph.
+    Direction is ignored, duplicate and reversed-duplicate edges count
+    once, and self-loops and edges with a NULL endpoint are dropped.
 
     Iteratively removes nodes of degree < ``k`` (and their edges) from the
     undirected graph — the standard dense-subgraph / spam-farm / community
@@ -312,19 +206,7 @@ def kcore(
     ``_KCORE_CHECKPOINT_EVERY`` rounds (``durable_checkpoint``) so the
     iterated plan never re-executes the caller's build.
     """
-    ab = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b")).where(
-        F.col(src) != F.col(dst)
-    )
-    # assume_distinct: same contract as triangle_count — the edge list is
-    # already a distinct canonical undirected set, so the dedup exchange
-    # is skipped (a wrong claim inflates degrees via parallel edges).
-    und = ab.select(
-        F.least("_a", "_b").alias("_u"), F.greatest("_a", "_b").alias("_v")
-    )
-    if assume_distinct and validate:
-        _validate_distinct(und, ["_u", "_v"], "assume_distinct (kcore)")
-    if not assume_distinct:
-        und = und.distinct()
+    und = _undirected(edges, src, dst)
     # symmetric orientation: node degree == out-degree of _s
     e = durable_checkpoint(
         und.select(F.col("_u").alias("_s"), F.col("_v").alias("_t")).unionByName(
@@ -394,14 +276,17 @@ def pagerank(
     *,
     iters: int = 5,
     damping: float = 0.85,
-    decimals: int = 6,
     weight: str | None = None,
-    assume_distinct: bool = False,
-    repair_dangling: bool = True,
-    assume_full_in_degree: bool = False,
-    validate: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank: ``(node, rank)`` after ``iters`` rounds.
+
+    Input contract: any directed edge list.  Edges with a NULL endpoint
+    are dropped, and with ``weight`` so are edges whose weight is NULL or
+    not positive (they would null a contribution or flip its sign).
+    Duplicate edges collapse into one; weighted, their weights add up.
+    The nodes are the endpoints of the edges that remain.  A dangling
+    node (no out-edge) gets a self-loop of weight 1, and a node with no
+    in-edge is kept, with the teleport rank ``1 - damping``.
 
     Fixed iteration count (not convergence-test) keeps the computation a
     deterministic function of the edge list — replayable by any engine —
@@ -412,71 +297,73 @@ def pagerank(
     needs to meet its own lineage in a join (Spark 4.1's self-join
     disambiguation rejects ``frame.crossJoin(frame.agg(...))`` as
     ambiguous).  Divide by N outside if you want a distribution.  Output
-    is rounded to ``decimals`` because per-destination float sums are
-    partition-order dependent at ~1e-15 per iteration.
+    is rounded to ``_PAGERANK_DECIMALS`` because per-destination float sums
+    are partition-order dependent at ~1e-15 per iteration.
 
     Each round: contributions = rank/out_degree shipped along edges (edge
     join keyed on ``_src``) and one ``_dst``-keyed sum.  The out-degree is
     folded into the checkpointed edge frame once, so an iteration adds no
-    degree join.
-    ``validate=True`` (debug mode) asserts the ``assume_distinct`` /
-    ``assume_full_in_degree`` claims on hash-sampled buckets before
-    trusting them — a few extra count jobs; a violating edge list raises
-    instead of silently skewing ranks.
+    degree join, and no round joins the node list.
     Lineage truncation goes through ``durable_checkpoint``: set a session
     checkpoint dir (``spark.sparkContext.setCheckpointDir``) and every
     truncation becomes a durable ``checkpoint()`` that survives executor
     loss — the cluster-production mode (probed @8×, SCALING.md).
     """
-    # Loop-invariant frames are referenced in EVERY iteration's subtree;
-    # without truncation Spark re-executes prepare_edges (and the caller's
-    # whole edge build) once per reference.  Checkpoints materialize each
-    # once on first use (lazy, so plan introspection still works).
-    # Measured at sf0.1 (1.2M edges, iters=5): 27.5s -> 5.4s steady-state
-    # together with the degree fold below and integer node ids.
-    e = durable_checkpoint(
-        prepare_edges(
-            edges,
-            src,
-            dst,
-            weight=weight,
-            assume_distinct=assume_distinct,
-            repair_dangling=repair_dangling,
-            validate=validate,
+    ends = [F.col(src).alias("_src"), F.col(dst).alias("_dst")]
+    known = F.col("_src").isNotNull() & F.col("_dst").isNotNull()
+    if weight is not None:
+        # parallel weighted edges COMBINE (sum), the weighted analog of the
+        # unweighted distinct
+        e = (
+            edges.select(*ends, F.col(weight).cast("double").alias("_w"))
+            .where(known & (F.col("_w") > 0))
+            .groupBy("_src", "_dst")
+            .agg(F.sum("_w").alias("_w"))
+        )
+        out_w = F.col("_w")
+    else:
+        e = edges.select(*ends).where(known).distinct()
+        out_w = F.lit(1)
+    # The edge frame feeds the node frame and the edge join below, and the
+    # degree-annotated frame feeds EVERY iteration; without truncation
+    # Spark re-executes the caller's whole edge build once per reference.
+    # Checkpoints materialize each once on first use (lazy, so plan
+    # introspection still works).  Measured at sf0.1 (1.2M edges,
+    # iters=5): 27.5s -> 5.4s steady-state together with the degree fold
+    # below and integer node ids.
+    e = durable_checkpoint(e, eager=False)
+    # The node frame: one map-side-combined aggregation gives every node
+    # its out-degree (out-STRENGTH Σw when weighted), 0 for a dangling node
+    # (not a per-_src window, which would put a hub supernode's whole edge
+    # list on one reducer).
+    nodes = (
+        e.select(F.col("_src").alias("_n"), out_w.alias("_o"))
+        .unionByName(e.select(F.col("_dst").alias("_n"), F.lit(0).alias("_o")))
+        .groupBy("_n")
+        .agg(F.sum("_o").alias("_deg"))
+    )
+    if iters < 1:
+        return nodes.select(
+            F.col("_n").alias("node"),
+            portable_round(F.lit(1.0), _PAGERANK_DECIMALS).alias("rank"),
+        )
+    # The degree-annotated edge frame: a dangling node matches no edge in
+    # the LEFT join and becomes a self-loop of weight 1 and degree 1, so
+    # every node is a ``_src`` here.  A weighted contribution ships
+    # rank·w/strength.  SHUFFLE_HASH builds the node side and streams the
+    # edges; a sort-merge join would sort every edge (x67 at sf0.1,
+    # local[4] on 4 vCPUs, warm medians: 4.4 -> 4.0 s).
+    dangling = F.col("_dst").isNull()
+    e2 = durable_checkpoint(
+        nodes.hint("shuffle_hash").join(e, nodes["_n"] == e["_src"], "left").select(
+            F.col("_n").alias("_src"),
+            F.coalesce(F.col("_dst"), F.col("_n")).alias("_dst"),
+            *([F.coalesce(F.col("_w"), F.lit(1.0)).alias("_w")] if weight is not None else []),
+            F.when(dangling, F.lit(1)).otherwise(F.col("_deg")).alias("_deg"),
         ),
         eager=False,
     )
-    if assume_full_in_degree and validate:
-        _validate_full_in_degree(e)
-    if iters < 1:
-        return (
-            e.select(F.col("_src").alias("node")).distinct()
-            .select("node", portable_round(F.lit(1.0), decimals).alias("rank"))
-        )
-    # out-degree folded INTO the edge frame ONCE (map-side-combined count +
-    # one join here, instead of a count join inside every iteration; not a
-    # per-_src window, which would put a hub supernode's whole edge list on
-    # one reducer).  Weighted: out-STRENGTH (Σw) replaces the count, and a
-    # contribution ships rank·w/strength — the weighted-PageRank update.
-    if weight is not None:
-        outdeg = e.groupBy("_src").agg(F.sum("_w").alias("_deg"))
-    else:
-        outdeg = e.groupBy("_src").agg(F.count(F.lit(1)).alias("_deg"))
-    e2 = durable_checkpoint(e.join(outdeg, "_src"), eager=False)
-    # ``assume_full_in_degree=True``: the caller GUARANTEES every node has
-    # at least one in-edge (structural on symmetrized graphs — both trade-
-    # graph queries).  Then every node appears in every iteration's
-    # contribution sum, so the per-iteration ``nodes`` LEFT JOIN that only
-    # exists to re-attach in-edge-less nodes (and the nodes frame build
-    # itself) is a no-op — dropping it removes one join + one node-frame
-    # exchange per iteration (round-14: plan 32 → 21 Exchanges at x67's
-    # shape).  A wrong claim silently drops in-edge-less nodes from the
-    # output.
-    nodes = None
-    if not assume_full_in_degree:
-        nodes = durable_checkpoint(
-            e.select(F.col("_src").alias("_n")).distinct(), eager=False
-        )
+    teleport = F.lit(1.0 - damping)
     ranks = None
     for i in range(iters):
         if ranks is None:
@@ -494,11 +381,13 @@ def pagerank(
             # column names per join side: the iterated frames all share
             # lineage with `e`, and Spark's self-join resolution is
             # ambiguous for repeated attribute names across iterations.
+            # A node with no in-edge has no rank row: the LEFT join gives
+            # it the teleport rank it always has after round 1.
             r_side = ranks.hint("shuffle_hash").select(
                 F.col("_n").alias("_rsrc"), F.col("_r").alias("_rval")
             )
-            rval = F.col("_rval")
-            contrib_rows = e2.join(r_side, e2["_src"] == r_side["_rsrc"])
+            rval = F.coalesce(F.col("_rval"), teleport)
+            contrib_rows = e2.join(r_side, e2["_src"] == r_side["_rsrc"], "left")
         contrib = (
             contrib_rows.select(
                 F.col("_dst").alias("_cn"),
@@ -511,24 +400,16 @@ def pagerank(
             .groupBy("_cn")
             .agg(F.sum("_c").alias("_sum"))
         )
-        if nodes is None:
-            ranks = contrib.select(
-                F.col("_cn").alias("_n"),
-                (F.lit(1.0 - damping) + damping * F.col("_sum")).alias("_r"),
-            )
-        else:
-            ranks = nodes.join(
-                contrib, nodes["_n"] == contrib["_cn"], "left"
-            ).select(
-                "_n",
-                (
-                    F.lit(1.0 - damping)
-                    + damping * F.coalesce(F.col("_sum"), F.lit(0.0))
-                ).alias("_r"),
-            )
+        ranks = contrib.select(
+            F.col("_cn").alias("_n"), (teleport + damping * F.col("_sum")).alias("_r")
+        )
         if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
             ranks = durable_checkpoint(ranks, eager=False)
-    return ranks.select(
+    # one LEFT join from the node list restores the nodes with no in-edge;
+    # the list comes from the cached ``e2``, not from a second aggregation
+    # over the edges
+    node_list = e2.select(F.col("_src").alias("_n")).distinct()
+    return node_list.join(ranks, "_n", "left").select(
         F.col("_n").alias("node"),
-        portable_round(F.col("_r"), decimals).alias("rank"),
+        portable_round(F.coalesce(F.col("_r"), teleport), _PAGERANK_DECIMALS).alias("rank"),
     )

@@ -23,7 +23,8 @@ untraced; ``--reps 0`` skips the timing.  A record holds:
   (``action_s``, ``action_jobs``, ``action_tasks``, ``action_run_s``,
   ``action_cpu_s``, ``shuffle_write_mb``, ``spill_mb``; ``failed_tasks``
   counts both sides);
-* plan-shape counters of the executed plan (:func:`plan_shape`).
+* plan-shape counters of the executed plan (:func:`plan_shape`); the
+  codegen stages are counted in the noop write's final plan.
 
 A query that raises gets ``{"query", "error"}`` instead.
 
@@ -60,8 +61,11 @@ _PLAN_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+")
 _METADATA_LEN = "spark.sql.maxMetadataStringLength"
 
 
-def plan_shape(plan: str) -> dict[str, int]:
-    """Plan-shape counters of one physical plan string."""
+def plan_shape(plan: str, final: str) -> dict[str, int]:
+    """Plan-shape counters of one physical plan string.  ``n_codegen``
+    reads ``final``, the action's described final plan: under AQE the
+    executed plan before the action is the initial plan, which has no
+    codegen stages yet."""
     # ReadSchema: struct<a:int,b:double,...> — count the widest scan
     widths = [s.count(":") for s in re.findall(r"ReadSchema: struct<([^>]*)>", plan)]
     return {
@@ -72,7 +76,7 @@ def plan_shape(plan: str) -> dict[str, int]:
         "n_bnl": plan.count("BroadcastNestedLoopJoin"),
         "n_cartesian": plan.count("CartesianProduct"),
         "n_window": len(re.findall(r"\bWindow\b", plan)),
-        "n_codegen": len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))),
+        "n_codegen": len(set(re.findall(r"\[codegen id : (\d+)\]", final))),
         "n_python": plan.count("BatchEvalPython") + plan.count("ArrowEvalPython"),
         "scan_cols_max": max(widths, default=0),
     }
@@ -102,8 +106,9 @@ def _executed_plan(spark, df) -> str:
         spark.conf.set(_METADATA_LEN, metadata_len)
 
 
-def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str]:
-    """One traced build + plan + noop action: (layer split, executed plan)."""
+def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, str]:
+    """One traced build + plan + noop action: (layer split, executed plan,
+    the noop write's described final plan)."""
     sc = spark.sparkContext
     group = f"profile:{name}"
     tr = Tracer()
@@ -114,11 +119,13 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str]:
             df = build(spark, sf_dir)
         pre = list(sc.statusTracker().getJobIdsForGroup(group))
         plan = _executed_plan(spark, df)
+        last = max((e.executionId() for e in _sql_executions(spark)), default=-1)
         with tr.span("spark.exec"):
             _noop(df)
     finally:
         tr.uninstall()
         sc._jsc.clearJobGroup()
+    final = _sql_executions(spark, last)[0].physicalPlanDescription()
     everything = sc.statusTracker().getJobIdsForGroup(group)
     pre_t = stage_totals(spark, pre)
     act = stage_totals(spark, [j for j in everything if j not in pre])
@@ -142,7 +149,7 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str]:
         "spill_mb": act.spill_mb,
         "failed_tasks": act.failed_tasks + pre_t.failed_tasks,
     }
-    return split, plan
+    return split, plan, final
 
 
 def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, seed=None):
@@ -150,7 +157,7 @@ def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, see
     for name in names:
         try:
             last = max((e.executionId() for e in _sql_executions(spark)), default=-1) if plans else -1
-            split, plan = _traced(spark, name, queries[name], sf_dir)
+            split, plan, final = _traced(spark, name, queries[name], sf_dir)
             if plans:
                 with open(os.path.join(plans, f"{name}.txt"), "w") as fh:
                     fh.write(f"# PYTHONHASHSEED={seed}\n")
@@ -171,7 +178,7 @@ def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, see
             "min_s": min(runs, default=None),
             "median_s": statistics.median(runs) if runs else None,
             **split,
-            **plan_shape(plan),
+            **plan_shape(plan, final),
         }
         yield {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
 

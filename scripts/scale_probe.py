@@ -292,9 +292,7 @@ def main() -> None:
     def _pagerank(c: int):
         if _os.environ.get("SPARK_GRAFT_PR_CKPT_DIR"):
             spark.sparkContext.setCheckpointDir(_os.environ["SPARK_GRAFT_PR_CKPT_DIR"])
-        return pagerank(
-            _pr_edges(c), iters=5, assume_distinct=True, repair_dangling=False
-        )
+        return pagerank(_pr_edges(c), iters=5)
 
     OPS["pagerank"] = lambda d, e, c: _pagerank(c)
     def _tri_edges(c: int):

@@ -1,11 +1,13 @@
 """The scripts stay runnable: they parse, none shadows a standard-library
-module, what they import from the package exists, and the docs name only
-scripts that exist.  The last test runs ``scripts/profile_queries.py`` on
-two queries in the shared session."""
+module, what they import from the package exists, the keyword arguments
+they pass to it are its parameters, and the docs name only scripts that
+exist.  The last test runs ``scripts/profile_queries.py`` on two queries in
+the shared session."""
 
 import ast
 import importlib
 import importlib.util
+import inspect
 import pathlib
 import re
 import sys
@@ -35,6 +37,28 @@ def test_script_parses_and_its_package_imports_exist(path):
                 assert hasattr(mod, alias.name) or importlib.util.find_spec(
                     f"{node.module}.{alias.name}"
                 ), f"{path.name}: {node.module} has no {alias.name}"
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: p.name)
+def test_script_keywords_are_package_parameters(path):
+    # a keyword a function does not take raises TypeError only when the
+    # script runs; probes run rarely, so check each call statically
+    tree = ast.parse(path.read_text(), str(path))
+    bound = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("dftly_spark"):
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if callable(getattr(mod, alias.name, None)):
+                    bound[alias.asname or alias.name] = getattr(mod, alias.name)
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Name) and node.func.id in bound):
+            continue
+        params = inspect.signature(bound[node.func.id]).parameters
+        if any(p.kind is inspect.Parameter.VAR_KEYWORD for p in params.values()):
+            continue
+        unknown = [k.arg for k in node.keywords if k.arg is not None and k.arg not in params]
+        assert not unknown, f"{path.name}:{node.lineno}: {node.func.id}() takes no {unknown}"
 
 
 @pytest.mark.parametrize("doc", ["README.md", ".claude/skills/verify/SKILL.md"])
@@ -86,7 +110,7 @@ def test_profile_records_two_queries(spark, tmp_path):
     for r in recs:
         assert set(r) == keys, r
         assert r["pre_action_jobs"] >= 1 and r["action_jobs"] >= 1
-        assert r["n_python"] == 0 and r["scan_cols_max"] > 0
+        assert r["n_python"] == 0 and r["scan_cols_max"] > 0 and r["n_codegen"] >= 1
         assert len(r["reps_s"]) == 1 and r["min_s"] == r["median_s"] == r["reps_s"][0]
         dump = (tmp_path / f"{r['query']}.txt").read_text()
         assert dump.startswith("# PYTHONHASHSEED=0\n") and "# execution 1\n" in dump
