@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dftly_spark import Parser
+from dftly_spark.io import normalize_event_ts, read_table
 from dftly_spark.sqlgen import exact_sum, portable_round
 
 
@@ -26,13 +27,11 @@ def _prep(spark: SparkSession) -> None:
 def _t(
     spark: SparkSession, sf_dir: str, name: str, *, fan_out: bool = False
 ) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_table(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         # events.ts has shipped as both TIMESTAMP(NANOS) (readable only as
         # nanos-long, legacy conf set in _prep) and TIMESTAMP(MICROS)
         # (reads as timestamp_ntz); normalize either to plain timestamp.
-        from dftly_spark.io import normalize_event_ts
-
         df = normalize_event_ts(df)
     if fan_out:
         df = _fan_out_scan(df, name)

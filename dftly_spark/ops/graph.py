@@ -281,8 +281,10 @@ def pagerank(
     """Fixed-iteration PageRank: ``(node, rank)`` after ``iters`` rounds.
 
     Input contract: any directed edge list.  Edges with a NULL endpoint
-    are dropped, and with ``weight`` so are edges whose weight is NULL or
-    not positive (they would null a contribution or flip its sign).
+    are dropped, and with ``weight`` so are edges whose weight is NULL,
+    NaN or not positive (they would null a contribution, spread NaN, or
+    flip its sign; Spark orders NaN above every number, so ``> 0`` alone
+    keeps it).
     Duplicate edges collapse into one; weighted, their weights add up.
     The nodes are the endpoints of the edges that remain.  A dangling
     node (no out-edge) gets a self-loop of weight 1, and a node with no
@@ -316,7 +318,7 @@ def pagerank(
         # unweighted distinct
         e = (
             edges.select(*ends, F.col(weight).cast("double").alias("_w"))
-            .where(known & (F.col("_w") > 0))
+            .where(known & (F.col("_w") > 0) & ~F.isnan("_w"))
             .groupBy("_src", "_dst")
             .agg(F.sum("_w").alias("_w"))
         )

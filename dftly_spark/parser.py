@@ -16,7 +16,9 @@ Behavioral mirror of the reference entry points
 
 from __future__ import annotations
 
+import threading
 import warnings
+from contextlib import contextmanager
 from pathlib import Path
 from typing import Any
 
@@ -39,6 +41,51 @@ def _load_yaml(text: str) -> Any:
     if _yaml is None:
         raise ImportError("pyyaml is required to parse YAML configuration strings")
     return _yaml.load(text, Loader=_YAML_LOADER)
+
+
+_lowering = threading.local()
+
+
+def _install_call_site_gate() -> None:
+    """Let :func:`_no_call_site` switch off PySpark's DataFrame call-site
+    capture for the calling thread.
+
+    Every ``Column`` method and ``functions`` call PySpark wraps with
+    ``pyspark.errors.utils._with_origin`` asks ``is_debugging_enabled()``
+    and, when it is true, walks the Python stack and sets and clears the
+    call site on the JVM: five py4j round trips on top of the call itself.
+    Lowering a dftly node makes many such calls, and the call site they
+    would record points into ``dftly_spark/nodes``, never at the caller's
+    code.  The wrapper answers false only on a thread that is lowering;
+    every other thread keeps PySpark's answer.  A PySpark without the hook
+    (before 4.0) is left alone.
+    """
+    from pyspark.errors import utils
+
+    enabled = getattr(utils, "is_debugging_enabled", None)
+    if enabled is None:
+        return
+
+    def is_debugging_enabled() -> bool:
+        return not getattr(_lowering, "active", False) and enabled()
+
+    utils.is_debugging_enabled = is_debugging_enabled
+
+
+_install_call_site_gate()
+
+
+@contextmanager
+def _no_call_site():
+    """Lower without call-site capture on this thread (see
+    :func:`_install_call_site_gate`); the previous state comes back on
+    exit, also when lowering raises."""
+    active = getattr(_lowering, "active", False)
+    _lowering.active = True
+    try:
+        yield
+    finally:
+        _lowering.active = active
 
 
 def _make_ctx(schema, uint64_decimal: bool = False) -> LoweringContext:
@@ -167,18 +214,20 @@ class Parser:
         true [0, 2**64-1] range (strict casts of out-of-range values raise;
         ``::?`` nulls them) instead of the default caveated ``bigint``.
         """
-        ctx = _make_ctx(schema, uint64_decimal)
-        return {
-            name: node.to_column(ctx).alias(name)
-            for name, node in cls.to_nodes(data).items()
-        }
+        with _no_call_site():
+            ctx = _make_ctx(schema, uint64_decimal)
+            return {
+                name: node.to_column(ctx).alias(name)
+                for name, node in cls.to_nodes(data).items()
+            }
 
     @classmethod
     def expr_to_spark(
         cls, expr: str, schema=None, uint64_decimal: bool = False
     ) -> SparkColumn:
         """Parse a single expression string into one unaliased Spark Column."""
-        return cls()(expr).to_column(_make_ctx(schema, uint64_decimal))
+        with _no_call_site():
+            return cls()(expr).to_column(_make_ctx(schema, uint64_decimal))
 
     # -- DataFrame conveniences -------------------------------------------
 

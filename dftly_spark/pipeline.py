@@ -192,7 +192,7 @@ def _read_source(spark: SparkSession, src: dict, sf_dir: str | None) -> DataFram
             from .streaming import stream_table
 
             return stream_table(spark, sf_dir, src["table"])
-        df = spark.read.parquet(f"{sf_dir}/{src['table']}.parquet")
+        df = read_table(spark, f"{sf_dir}/{src['table']}.parquet")
         if src["table"] == "events":
             df = normalize_event_ts(df)
         return df

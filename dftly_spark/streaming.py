@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .ops.scale import durable_checkpoint
 from pyspark.sql import functions as F
 
+from .io import normalize_event_ts, read_table
 from .sqlgen import portable_round
 
 from .parser import Parser
@@ -36,16 +37,16 @@ from .parser import Parser
 def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File-source stream over a testdata parquet table (one-file-per-batch).
 
-    Uses the batch reader's schema; ``events.ts`` (TIMESTAMP(NANOS) parquet)
-    is read as a long and converted with exact integer division, mirroring
-    the batch path.
+    Uses the batch reader's schema, from the parquet footer (no job);
+    ``events.ts`` (TIMESTAMP(NANOS) parquet) is read as a long and
+    converted with exact integer division, mirroring the batch path.
     """
     import os
     import tempfile
 
     path = f"{sf_dir}/{name}.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    schema = read_table(spark, path).schema
     if os.path.isfile(path):
         # The file source requires a directory; expose single-file testdata
         # tables through a symlink directory (read-only, no copy).
@@ -54,8 +55,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         path = d
     df = spark.readStream.schema(schema).format("parquet").load(path)
     if name == "events":
-        from .io import normalize_event_ts
-
         df = normalize_event_ts(df)
     return df
 

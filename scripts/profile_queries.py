@@ -23,16 +23,19 @@ untraced; ``--reps 0`` skips the timing.  A record holds:
   (``action_s``, ``action_jobs``, ``action_tasks``, ``action_run_s``,
   ``action_cpu_s``, ``shuffle_write_mb``, ``spill_mb``; ``failed_tasks``
   counts both sides);
-* plan-shape counters of the executed plan (:func:`plan_shape`); the
-  codegen stages are counted in the noop write's final plan.
+* plan-shape counters (:func:`plan_shape`): exchanges, joins and windows
+  over the final plans of every SQL execution the query fired (its
+  pre-action jobs and the noop write), the codegen stages in the noop
+  write's final plan.
 
 A query that raises gets ``{"query", "error"}`` instead.
 
 ``--plans DIR`` writes ``<DIR>/<query>.txt`` from the traced run: the
 physical plan of every SQL execution it fired, in order (the builder's
 pre-action jobs, then the noop write), each as its final adaptive plan,
-with expression ids (``#123``) and exchange ``plan_id``s stripped, so two
-trees' dumps compare with one ``diff -r``.  Plans follow Python's
+with expression ids (``#123``), exchange ``plan_id``s and RDD ids
+(``MapPartitionsRDD[253]``, which count every RDD the session made
+before) stripped, so two trees' dumps compare with one ``diff -r``.  Plans follow Python's
 string-hash seed (set iteration order reaches some column orders), so
 ``--plans`` refuses to run unless ``PYTHONHASHSEED`` is set, and each dump
 records the seed.  Run one query per process for cold-session plans.
@@ -54,28 +57,42 @@ if __name__ == "__main__":
 
 from perfbench.spans import Tracer, plan_phases_ms, stage_totals  # noqa: E402
 
-_PLAN_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+")
+_PLAN_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])")
 #: scan nodes cut metadata values (ReadSchema included) at 100 chars by
 #: default, which hides exactly the unpruned scans ``scan_cols_max`` is
 #: for; the cut is fixed when the node is planned
 _METADATA_LEN = "spark.sql.maxMetadataStringLength"
 
 
-def plan_shape(plan: str, final: str) -> dict[str, int]:
-    """Plan-shape counters of one physical plan string.  ``n_codegen``
-    reads ``final``, the action's described final plan: under AQE the
-    executed plan before the action is the initial plan, which has no
-    codegen stages yet."""
+def _final_tree(description: str) -> str:
+    """The operator tree at the top of one execution's formatted plan
+    description; under AQE only its ``Final Plan`` part.  Subquery trees,
+    below the operator details, are not read."""
+    tree = description.split("\n\n", 1)[0]
+    return tree.split("== Initial Plan ==", 1)[0]
+
+
+def plan_shape(plan: str, finals: list[str], final: str) -> dict[str, int]:
+    """Plan-shape counters of one query.  Exchanges, joins and windows are
+    counted over ``finals``, the final plans of every SQL execution the
+    query fired: the executed plan before the action is, under AQE, the
+    initial plan of the last execution only, which leaves out what earlier
+    (checkpointed) executions ran and the broadcasts AQE picks at run time.
+    ``n_codegen`` reads ``final``, the action's described final plan.
+    ``n_python`` and ``scan_cols_max`` read ``plan``, the executed plan
+    with uncut metadata."""
+    trees = "\n".join(map(_final_tree, finals))
     # ReadSchema: struct<a:int,b:double,...> — count the widest scan
     widths = [s.count(":") for s in re.findall(r"ReadSchema: struct<([^>]*)>", plan)]
     return {
-        # \bExchange\b cannot match inside "BroadcastExchange" (no word
-        # boundary between 't' and 'E'), so the count is shuffle-only as is
-        "n_exchange": len(re.findall(r"\bExchange\b", plan)),
-        "n_bcast_exchange": plan.count("BroadcastExchange"),
-        "n_bnl": plan.count("BroadcastNestedLoopJoin"),
-        "n_cartesian": plan.count("CartesianProduct"),
-        "n_window": len(re.findall(r"\bWindow\b", plan)),
+        # \bExchange\b cannot match inside "BroadcastExchange" or
+        # "ReusedExchange" (no word boundary before the 'E'), so the count
+        # is of shuffles that ran
+        "n_exchange": len(re.findall(r"\bExchange\b", trees)),
+        "n_bcast_exchange": trees.count("BroadcastExchange"),
+        "n_bnl": trees.count("BroadcastNestedLoopJoin"),
+        "n_cartesian": trees.count("CartesianProduct"),
+        "n_window": len(re.findall(r"\bWindow\b", trees)),
         "n_codegen": len(set(re.findall(r"\[codegen id : (\d+)\]", final))),
         "n_python": plan.count("BatchEvalPython") + plan.count("ArrowEvalPython"),
         "scan_cols_max": max(widths, default=0),
@@ -106,11 +123,17 @@ def _executed_plan(spark, df) -> str:
         spark.conf.set(_METADATA_LEN, metadata_len)
 
 
-def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, str]:
+def _last_execution(spark) -> int:
+    return max((e.executionId() for e in _sql_executions(spark)), default=-1)
+
+
+def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, list[str], str]:
     """One traced build + plan + noop action: (layer split, executed plan,
-    the noop write's described final plan)."""
+    the described final plan of every SQL execution it fired, in order,
+    and of the noop write)."""
     sc = spark.sparkContext
     group = f"profile:{name}"
+    start = _last_execution(spark)
     tr = Tracer()
     try:
         tr.install()
@@ -119,13 +142,15 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, str]:
             df = build(spark, sf_dir)
         pre = list(sc.statusTracker().getJobIdsForGroup(group))
         plan = _executed_plan(spark, df)
-        last = max((e.executionId() for e in _sql_executions(spark)), default=-1)
+        last = _last_execution(spark)
         with tr.span("spark.exec"):
             _noop(df)
     finally:
         tr.uninstall()
         sc._jsc.clearJobGroup()
-    final = _sql_executions(spark, last)[0].physicalPlanDescription()
+    execs = _sql_executions(spark, start)
+    finals = [e.physicalPlanDescription() for e in execs]
+    final = next(d for e, d in zip(execs, finals) if e.executionId() > last)
     everything = sc.statusTracker().getJobIdsForGroup(group)
     pre_t = stage_totals(spark, pre)
     act = stage_totals(spark, [j for j in everything if j not in pre])
@@ -149,21 +174,20 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, str]:
         "spill_mb": act.spill_mb,
         "failed_tasks": act.failed_tasks + pre_t.failed_tasks,
     }
-    return split, plan, final
+    return split, plan, finals, final
 
 
 def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, seed=None):
     """Yield one record per name in ``names`` (see the module docstring)."""
     for name in names:
         try:
-            last = max((e.executionId() for e in _sql_executions(spark)), default=-1) if plans else -1
-            split, plan, final = _traced(spark, name, queries[name], sf_dir)
+            split, plan, finals, final = _traced(spark, name, queries[name], sf_dir)
             if plans:
                 with open(os.path.join(plans, f"{name}.txt"), "w") as fh:
                     fh.write(f"# PYTHONHASHSEED={seed}\n")
-                    for n, ex in enumerate(_sql_executions(spark, last), 1):
+                    for n, description in enumerate(finals, 1):
                         fh.write(f"\n# execution {n}\n")
-                        fh.write(_PLAN_IDS.sub("", ex.physicalPlanDescription()))
+                        fh.write(_PLAN_IDS.sub("", description))
             runs = []
             for _ in range(reps):
                 t0 = time.perf_counter()
@@ -178,7 +202,7 @@ def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, see
             "min_s": min(runs, default=None),
             "median_s": statistics.median(runs) if runs else None,
             **split,
-            **plan_shape(plan, final),
+            **plan_shape(plan, finals, final),
         }
         yield {k: round(v, 4) if isinstance(v, float) else v for k, v in rec.items()}
 

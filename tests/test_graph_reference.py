@@ -3,7 +3,7 @@
 Each operator takes any edge list (see its docstring for the contract), so
 the inputs here are small adversarial lists: duplicate and
 reversed-duplicate edges, self-loops, NULL endpoints, dangling nodes, nodes
-with no in-edge, NULL or non-positive weights, and an empty input.  The
+with no in-edge, NULL, NaN or non-positive weights, and an empty input.  The
 references spell out the contract in the plainest code: no dedup trick,
 no join, no early exit.
 """
@@ -53,15 +53,15 @@ CASES = {
 
 
 def ref_pagerank(rows, iters: int, weighted: bool, damping: float = 0.85) -> dict:
-    """Unnormalized PageRank of the contract: NULL endpoints (and NULL or
-    non-positive weights) dropped, parallel edges merged, each dangling
+    """Unnormalized PageRank of the contract: NULL endpoints (and NULL, NaN
+    or non-positive weights) dropped, parallel edges merged, each dangling
     node given a weight-1 self-loop, every node kept."""
     w = {}
     for s, d, wt in rows:
         if s is None or d is None:
             continue
         if weighted:
-            if wt is None or wt <= 0:
+            if wt is None or math.isnan(wt) or wt <= 0:
                 continue
             w[s, d] = w.get((s, d), 0.0) + wt
         else:
@@ -155,6 +155,18 @@ def test_pagerank_drops_null_endpoints(spark):
     got = {r["node"]: r["rank"] for r in pagerank(edges, iters=3).collect()}
     assert None not in got
     _assert_ranks(got, ref_pagerank([(s, d, None) for s, d in rows], 3, weighted=False))
+
+
+def test_pagerank_drops_nan_weights(spark):
+    """Spark orders NaN above every number, so ``w > 0`` alone keeps a NaN
+    weight, whose NaN then spreads to every rank."""
+    from dftly_spark.ops import pagerank
+
+    rows = [(1, 2, 1.0), (2, 1, 1.0), (2, 3, float("nan")), (3, 1, 1.0)]
+    edges = spark.createDataFrame(rows, SCHEMA)
+    got = {r["node"]: r["rank"] for r in pagerank(edges, iters=2, weight="w").collect()}
+    assert not any(math.isnan(r) for r in got.values()), got
+    _assert_ranks(got, ref_pagerank(rows, 2, weighted=True))
 
 
 def test_kcore_matches_reference(edges):

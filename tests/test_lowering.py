@@ -292,3 +292,96 @@ def test_regex_portable_syntax_does_not_warn(pattern):
 def test_regex_unicode_class_parity(run1):
     expr = {"regex_extract": {"pattern": {"literal": r"\p{L}+"}, "source": "$s"}}
     assert run1(expr, s="héllo42") == "héllo"
+
+
+# -- lowering without PySpark's call-site capture -------------------------
+
+
+def test_lowering_gate_is_per_thread(spark, monkeypatch):
+    """While one thread lowers, another keeps PySpark's call-site capture."""
+    import threading
+
+    from pyspark.errors import utils
+
+    from dftly_spark import Parser
+
+    node_cls = type(Parser()("$a"))
+    lowered = node_cls.to_column
+    inside, release, seen = threading.Event(), threading.Event(), []
+
+    def blocking(self, ctx):
+        seen.append(utils.is_debugging_enabled())
+        inside.set()
+        assert release.wait(30)
+        return lowered(self, ctx)
+
+    monkeypatch.setattr(node_cls, "to_column", blocking)
+    assert utils.is_debugging_enabled()
+    worker = threading.Thread(target=Parser.expr_to_spark, args=("$a",))
+    worker.start()
+    try:
+        assert inside.wait(30)
+        other = utils.is_debugging_enabled()
+    finally:
+        release.set()
+        worker.join(30)
+    assert seen == [False] and other is True
+    assert utils.is_debugging_enabled()
+
+
+def test_lowering_gate_clears_after_raise(spark, monkeypatch):
+    from pyspark.errors import utils
+
+    from dftly_spark import Parser
+
+    def boom(self, ctx):
+        assert not utils.is_debugging_enabled()
+        raise RuntimeError("lowering failed")
+
+    monkeypatch.setattr(type(Parser()("$a")), "to_column", boom)
+    with pytest.raises(RuntimeError, match="lowering failed"):
+        Parser.to_spark({"x": "$a"})
+    assert utils.is_debugging_enabled()
+
+
+def test_strict_cast_error_class_at_execution(spark):
+    """Lowering without the call site still gives the strict cast's error."""
+    from pyspark.errors import PySparkException
+
+    from dftly_spark import Parser
+
+    df = spark.createDataFrame([("x",)], "a string")
+    with pytest.raises(PySparkException) as err:
+        df.select(Parser.expr_to_spark("$a::int", schema=df)).collect()
+    assert err.value.getCondition() == "USER_RAISED_EXCEPTION"
+    assert "strict cast to int failed for value: x" in str(err.value)
+
+
+def test_q_series_lowering_py4j_calls_per_expression(spark, tmp_path):
+    """Building q01-q30 over the benchmark's seed-7 tables lowers each
+    expression in at most 15 py4j CALL commands, counted as the
+    benchmark's tracer counts them."""
+    import re
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    if root not in sys.path:
+        sys.path.insert(0, root)
+    import __spark_entry__ as entry
+    from perfbench import datagen
+    from perfbench.spans import Tracer
+
+    qs = entry.queries()
+    names = sorted(n for n in qs if re.fullmatch(r"q(0[1-9]|[12]\d|30)_\w+", n))
+    assert len(names) == 30
+    data = datagen.write(7, 0.002, str(tmp_path))
+    tracer = Tracer()
+    tracer.install()
+    try:
+        for name in names:
+            qs[name](spark, data)
+    finally:
+        tracer.uninstall()
+    per_expr = tracer.self_calls("nodes") / tracer.count("nodes")
+    assert tracer.count("nodes") > 100 and per_expr <= 15, per_expr

@@ -1,8 +1,8 @@
 """The scripts stay runnable: they parse, none shadows a standard-library
 module, what they import from the package exists, the keyword arguments
 they pass to it are its parameters, and the docs name only scripts that
-exist.  The last test runs ``scripts/profile_queries.py`` on two queries in
-the shared session."""
+exist.  The last tests run ``scripts/profile_queries.py`` on three queries
+in the shared session."""
 
 import ast
 import importlib
@@ -68,6 +68,13 @@ def test_docs_name_existing_scripts(doc):
     assert named <= {p.name for p in SCRIPTS}, f"{doc} names missing {named - {p.name for p in SCRIPTS}}"
 
 
+def _profile_script():
+    spec = importlib.util.spec_from_file_location("profile_script", ROOT / "scripts/profile_queries.py")
+    profile = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(profile)
+    return profile
+
+
 def test_profile_records_two_queries(spark, tmp_path):
     """``profile()`` in the shared session: one full record per query, a
     plan dump each, and every patch the tracer made is undone."""
@@ -77,9 +84,7 @@ def test_profile_records_two_queries(spark, tmp_path):
     import __spark_entry__ as entry
     from dftly_spark.parser import Parser
 
-    spec = importlib.util.spec_from_file_location("profile_script", ROOT / "scripts/profile_queries.py")
-    profile = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(profile)
+    profile = _profile_script()
 
     def patchable():
         bindings = {(m.__name__, "parse_str"): m.parse_str for m in list(sys.modules.values())
@@ -109,8 +114,52 @@ def test_profile_records_two_queries(spark, tmp_path):
     }
     for r in recs:
         assert set(r) == keys, r
-        assert r["pre_action_jobs"] >= 1 and r["action_jobs"] >= 1
+        # the scans take their schema from the parquet footer: no job
+        assert r["pre_action_jobs"] == 0 and r["action_jobs"] >= 1
         assert r["n_python"] == 0 and r["scan_cols_max"] > 0 and r["n_codegen"] >= 1
         assert len(r["reps_s"]) == 1 and r["min_s"] == r["median_s"] == r["reps_s"][0]
         dump = (tmp_path / f"{r['query']}.txt").read_text()
         assert dump.startswith("# PYTHONHASHSEED=0\n") and "# execution 1\n" in dump
+
+
+# a formatted AQE plan: the final tree, then the initial one, then details
+_DESCRIPTION = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- == Final Plan ==
+   * BroadcastHashJoin Inner BuildRight (5)
+   :- * Project (2)
+   :  +- ShuffleQueryStage (1)
+   :     +- Exchange (3)
+   +- BroadcastQueryStage (4)
+      +- BroadcastExchange (6)
+         +- ReusedExchange (7)
++- == Initial Plan ==
+   SortMergeJoin Inner (8)
+   :- Exchange (10)
+   +- Exchange (11)
+
+
+(3) Exchange
+Arguments: hashpartitioning(k, 4)
+
+(6) BroadcastExchange
+Arguments: HashedRelationBroadcastMode
+"""
+
+
+def test_plan_shape_counts_final_trees_of_every_execution():
+    profile = _profile_script()
+    plain = "== Physical Plan ==\n* Project (2)\n+- Window (1)\n\n\n(1) Window\n"
+    shape = profile.plan_shape("", [_DESCRIPTION, plain, _DESCRIPTION], "[codegen id : 1]")
+    assert shape["n_exchange"] == 2 and shape["n_bcast_exchange"] == 2
+    assert shape["n_window"] == 1 and shape["n_codegen"] == 1
+
+
+def test_profile_counts_broadcasts_of_checkpointed_executions(spark):
+    """x67's PageRank checkpoints its edge frame: the broadcast AQE picks in
+    that earlier execution counts, though the action's plan has none."""
+    import __spark_entry__ as entry
+
+    profile = _profile_script()
+    (rec,) = profile.profile(spark, SF_DIR, entry.queries(), ["x67_pagerank"], 0)
+    assert rec["n_bcast_exchange"] >= 1 and rec["n_exchange"] >= 1, rec
