@@ -1062,11 +1062,8 @@ def semantic_dedup_pairs(
     threshold``, both members in the same cell.  Cosine folds are
     bit-identical with DuckDB's ``list_dot_product`` replay.
     ``n_centroids`` picks the cell-assignment scorer as in
-    :func:`~dftly_spark.ops.similarity.assign_cells`.  At 1024 cells and
-    above that is the Arrow/numpy matmul, whose vectors are also
-    numpy-NORMALIZED, so with either ``pair_scorer`` a cosine sitting
-    exactly on ``threshold`` can move one ulp and flip — the last-ulp
-    caveat documented there applies to the pair set too.
+    :func:`~dftly_spark.ops.similarity.assign_cells`; at 1024 cells and
+    above its last-ulp caveat can move a row to an effectively-tied cell.
 
     ``pair_scorer`` picks the within-cell pairwise engine: ``"fold"``
     (default — the cell self-join + interpreted JVM fold) or ``"arrow"``
@@ -1142,18 +1139,12 @@ def _no_pairs():
 
 def _pair_matrix(pdf):
     """``(ids, M)`` for the pair kernels: a non-empty batch of non-NULL
-    ``(_id, _v)`` rows sorted by id (stable) as a float64 matrix, minus
-    rows with a NaN element (a zero-norm vector's ``unit``)."""
+    ``(_id, _v)`` rows sorted by id (stable) as a float64 matrix."""
     import numpy as np
 
     ids = pdf["_id"].to_numpy()
     order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    M = np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in pdf["_v"].to_numpy()[order]]
-    )
-    keep = ~np.isnan(M).any(axis=1)
-    return ids[keep], M[keep]
+    return ids[order], np.stack(pdf["_v"].to_numpy()[order])
 
 
 def _cos_matrix(A, B):
@@ -1206,11 +1197,10 @@ def _cell_pairs_arrow(
 
     Memory: one cell's ``n×n`` double matrix per task (~66 MB at n≈2.9k);
     pair with ``max_cell_size`` at scale exactly like the join path's
-    skew cap.  Zero-norm inputs reach here as all-NaN unit vectors
-    (``unit`` nulls each element); those rows, like NULL vectors, are
-    dropped before the ``n×n`` work — the fold path's NULL cosine fails the
-    threshold the same way.  Equal-id pairs are never emitted, matching the
-    fold's ``id_l < id_r`` predicate when the id column has duplicates.
+    skew cap.  NULL vectors (every vector ``unit`` does not admit) are
+    dropped before the ``n×n`` work — the fold path's NULL cosine fails
+    the threshold the same way.  Equal-id pairs are never emitted, matching
+    the fold's ``id_l < id_r`` predicate when the id column has duplicates.
     Requires fixed-dimension vectors (the corpus contract every embedding
     op in this module already states).
     """
@@ -1272,8 +1262,6 @@ def _allpairs_arrow(
             return _no_pairs()
         ia, Ma = _pair_matrix(a)
         ib, Mb = _pair_matrix(b)
-        if len(ia) == 0 or len(ib) == 0:
-            return _no_pairs()
         C = _cos_matrix(Ma, Mb)
         gi, gj = np.meshgrid(np.arange(len(ia)), np.arange(len(ib)), indexing="ij")
         il = np.minimum(ia[gi.ravel()], ib[gj.ravel()])

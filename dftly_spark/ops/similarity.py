@@ -30,28 +30,19 @@ if TYPE_CHECKING:
     from pyspark import Broadcast
 
 
-def dot(a: SparkColumn, b: SparkColumn, dim: int | None = None) -> SparkColumn:
-    """Elementwise dot product of two array columns (double).
-
-    With ``dim`` given, the sum is statically unrolled over ``element_at``
-    lookups.  Measured on local[32] at 64 dims the default ``zip_with`` +
-    ``aggregate`` fold is FASTER — the unrolled tree exceeds codegen method
-    limits and falls back to per-node interpretation — so hot paths use the
-    fold; the unrolled form is kept for narrow vectors.  Both sum
-    left-to-right, so results are bit-identical.
-    """
-    if dim is not None:
-        out = F.lit(0.0)
-        for i in range(1, dim + 1):
-            out = out + F.element_at(a, i) * F.element_at(b, i)
-        return out
+def dot(a: SparkColumn, b: SparkColumn) -> SparkColumn:
+    """Elementwise dot product of two array columns (double), summed
+    left-to-right by a ``zip_with`` + ``aggregate`` fold.  Measured on
+    local[32] at 64 dims the fold is FASTER than a statically unrolled
+    ``element_at`` sum, whose tree exceeds codegen method limits and falls
+    back to per-node interpretation."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 
-def l2_norm(a: SparkColumn, dim: int | None = None) -> SparkColumn:
-    return F.sqrt(dot(a, a, dim))
+def l2_norm(a: SparkColumn) -> SparkColumn:
+    return F.sqrt(dot(a, a))
 
 
 def cosine(a: SparkColumn, b: SparkColumn) -> SparkColumn:
@@ -61,33 +52,34 @@ def cosine(a: SparkColumn, b: SparkColumn) -> SparkColumn:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def unit(a: SparkColumn, dim: int | None = None) -> SparkColumn:
-    """L2-normalized copy of an array column.
+def unit(a: SparkColumn) -> SparkColumn:
+    """L2-normalized copy of an array column, and the one admission rule
+    of every vector operator in this package.
 
-    Normalizing once per row turns per-pair cosine (three dot products) into
-    a single dot product — the difference between 3·n² and n + n² folds in
-    any pairwise stage.
+    A vector is ADMITTED when its squared L2 norm ``s`` (a left fold over
+    dim order, Python's sequential ``sum(x*x)``) is finite and > 0; its
+    unit vector is ``x / sqrt(s)`` per element.  Anything else — a NULL
+    vector, a NULL or NaN element, a zero or empty vector, an infinite
+    element or a norm that overflows — is a NULL vector.  Operators key on
+    ``unit(v) IS NULL``: such a row gets no centroid cell, never becomes
+    or moves a centroid, and every cosine it takes part in is NULL, so it
+    drops out of thresholds and top-k rankings.
 
-    Zero vectors normalize to NULL elements (``try_divide``) instead of
-    raising: under Spark 4's default ANSI mode a plain divide would abort
-    the whole job on the first zero embedding in the corpus, and the
-    NULL elements make every downstream cosine NULL — the row simply
-    drops out of thresholds and rankings (non-zero vectors are
-    bit-identical: try_divide IS divide when the divisor isn't 0)."""
-    if dim is not None:
-        n = l2_norm(a, dim)
-        return F.array(
-            *[F.try_divide(F.element_at(a, i), n) for i in range(1, dim + 1)]
-        )
-    n = l2_norm(a)
-    # the norm rides in as a zip_with ARGUMENT (array_repeat evaluates it
-    # once per row), never inside the lambda body: interpreted HOF lambdas
-    # re-evaluate captured non-attribute expressions per ELEMENT, so a
-    # fold-in-lambda divide is O(dim²) per row — >390 s for 100k rows at
-    # dim=768 vs 2.0 s this way (≥200×), bit-identical including the
-    # zero-vector (NULL elements) and NULL-vector cases
-    return F.zip_with(
-        a, F.array_repeat(n, F.size(a)), lambda x, y: F.try_divide(x, y)
+    Normalizing once per row turns per-pair cosine (three dot products)
+    into a single dot product — the difference between 3·n² and n + n²
+    folds in any pairwise stage.  The fold runs once per row: ``s`` rides
+    into the divide as the finish lambda's variable, never as a captured
+    expression (interpreted HOF lambdas re-evaluate captured expressions
+    per ELEMENT, an O(dim²) row).  Spark orders NaN above +inf, so the
+    ``s < inf`` guard also rejects a NaN ``s``."""
+    return F.aggregate(
+        a,
+        F.lit(0.0),
+        lambda acc, x: acc + x * x,
+        lambda s: F.when(
+            (s > 0) & (s < F.lit(float("inf"))),
+            F.transform(a, lambda x: x / F.sqrt(s)),
+        ),
     )
 
 
@@ -372,12 +364,13 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
 
     ``base`` is the corpus as one ``_v: array<double>`` column; ``cdf`` the
     (checkpointed) ``(_cell, _i, _m)`` centroid frame.  Returns the refined
-    centroid frame, checkpointed.
+    centroid frame, checkpointed.  Only admitted rows (:func:`unit`) are
+    assigned, so no NULL, NaN, zero or infinite vector enters a mean.
 
     Arithmetic is reproducible by an external engine: per-dim means are a
-    keyed avg, and the unit norm is a LEFT FOLD over dim order
-    (``F.aggregate``, Python's sequential ``sum(v*v)``) — a window SUM
-    would reorder the partial sums."""
+    keyed avg, and the unit norm is :func:`unit`'s left fold over dim
+    order — a window SUM would reorder the partial sums."""
+    base = base.where(unit(F.col("_v")).isNotNull())
     for _ in range(iters):
         cmat = _matrix_frame(cdf)
         assigned = base.crossJoin(F.broadcast(cmat)).select(
@@ -404,46 +397,22 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
                 F.col("n._mn").isNotNull().alias("_new"),
             )
         )
-        # unit-normalize per cell via an ordered left fold (dim order);
         # a kept (empty-cell) centroid is ALREADY unit and must pass
         # through untouched — re-dividing by its ~1.0±ε norm would drift
-        # the low bits the oracle hash checks
+        # the low bits the oracle hash checks; a zero mean stays as it is
         per_cell = raw.groupBy("_cell").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("_i", "_r"))), lambda s: s["_r"]
             ).alias("_vr"),
             F.max(F.col("_new")).alias("_had"),
         )
-        # materialize the fold into a COLUMN and divide AFTER the
-        # posexplode: a divide inside a transform() lambda lets the
-        # optimizer inline the O(dim) fold into the per-element body when
-        # the array meets the Generate (no subexpression elimination in
-        # interpreted HOFs) — O(dim²) per cell; the Generate boundary pins
-        # `_norm` as a materialized per-row attribute (same fix as
-        # _init_centroid_frame, values bit-identical)
-        with_norm = per_cell.withColumn(
-            "_norm",
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("_vr"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
+        vr = F.col("_vr")
         cdf = (
-            with_norm.select(
-                "_cell", "_norm", "_had", F.posexplode("_vr").alias("_i", "_x")
-            )
-            .select(
+            per_cell.select(
                 "_cell",
-                "_i",
-                F.when(
-                    F.col("_had") & (F.col("_norm") > 0),
-                    F.col("_x") / F.col("_norm"),
-                )
-                .otherwise(F.col("_x"))
-                .alias("_m"),
+                F.posexplode(
+                    F.when(F.col("_had"), F.coalesce(unit(vr), vr)).otherwise(vr)
+                ).alias("_i", "_m"),
             )
             .transform(durable_checkpoint)
         )
@@ -473,15 +442,16 @@ def choose_centroid_frame(
       for external replay); best cell balance/recall, costs ``2×iters``
       extra jobs at build time.
 
-    Rows with a NULL vector are never chosen.  The k×dim matrix is
-    selected, normalized, and refined entirely CLUSTER-SIDE: the driver
+    Rows :func:`unit` does not admit are never chosen.  The k×dim matrix
+    is selected, normalized, and refined entirely CLUSTER-SIDE: the driver
     never holds it, it never rides py4j, and consumers attach it as a
     checkpointed 1-row broadcast (:func:`_matrix_frame`) — the shape that
     survives the production IVF size (k=65k, dim=1k ≈ 0.5 GB), where plan
-    literals break the plan/py4j layer.  The unit norm is a left fold over
-    dim order (``F.aggregate``), so an external engine replays it
-    bit-for-bit.  The frame is checkpointed (consumers reference it 2+
-    times — once per side of the candidate join)."""
+    literals break the plan/py4j layer.  Centroids are :func:`unit`
+    vectors, whose norm is a left fold over dim order, so an external
+    engine replays them bit-for-bit.  The frame is checkpointed
+    (consumers reference it 2+ times — once per side of the candidate
+    join)."""
     if strategy in ("first", "sample"):
         return _init_centroid_frame(
             corpus, id_col=id_col, vec_col=vec_col, n=n_centroids,
@@ -507,9 +477,10 @@ def _init_centroid_frame(
     seed: int,
 ) -> DataFrame:
     """Cluster-side ``(_cell, _i, _m)`` unit-centroid frame for the
-    ``"first"`` / ``"sample"`` selection rules.  NULL vectors are dropped
-    BEFORE the limit: a NULL among the chosen rows would posexplode to no
-    ``(_cell, _i, _m)`` rows and leave a gap in the cell numbering, which
+    ``"first"`` / ``"sample"`` selection rules: the ``n`` lowest-key
+    :func:`unit` vectors.  Inadmissible rows are dropped BEFORE the limit:
+    a NULL among the chosen rows would posexplode to no ``(_cell, _i,
+    _m)`` rows and leave a gap in the cell numbering, which
     :func:`_matrix_frame` closes by shifting every later cell down one.
     The global row_number window runs over the already-LIMITed n-row
     frame (bounded SinglePartition, same regime as a top-k collect)."""
@@ -519,41 +490,16 @@ def _init_centroid_frame(
         key = F.xxhash64(F.col(id_col), F.lit(seed)).alias("_k")
     else:
         raise ValueError(f"unknown centroid strategy {strategy!r}")
-    sel = (
-        corpus.select(key, F.col(vec_col).cast("array<double>").alias("_v0"))
-        .where(F.col("_v0").isNotNull())
+    # the filter's fold runs on every row, the unit() below only on the n
+    # chosen ones: a `_u` column filtered on would run the fold twice per
+    # row (the filter is pushed below the projection that computes it)
+    return (
+        corpus.select(key, F.col(vec_col).cast("array<double>").alias("_v"))
+        .where(unit(F.col("_v")).isNotNull())
         .orderBy("_k")
         .limit(n)
         .withColumn("_cell", F.row_number().over(Window.orderBy("_k")))
-    )
-    # left-fold norm over dim order — the sequential sum DuckDB's
-    # list_dot_product computes, so the x12 oracle replays it bit-for-bit.
-    # The divide happens AFTER the posexplode, on the carried scalar `_n`:
-    # dividing inside a transform() lambda lets the
-    # optimizer inline the O(dim) fold into the per-element body once the
-    # array meets the Generate (no subexpression elimination in interpreted
-    # HOFs), turning the build into O(k·dim²) — 415 s at k=8192×dim=768 vs
-    # ~1 s this way (85×, same values: the Generate boundary pins `_n` as a
-    # materialized per-row attribute).
-    sel = sel.withColumn(
-        "_n",
-        F.sqrt(
-            F.aggregate(
-                F.transform(F.col("_v0"), lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-    )
-    return (
-        sel.select("_cell", "_n", F.posexplode("_v0").alias("_i", "_x"))
-        .select(
-            "_cell",
-            "_i",
-            F.when(F.col("_n") > 0, F.col("_x") / F.col("_n"))
-            .otherwise(F.col("_x"))
-            .alias("_m"),
-        )
+        .select("_cell", F.posexplode(unit(F.col("_v"))).alias("_i", "_m"))
         .transform(durable_checkpoint)
     )
 
@@ -567,41 +513,21 @@ def _cents_numpy(cents: DataFrame) -> "object":
     return np.asarray(_collect_centroid_lists(cents), dtype=np.float64)
 
 
-def _arrow_input(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """The arrow scorers' input: ``(id, vec, _vnull)``, where Spark flags a
-    NULL vector or one with a NULL element.  numpy would read a NULL
-    element as NaN and ``argmax`` would then pick cell 1; the fold's
-    score array for such a row is all NULL, like a NULL vector's."""
-    vec = F.col(vec_col)
-    return df.select(
-        id_col, vec_col,
-        (vec.isNull() | F.exists(vec, lambda x: x.isNull())).alias("_vnull"),
-    )
-
-
-def _arrow_rows(pdf, vec_col: str, dim: int):
-    """One pandas batch of :func:`_arrow_input` rows → ``(V, unit_vecs,
-    null)``: the float64 matrix with NULL vectors as NaN rows, each row's
-    unit vector as the fold path's ``unit()`` leaves it (``None`` for a
-    NULL or zero-norm vector), and the NULL mask (a vector with a NULL
-    element counts as NULL)."""
+def _scores_arrow(pdf, vec_col: str, Cm):
+    """One pandas batch of ``(id, vec, _u)`` rows → ``(S, ok)``: the raw
+    vectors' scores against the centroid matrix ``Cm`` (one BLAS matmul),
+    a zero row wherever :func:`unit` did not admit the vector (``_u`` is
+    NULL), and the admitted-row mask.  With no centroids (a corpus with no
+    admitted row) no row is admitted and ``S`` is one zero column."""
     import numpy as np
 
-    vecs = pdf[vec_col]
-    null = pdf["_vnull"].to_numpy(dtype=bool)
-    V = np.full((len(vecs), dim), np.nan)
-    if not null.all():
-        V[~null] = np.asarray(
-            [np.asarray(x, dtype=np.float64) for x in vecs[~null]]
-        )
-    n = np.sqrt((V * V).sum(axis=1))
-    # zero-norm rows: the fold path's unit() divides by 0 and yields NULLs
-    # (downstream cosines go NULL and the row drops out of
-    # thresholds/rankings) — emit a null vector so both scorers exclude
-    # the row the same way
-    none = null | (n == 0.0)
-    U = V / np.where(none, 1.0, n)[:, None]
-    return V, [None if z else u for z, u in zip(none, U)], null
+    if Cm.size == 0:
+        return np.zeros((len(pdf), 1)), np.zeros(len(pdf), dtype=bool)
+    ok = pdf["_u"].notna().to_numpy()
+    V = np.zeros((len(pdf), Cm.shape[1]))
+    if ok.any():
+        V[ok] = np.stack(pdf[vec_col][ok].to_numpy())
+    return V @ Cm.T, ok
 
 
 def _assign_cells_arrow(
@@ -620,12 +546,8 @@ def _assign_cells_arrow(
     the sequential fold in the last ulp — argmax flips only on
     effectively-tied cells, which is why it runs only at production k
     (:func:`_centroid_matrix`) and the hash-pinned gate queries stay on
-    the fold.  The returned ``_v`` is ALSO numpy-normalized
-    (pairwise-summed norm), so downstream cosines
-    computed from it carry the same last-ulp caveat; zero-norm vectors
-    yield a NULL ``_v`` to match the fold path's NULL-element unit(), and
-    a NULL vector, or one with a NULL element, yields a NULL ``_v`` and a
-    NULL ``_cell``, as the fold's all-NULL score array does."""
+    the fold.  ``_v`` is Spark's :func:`unit` of the row, and a row it
+    does not admit gets a NULL ``_cell``, as on the fold."""
     import pandas as pd
 
     id_type = corpus.schema[id_col].dataType.simpleString()
@@ -636,14 +558,16 @@ def _assign_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V, vecs, null = _arrow_rows(pdf, vec_col, Cm.shape[1])
-            cell = pd.array((V @ Cm.T).argmax(axis=1) + 1, dtype="Int64")
-            cell[null] = pd.NA
+            S, ok = _scores_arrow(pdf, vec_col, Cm)
+            cell = pd.array(S.argmax(axis=1) + 1, dtype="Int64")
+            cell[~ok] = pd.NA
             yield pd.DataFrame(
-                {"_id": pdf[id_col].to_numpy(), "_v": vecs, "_cell": cell}
+                {"_id": pdf[id_col].to_numpy(), "_v": pdf["_u"].to_numpy(), "_cell": cell}
             )
 
-    return _arrow_input(corpus, id_col, vec_col).mapInPandas(score, out_schema)
+    return corpus.select(
+        id_col, vec_col, unit(F.col(vec_col).cast("array<double>")).alias("_u")
+    ).mapInPandas(score, out_schema)
 
 
 def _probe_cells_arrow(
@@ -652,11 +576,8 @@ def _probe_cells_arrow(
     """Exploded ``(_id, _v, _cell)`` rows — each query's ``nprobe`` nearest
     cells — via the same Arrow/numpy matmul as :func:`_assign_cells_arrow`.
     Tie rule matches the fold path's ``(-score, cell)`` struct sort: a
-    STABLE descending-score argsort keeps the lower cell first on ties.
-    A NULL query vector (or one with a NULL element) scores NaN against
-    every cell, which the argsort puts last in cell order: it probes cells
-    ``1..nprobe`` with a NULL ``_v``, as the fold's sort of all-NULL
-    scores does."""
+    STABLE descending-score argsort keeps the lower cell first on ties, so
+    an inadmissible query (a zero score row) probes cells ``1..nprobe``."""
     import numpy as np
     import pandas as pd
 
@@ -669,17 +590,19 @@ def _probe_cells_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V, vecs, _ = _arrow_rows(pdf, vec_col, Cm.shape[1])
-            top = np.argsort(-(V @ Cm.T), axis=1, kind="stable")[:, :np_probe] + 1
+            S, _ = _scores_arrow(pdf, vec_col, Cm)
+            top = np.argsort(-S, axis=1, kind="stable")[:, :np_probe] + 1
             yield pd.DataFrame(
                 {
                     "_id": np.repeat(pdf[id_col].to_numpy(), np_probe),
-                    "_v": [v for v in vecs for _ in range(np_probe)],
+                    "_v": np.repeat(pdf["_u"].to_numpy(), np_probe),
                     "_cell": top.reshape(-1).astype("int64"),
                 }
             )
 
-    return _arrow_input(queries, id_col, vec_col).mapInPandas(probe, out_schema)
+    return queries.select(
+        id_col, vec_col, unit(F.col(vec_col).cast("array<double>")).alias("_u")
+    ).mapInPandas(probe, out_schema)
 
 
 #: centroid count at which the cell scorers leave the interpreted fold for
@@ -731,18 +654,26 @@ def _argmax_cell(scores: SparkColumn) -> SparkColumn:
 def _with_cell_scores(
     df: DataFrame, cmat: DataFrame, id_expr, vec_col: str, id_alias: str, v_alias: str
 ) -> DataFrame:
-    """``(id_alias, v_alias, _s)`` — each row's vector with ``_s``, its
-    :func:`_cell_scores` against the 1-row ``_cm`` matrix frame (attached
-    as a broadcast)."""
-    # alias the cast vector to an ATTRIBUTE before the fold captures it:
-    # expressions captured by interpreted HOF lambdas re-evaluate per outer
-    # element, so a captured cast would re-materialize the array once per
-    # CELL (k× per row) instead of once per row
+    """``(id_alias, v_alias, _s)`` — each row's :func:`unit` vector with
+    ``_s``, its raw vector's :func:`_cell_scores` against the 1-row ``_cm``
+    matrix frame (attached as a broadcast).  A row :func:`unit` does not
+    admit scores as a NULL vector: every score is NULL, so it gets no
+    argmax cell and probes cells ``1..nprobe``."""
+    # both vectors become ATTRIBUTES below the cross join, before the fold
+    # captures them: expressions captured by interpreted HOF lambdas
+    # re-evaluate per outer element, so a captured cast or unit() would
+    # re-run once per CELL (k× per row); no projection collapses into the
+    # lambda across the join, even when the caller prunes v_alias
     v = F.col(vec_col).cast("array<double>")
     return (
-        df.crossJoin(F.broadcast(cmat))
-        .select(id_expr.alias(id_alias), v.alias(v_alias), "_cm")
-        .select(id_alias, v_alias, _cell_scores(F.col(v_alias)).alias("_s"))
+        df.select(id_expr.alias(id_alias), v.alias("_raw"))
+        .select(id_alias, "_raw", unit(F.col("_raw")).alias(v_alias))
+        .crossJoin(F.broadcast(cmat))
+        .select(
+            id_alias,
+            v_alias,
+            _cell_scores(F.when(F.col(v_alias).isNotNull(), F.col("_raw"))).alias("_s"),
+        )
     )
 
 
@@ -764,11 +695,7 @@ def _assign(
         ).select(F.col("_id").alias(id_alias), F.col("_v").alias(v_alias), "_cell")
     c = _with_cell_scores(corpus, cmat, F.col(id_col), vec_col, id_alias, v_alias)
     # Separate select so `_s` is computed once, not inlined per reference.
-    return c.select(
-        id_alias,
-        unit(F.col(v_alias)).alias(v_alias),
-        _argmax_cell(F.col("_s")).alias("_cell"),
-    )
+    return c.select(id_alias, v_alias, _argmax_cell(F.col("_s")).alias("_cell"))
 
 
 def _probe(
@@ -798,9 +725,7 @@ def _probe(
     probes = F.transform(
         F.slice(ranked, 1, nprobe), lambda st: st["cell"].cast("long")
     )
-    return q.select(
-        "_qid", unit(F.col("_qv")).alias("_qv"), F.explode(probes).alias("_cell")
-    )
+    return q.select("_qid", "_qv", F.explode(probes).alias("_cell"))
 
 
 def assign_cells(
@@ -811,9 +736,10 @@ def assign_cells(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """``(_id, _v, _cell)`` — unit-normalized vectors with their nearest
-    centroid cell (argmax dot; first/lowest cell wins ties).  Centroids are
-    unit vectors, so argmax(dot) ≡ argmax(cosine) with no per-row norm.
+    """``(_id, _v, _cell)`` — :func:`unit` vectors with their nearest
+    centroid cell (argmax dot; first/lowest cell wins ties), both NULL for
+    a row :func:`unit` does not admit.  Centroids are unit vectors, so
+    argmax(dot) ≡ argmax(cosine) with no per-row norm.
 
     ``cents`` is the long-form ``(_cell, _i, _m)`` frame of ``k`` cells
     from :func:`choose_centroid_frame`.  ``k`` picks the scorer
@@ -1103,7 +1029,9 @@ def centroid_outliers(
     and out-of-domain contamination all land in the far tail of
     centroid similarity.  Output: ``(id, centroid_cos)`` for the ``k``
     lowest, ranked ascending (ties broken by id on the ROUNDED score, so
-    the selected set is stable across engines and runs).
+    the selected set is stable across engines and runs).  The centroid
+    averages the rows :func:`unit` admits; any other row scores NULL and
+    ranks first, with the NULL vectors.
 
     Plan: ONE per-dimension aggregation (posexplode → groupBy(dim) —
     shuffle width is ``dim`` rows, not data), the 1-row centroid rides the
@@ -1112,11 +1040,8 @@ def centroid_outliers(
     centroid's float sums are partition-order dependent at the 1e-13
     level, hence scoring to ``decimals`` BEFORE ranking.
     """
-    from pyspark.sql import Window
-
-    exploded = emb.select(
-        F.col(id_col), F.posexplode(F.col(vec_col).cast("array<double>")).alias("_pos", "_v")
-    )
+    v = F.col(vec_col).cast("array<double>")
+    exploded = emb.where(unit(v).isNotNull()).select(F.posexplode(v).alias("_pos", "_v"))
     cent = (
         exploded.groupBy("_pos")
         .agg(F.avg("_v").alias("_c"))
@@ -1135,7 +1060,7 @@ def centroid_outliers(
         emb.crossJoin(F.broadcast(cent))
         .select(
             F.col(id_col),
-            cosine(F.col(vec_col).cast("array<double>"), F.col("_cent")).alias("_cos"),
+            F.when(unit(v).isNotNull(), cosine(v, F.col("_cent"))).alias("_cos"),
         )
         .select(
             F.col(id_col),

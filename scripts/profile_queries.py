@@ -33,9 +33,10 @@ A query that raises gets ``{"query", "error"}`` instead.
 ``--plans DIR`` writes ``<DIR>/<query>.txt`` from the traced run: the
 physical plan of every SQL execution it fired, in order (the builder's
 pre-action jobs, then the noop write), each as its final adaptive plan,
-with expression ids (``#123``), exchange ``plan_id``s and RDD ids
+with expression ids (``#123``), exchange ``plan_id``s, RDD ids
 (``MapPartitionsRDD[253]``, which count every RDD the session made
-before) stripped, so two trees' dumps compare with one ``diff -r``.  Plans follow Python's
+before), codegen stage ids (``[codegen id : 3]``) and AQE query-stage ids
+stripped, so two trees' dumps compare with one ``diff -r``.  Plans follow Python's
 string-hash seed (set iteration order reaches some column orders), so
 ``--plans`` refuses to run unless ``PYTHONHASHSEED`` is set, and each dump
 records the seed.  Run one query per process for cold-session plans.
@@ -57,7 +58,18 @@ if __name__ == "__main__":
 
 from perfbench.spans import Tracer, plan_phases_ms, stage_totals  # noqa: E402
 
-_PLAN_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])")
+#: ids that number things the session made before, not the plan: expression
+#: ids, exchange ``plan_id``s, RDD ids and codegen stage ids
+_PLAN_IDS = re.compile(r"#\d+|(?<=plan_id=)\d+|(?<=RDD\[)\d+(?=\])|(?<=\[codegen id : )\d+")
+#: an AQE query stage's id: the ``Arguments:`` line of its detail block
+_STAGE_ID = re.compile(r"(QueryStage\n(?:[^\n]+\n)*?Arguments: )\d+")
+
+
+def strip_plan_ids(description: str) -> str:
+    """``description`` without the ids of :data:`_PLAN_IDS` and :data:`_STAGE_ID`."""
+    return _STAGE_ID.sub(r"\1", _PLAN_IDS.sub("", description))
+
+
 #: scan nodes cut metadata values (ReadSchema included) at 100 chars by
 #: default, which hides exactly the unpruned scans ``scan_cols_max`` is
 #: for; the cut is fixed when the node is planned
@@ -187,7 +199,7 @@ def profile(spark, sf_dir: str, queries: dict, names, reps: int, plans=None, see
                     fh.write(f"# PYTHONHASHSEED={seed}\n")
                     for n, description in enumerate(finals, 1):
                         fh.write(f"\n# execution {n}\n")
-                        fh.write(_PLAN_IDS.sub("", description))
+                        fh.write(strip_plan_ids(description))
             runs = []
             for _ in range(reps):
                 t0 = time.perf_counter()

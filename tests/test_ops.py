@@ -1294,10 +1294,11 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
     the centroid-count threshold) must agree with the fold path
     wherever argmax is not knife-edged: on well-separated planted clusters
     topic assignments and ivf_topk results are identical, including the
-    first-max/lowest-cell tie convention, a NULL vector and a vector with
-    a NULL element (no cell; as an ivf_topk query each probes cells
-    1..nprobe and ranks its NULL cosines by id), a zero vector and a
-    duplicated id."""
+    first-max/lowest-cell tie convention, a duplicated id, and the rows
+    ``unit()`` does not admit — a NULL vector, a NULL element, a NaN
+    element, a +inf element and a zero vector: no topic, and as an
+    ivf_topk query each probes cells 1..nprobe and ranks its NULL cosines
+    by id."""
     import random
 
     from dftly_spark.ops import ivf_topk, semantic_dedup_pairs, similarity, topic_assign
@@ -1316,11 +1317,13 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
         v = [0.05 * rng.uniform(-1, 1) for _ in range(dim)]
         v[c] += 1.0
         rows.append((100 + i, v))
-    # a zero-norm vector: fold's unit() yields NULL elements, arrow emits
-    # a NULL vector — both must exclude it from cosine thresholds/ranks
-    rows.append((999, [0.0] * dim))
+    # rows unit() does not admit: both scorers give them a NULL unit
+    # vector and a NULL cell, so they drop out of cosine thresholds/ranks
+    rows.append((999, [0.0] * dim))  # zero vector
     rows.append((900, None))  # NULL vector
     rows.append((901, [1.0, None] + [0.0] * (dim - 2)))  # NULL element
+    rows.append((902, [float("nan"), 0.5] + [0.0] * (dim - 2)))  # NaN element
+    rows.append((903, [float("inf"), 0.5] + [0.0] * (dim - 2)))  # +inf element
     rows.append((100, rows[kc][1]))  # duplicated id, same vector
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
@@ -1333,7 +1336,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
     arrow = arrow_scored(lambda: topic_assign(df, n_topics=kc, strategy="first"))
     fold_rows = sorted(map(tuple, fold.collect()))
     assert sorted(map(tuple, arrow.collect())) == fold_rows
-    assert (900, None) in fold_rows and (901, None) in fold_rows
+    assert {(i, None) for i in (900, 901, 902, 903, 999)} <= set(fold_rows)
     # arrow plan really routes through Arrow (one python eval node)
     plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan or "MapInPandas" in plan
@@ -1351,7 +1354,7 @@ def test_arrow_scorer_matches_fold_on_separated_clusters(spark, monkeypatch):
         for r in arrow_scored(lambda: ivf_topk(df, q, **kw)).collect()
     )
     assert got_a == got_f
-    assert sum(r[0] == 900 for r in got_f) == sum(r[0] == 901 for r in got_f) == 5
+    assert all(sum(r[0] == i for r in got_f) == 5 for i in (900, 901, 902, 903, 999))
 
     sd_f = sorted(
         (r["id_l"], r["id_r"]) for r in

@@ -163,3 +163,22 @@ def test_profile_counts_broadcasts_of_checkpointed_executions(spark):
     profile = _profile_script()
     (rec,) = profile.profile(spark, SF_DIR, entry.queries(), ["x67_pagerank"], 0)
     assert rec["n_bcast_exchange"] >= 1 and rec["n_exchange"] >= 1, rec
+
+
+def test_plan_dumps_strip_stage_and_codegen_ids():
+    """Two fresh sessions number AQE query stages and codegen stages
+    differently for one plan; a dump must not show it."""
+    profile = _profile_script()
+
+    def described(stage, codegen, expr):
+        return (
+            f"(1) Project [codegen id : {codegen}]\nOutput [1]: [id#{expr}L]\n\n"
+            f"(2) ShuffleQueryStage\nOutput [1]: [id#{expr}L]\nArguments: {stage}\n\n"
+            "(3) LocalLimit\nArguments: 16\n"
+        )
+
+    one, two = described(0, 1, 12), described(3, 4, 87)
+    assert one != two
+    assert profile.strip_plan_ids(one) == profile.strip_plan_ids(two)
+    stripped = profile.strip_plan_ids(one)
+    assert "Arguments: 16" in stripped and "#" not in stripped
