@@ -170,11 +170,6 @@ def _x05(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
     )
     aug = emb.unionByName(copies)
-    # pair_scorer stays "fold" HERE: at this query's gate-scale pair volume
-    # (250 pairs at sf0.1) the arrow path's fixed Python-worker cost loses
-    # the interleaved A/B (2.0-2.1 vs 1.3-1.6 s) even though it wins 3x at
-    # sf1.0 — the crossover is pair volume, see OPTIMIZATION_r15.md.  x46
-    # and x154 sit on the other side of the crossover and opt in.
     return embedding_dup_pairs(
         aug, "vec_id", "embedding", threshold=0.95, method="lsh", n_planes=8, dim=64
     )

@@ -957,13 +957,9 @@ def _x46(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
     )
     aug = emb.unionByName(copies)
-    # pair_scorer="arrow": the within-cell cosine runs as the per-cell
-    # vectorized path — bit-identical values (ascending-dim accumulation,
-    # ops/dedup.py _cell_pairs_arrow), measured 42 s -> ~2 s on the 50M-pair
-    # stage at sf1.0 (round 15); the hash-pinned oracle below is unchanged.
     kept = semantic_dedup(
         aug, id_col="vec_id", vec_col="embedding", threshold=0.95,
-        n_centroids=16, strategy="first", pair_scorer="arrow",
+        n_centroids=16, strategy="first",
     )
     return kept.select("vec_id")
 

@@ -214,17 +214,10 @@ def _x154(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") % 4 == 0)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     )
-    # pair_scorer="arrow" on both generators: the brute truth side is the
-    # O(n²) fold (12.5M interpreted folds at sf1.0, the query's dominant
-    # term) — the vectorized path is bit-identical (ops/dedup.py
-    # _cell_pairs_arrow), so the hash-pinned oracle is unchanged.
     pred = embedding_dup_pairs(
-        sub, "vec_id", "embedding", threshold=0.45, method="lsh",
-        n_planes=6, dim=64, pair_scorer="arrow",
+        sub, "vec_id", "embedding", threshold=0.45, method="lsh", n_planes=6, dim=64
     )
-    truth = embedding_dup_pairs(
-        sub, "vec_id", "embedding", threshold=0.45, pair_scorer="arrow"
-    )
+    truth = embedding_dup_pairs(sub, "vec_id", "embedding", threshold=0.45)
     return pair_quality(pred, truth)
 
 

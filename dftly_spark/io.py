@@ -58,20 +58,87 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     an unreadable footer), after one log line: the caller then lets Spark
     infer.
     """
-    local = path.removeprefix("file:")
-    if not (os.path.isabs(local) and os.path.isfile(local)):
-        why = "not one local file"
-    elif any(c in local for c in "*?[{") or os.path.basename(local)[:1] in "._":
-        why = "a glob or hidden file name"
-    elif local == path and not _default_fs_is_local(spark):
-        why = "the default file system is not local"
-    else:
-        try:
-            return _spark_schema(spark, local)
-        except Exception as ex:  # noqa: BLE001 — an unmapped type or an unreadable footer
-            why = f"{type(ex).__name__}: {ex}"
+    try:
+        return _spark_schema(spark, _local_file(spark, path))
+    except _NotLocal as ex:
+        why = str(ex)
+    except Exception as ex:  # noqa: BLE001 — an unmapped type or an unreadable footer
+        why = f"{type(ex).__name__}: {ex}"
     logging.getLogger(__name__).info("%s: schema inferred by Spark (%s)", path, why)
     return None
+
+
+class _NotLocal(ValueError):
+    """A path that is not one local file whose footer pyarrow may read."""
+
+
+def _local_file(spark: SparkSession, path: str) -> str:
+    """``path`` (bare or a ``file:`` URI) as the name of one local file;
+    raises :class:`_NotLocal` naming why it is not one."""
+    local = os.path.normpath(path.removeprefix("file:"))
+    if not (os.path.isabs(local) and os.path.isfile(local)):
+        raise _NotLocal("not one local file")
+    if any(c in local for c in "*?[{") or os.path.basename(local)[:1] in "._":
+        raise _NotLocal("a glob or hidden file name")
+    if not path.startswith("file:") and not _default_fs_is_local(spark):
+        raise _NotLocal("the default file system is not local")
+    return local
+
+
+#: logical plan nodes that never output more rows than their children hold
+_ROW_KEEPING = frozenset({
+    "Project", "Filter", "Sort", "GlobalLimit", "LocalLimit", "Window", "Deduplicate",
+    "Repartition", "RepartitionByExpression", "RebalancePartitions", "SubqueryAlias",
+    "ResolvedHint", "Union", "Aggregate",
+})
+
+
+def _row_bound(df: DataFrame) -> int | None:
+    """An upper bound on ``df``'s rows that costs no Spark job, or ``None``
+    where its plan gives none.
+
+    Walks the optimized logical plan.  A scan over local parquet files
+    counts the rows their footers hold (the :func:`_footer_schema` rules
+    for a local file), a ``LocalRelation`` its rows, and a union or any
+    node of :data:`_ROW_KEEPING` the sum of its children (at least 1 for
+    an aggregate, which outputs one row over none).  Any other node gives
+    ``None``: a join, generate or expand, which can add rows, and any other
+    leaf (a checkpointed or RDD frame, a non-local or non-parquet scan).
+    Filters are not applied, so this is a bound, not a count; nothing is
+    cached across calls."""
+    import pyarrow.parquet as pq
+
+    spark = df.sparkSession
+
+    def bound(node) -> int | None:
+        name = node.nodeName()
+        if name == "LocalRelation":
+            return node.data().size()
+        if name == "LogicalRelation":
+            rel = node.relation()
+            if rel.getClass().getSimpleName() != "HadoopFsRelation" or (
+                rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+            ):
+                return None
+            try:
+                return sum(
+                    pq.read_metadata(_local_file(spark, f)).num_rows
+                    for f in rel.location().inputFiles()
+                )
+            except (OSError, ValueError):  # a non-local file or an unreadable footer
+                return None
+        if name not in _ROW_KEEPING:
+            return None
+        kids = node.children()
+        total = 0
+        for i in range(kids.size()):
+            rows = bound(kids.apply(i))
+            if rows is None:
+                return None
+            total += rows
+        return max(total, 1) if name == "Aggregate" else total
+
+    return bound(df._jdf.queryExecution().optimizedPlan())
 
 
 def _default_fs_is_local(spark: SparkSession) -> bool:
@@ -135,7 +202,7 @@ def _leaf_type(col, conf) -> T.DataType | None:
     if phys == "DOUBLE" and kind == "None":
         return T.DoubleType()
     if phys == "INT32":
-        if kind == "None":
+        if kind in ("None", "Null"):
             return T.IntegerType()
         if kind == "Date":
             return T.DateType()
@@ -166,6 +233,8 @@ def _leaf_type(col, conf) -> T.DataType | None:
             return T.StringType() if conf("spark.sql.parquet.binaryAsString") else T.BinaryType()
         if kind == "BSON":
             return T.BinaryType()
+    if phys == "FIXED_LEN_BYTE_ARRAY" and kind == "None":
+        return T.BinaryType()
     return None
 
 

@@ -224,18 +224,20 @@ class Cast(Node):
             # (a bare decimal try_cast would ROUND fractions half-up where
             # both the bigint path and Polars truncate/fail):
             if DT.is_float(src_tag):
-                # truncate toward zero, in decimal so 2**63..2**64-1 survive.
-                # Scale 18, not 9: double→decimal rounds HALF_UP at the target
-                # scale BEFORE the floor/ceil, and at scale 9 a double within
-                # 5e-10 below an integer (2.9999999999995) would round up and
-                # floor to 3 where bigint/Polars truncate to 2.  At scale 18
-                # the rounding error (≤5e-19) cannot bridge to the next
-                # integer, and 38-18=20 integer digits still cover U64_MAX
-                # (non-integer doubles are < 2**53; larger ones overflow to
-                # null → cast failure, same as the bigint path).
-                d = src.try_cast("decimal(38,18)")
-                out = F.when(d < 0, F.ceil(d)).otherwise(F.floor(d)).try_cast(
-                    "decimal(20,0)"
+                # truncate toward zero with the exact double→bigint cast; a
+                # double→decimal cast goes through the shortest decimal
+                # string and turns 533048064522343744.0 into ...740.
+                # 2**63..2**64-1 take the bigint cast of x - 2**63, which
+                # is exact there (Sterbenz).  NaN, ±inf and everything
+                # else out of range fail (null), as on the bigint path.
+                x = src.cast("double")
+                two63 = 2.0**63
+                out = F.when(
+                    F.abs(x) < F.lit(two63), x.cast("bigint").cast("decimal(20,0)")
+                ).when(
+                    (x >= F.lit(two63)) & (x < F.lit(2.0**64)),
+                    (x - F.lit(two63)).cast("bigint").cast("decimal(20,0)")
+                    + F.lit(str(2**63)).cast("decimal(20,0)"),
                 )
             elif src_tag == DT.STR:
                 # integer strings only — '2.7' must FAIL like bigint/Polars,

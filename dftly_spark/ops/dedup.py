@@ -26,10 +26,14 @@ All text/hash paths are pure ``pyspark.sql.functions`` — no Python UDFs.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..io import _row_bound
 from .scale import durable_checkpoint
 
 from .similarity import cosine
@@ -847,6 +851,56 @@ def _plane_signature(vec: SparkColumn, planes: list[list[float]]) -> SparkColumn
     return bucket
 
 
+def _bucketed(base: DataFrame, planes: list[list[float]]) -> DataFrame:
+    """``base`` with ``_v`` replaced by its unit vector and a ``_bucket``:
+    the raw vector's sign bucket, or NULL for a row :func:`unit` does not
+    admit.  Every cosine of such a row is NULL and fails the threshold, so
+    its NULL bucket keeps it out of the bucket join instead of pairing it
+    with every row of its bucket first (a NaN vector signs into the
+    all-bits bucket)."""
+    from .similarity import unit
+
+    return (
+        base.withColumn("_u", unit(F.col("_v")))
+        .withColumn(
+            "_bucket",
+            F.when(F.col("_u").isNotNull(), _plane_signature(F.col("_v"), planes)),
+        )
+        .withColumn("_v", F.col("_u"))
+        .drop("_u")
+    )
+
+
+#: estimated pair count at which the pair scorers leave the interpreted
+#: fold for the Arrow kernels.  Interleaved A/Bs on local[4] put the
+#: crossover between 125k pairs (a 500-row brute scan, fold faster) and
+#: 500k (4,000 rows in 16 cells, arrow faster).
+_ARROW_PAIRS = 1 << 18
+
+
+def _pair_engine(bound: int | None, cells: int, where: str) -> str:
+    """The one choice between the two pair scorers, ``"fold"`` or
+    ``"arrow"``, made from ``bound`` (:func:`~dftly_spark.io._row_bound`
+    of the input, which costs no job) and the number of cells pairs are
+    scored within, and logged (INFO) with its inputs either way.
+
+    Balanced cells hold ``bound² / (2·cells)`` pairs.  From
+    ``_ARROW_PAIRS`` estimated pairs the Arrow kernels score
+    (:func:`_cell_pairs_arrow`, :func:`_allpairs_arrow`): each vector
+    crosses into Python once and the pairs expand in numpy, which wins
+    ~20× at 50M pairs but pays a fixed Python-worker cost.  Below it, or
+    where the plan gives no bound, the interpreted fold over the pair
+    join scores.  Both give bit-identical cosines, so the choice never
+    changes a result."""
+    pairs = None if bound is None else bound * bound // (2 * cells)
+    choice = "arrow" if pairs is not None and pairs >= _ARROW_PAIRS else "fold"
+    logging.getLogger(__name__).info(
+        "%s: %s pair scorer at %s estimated pairs (row bound %s, %d cells; arrow from %s)",
+        where, choice, pairs, bound, cells, _ARROW_PAIRS,
+    )
+    return choice
+
+
 def embedding_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -857,7 +911,6 @@ def embedding_dup_pairs(
     n_planes: int = 8,
     seed: int = 42,
     dim: int | None = None,
-    pair_scorer: str = "fold",
 ) -> DataFrame:
     """Pairs with cosine similarity ≥ ``threshold``: ``(id_l, id_r, cos)``.
 
@@ -870,13 +923,13 @@ def embedding_dup_pairs(
     are positive scalings of each other have *identical* sign signatures and
     are never missed.
 
-    ``pair_scorer="arrow"`` evaluates the pairwise cosines with the
-    vectorized path (BIT-IDENTICAL values — see
-    :func:`_cell_pairs_arrow`) instead of the interpreted per-pair fold:
-    for ``lsh`` each sign bucket is one ``applyInPandas`` group; for
-    ``brute`` the all-pairs work spreads over hash block pairs
-    (:func:`_allpairs_arrow`), so it parallelizes instead of riding one
-    broadcast nested loop (round-15 A/B in OPTIMIZATION_r15.md).
+    The pairwise cosines are scored by the interpreted per-pair fold or
+    by the vectorized Arrow kernels, as :func:`_pair_engine` picks from
+    the input's row bound over ``2**n_planes`` buckets (``lsh``) or one
+    cell (``brute``); the values are BIT-IDENTICAL either way.  On arrow
+    each sign bucket is one ``applyInPandas`` group (``lsh``), or the
+    all-pairs work spreads over hash block pairs (``brute``,
+    :func:`_allpairs_arrow`) instead of riding one broadcast nested loop.
     """
     from .similarity import dot, infer_dim, unit
 
@@ -884,17 +937,16 @@ def embedding_dup_pairs(
         F.col(id_col).alias("_id"),
         F.col(vec_col).cast("array<double>").alias("_v"),
     )
+    cells = 2**n_planes if method == "lsh" else 1
+    scorer = _pair_engine(_row_bound(df), cells, f"embedding_dup_pairs(method={method!r})")
     if method == "lsh":
         if dim is None:
             dim = infer_dim(df, vec_col)
-        planes = _hyperplanes(dim, n_planes, seed)
-        base = base.withColumn("_bucket", _plane_signature(F.col("_v"), planes))
-        base = base.withColumn("_v", unit(F.col("_v")))
         # both self-join sides read base: truncate lineage or the plane-
         # signature + normalize folds (interpreted, n_planes x dim ops per
         # row) run twice.
-        base = durable_checkpoint(base, eager=False)
-        if pair_scorer == "arrow":
+        base = durable_checkpoint(_bucketed(base, _hyperplanes(dim, n_planes, seed)), eager=False)
+        if scorer == "arrow":
             return _cell_pairs_arrow(base, threshold, cell_col="_bucket")
         join_keys = ["_bucket"]
         left = base.select(*join_keys, F.col("_id").alias("id_l"), F.col("_v").alias("_vl"))
@@ -907,13 +959,11 @@ def embedding_dup_pairs(
         base = durable_checkpoint(
             base.withColumn("_v", unit(F.col("_v"))), eager=False
         )
-        if pair_scorer == "arrow":
+        if scorer == "arrow":
             return _allpairs_arrow(base, threshold)
         left = base.select(F.col("_id").alias("id_l"), F.col("_v").alias("_vl"))
         right = base.select(F.col("_id").alias("id_r"), F.col("_v").alias("_vr"))
         cand = left.join(F.broadcast(right), F.col("id_l") < F.col("id_r"))
-    if pair_scorer != "fold":
-        raise ValueError(f"pair_scorer must be 'fold' or 'arrow', got {pair_scorer!r}")
     cos = dot(F.col("_vl"), F.col("_vr"))
     return cand.select("id_l", "id_r", cos.alias("cos")).where(F.col("cos") >= threshold)
 
@@ -941,7 +991,7 @@ def cross_corpus_embedding_pairs(
     side's ``(id, bucket, unit-vector)`` frame is what you'd persist
     between ingests — new batches bucket against it with no corpus rescan.
     """
-    from .similarity import dot, infer_dim, unit
+    from .similarity import dot, infer_dim
 
     if dim is None:
         dim = infer_dim(corpus_df, vec_col)
@@ -952,9 +1002,7 @@ def cross_corpus_embedding_pairs(
             F.col(id_col).alias(out_id),
             F.col(vec_col).cast("array<double>").alias("_v"),
         )
-        return base.withColumn("_bucket", _plane_signature(F.col("_v"), planes)).withColumn(
-            "_v", unit(F.col("_v"))
-        )
+        return _bucketed(base, planes)
 
     new_b = prep(new_df, "new_id").withColumnRenamed("_v", "_vl")
     old_b = prep(corpus_df, "corpus_id").withColumnRenamed("_v", "_vr")
@@ -1044,7 +1092,6 @@ def semantic_dedup_pairs(
     kmeans_iters: int = 5,
     kmeans_init: str = "sample",
     max_cell_size: int | None = None,
-    pair_scorer: str = "fold",
 ) -> DataFrame:
     """Semantic near-duplicate pairs via cluster-then-prune (SemDeDup shape).
 
@@ -1065,15 +1112,16 @@ def semantic_dedup_pairs(
     :func:`~dftly_spark.ops.similarity.assign_cells`; at 1024 cells and
     above its last-ulp caveat can move a row to an effectively-tied cell.
 
-    ``pair_scorer`` picks the within-cell pairwise engine: ``"fold"``
-    (default — the cell self-join + interpreted JVM fold) or ``"arrow"``
-    (per-cell vectorized cosine, :func:`_cell_pairs_arrow` — BIT-IDENTICAL
-    values via ascending-dimension accumulation, ~20× faster at sf1.0
-    pair volumes; needs one cell's n×n double matrix per task, so cap
-    degenerate cells with ``max_cell_size`` at scale).
+    The within-cell cosines are scored by the cell self-join and the
+    interpreted JVM fold, or by the per-cell vectorized kernel
+    (:func:`_cell_pairs_arrow`, BIT-IDENTICAL values; one cell's n×n
+    double matrix per task, so cap degenerate cells with
+    ``max_cell_size`` at scale), as :func:`_pair_engine` picks from the
+    corpus's row bound over ``n_centroids`` cells.
     """
     from .similarity import assign_cells, choose_centroid_frame, dot
 
+    scorer = _pair_engine(_row_bound(corpus), n_centroids, "semantic_dedup_pairs")
     cents = choose_centroid_frame(
         corpus,
         id_col=id_col,
@@ -1098,10 +1146,8 @@ def semantic_dedup_pairs(
     # lineage or the centroid-assignment argmax (k x dim multiply-adds
     # per row) runs twice.
     cells = durable_checkpoint(cells, eager=False)
-    if pair_scorer == "arrow":
+    if scorer == "arrow":
         return _cell_pairs_arrow(cells, threshold)
-    if pair_scorer != "fold":
-        raise ValueError(f"pair_scorer must be 'fold' or 'arrow', got {pair_scorer!r}")
     left = cells.select(
         "_cell", F.col("_id").alias("id_l"), F.col("_v").alias("_vl")
     )
@@ -1193,13 +1239,15 @@ def _cell_pairs_arrow(
     exactly the fold's sequence of IEEE-double multiply-then-add — NOT a
     BLAS matmul (which reorders accumulation and carries the last-ulp
     caveat ``_assign_cells_arrow`` documents).  Hash-pinned oracles stay
-    bit-exact, which is why this path may be used by gate queries.
+    bit-exact, which is why :func:`_pair_engine` may pick this path by
+    size alone.
 
     Memory: one cell's ``n×n`` double matrix per task (~66 MB at n≈2.9k);
     pair with ``max_cell_size`` at scale exactly like the join path's
-    skew cap.  NULL vectors (every vector ``unit`` does not admit) are
-    dropped before the ``n×n`` work — the fold path's NULL cosine fails
-    the threshold the same way.  Equal-id pairs are never emitted, matching
+    skew cap.  A row with a NULL cell never reaches Python, as the fold's
+    equi-join on the cell never matches it; NULL vectors (every vector
+    ``unit`` does not admit) are dropped before the ``n×n`` work — the
+    fold path's NULL cosine fails the threshold the same way.  Equal-id pairs are never emitted, matching
     the fold's ``id_l < id_r`` predicate when the id column has duplicates.
     Requires fixed-dimension vectors (the corpus contract every embedding
     op in this module already states).
@@ -1215,6 +1263,7 @@ def _cell_pairs_arrow(
     id_type = cells.schema["_id"].dataType.simpleString()
     return (
         cells.select(cell_col, "_id", "_v")
+        .where(F.col(cell_col).isNotNull())
         .groupBy(cell_col)
         .applyInPandas(per_cell, f"id_l {id_type}, id_r {id_type}, cos double")
     )

@@ -1112,6 +1112,8 @@ def fit_scalar_quantizer(
     shuffle beyond the single global agg); the collected result is
     2·dim doubles — a bounded plan-build action in the same sanctioned
     regime as ``kmeans_centroids`` / ``approxQuantile``, never O(rows).
+    NaN and ±inf elements are left out of the range: Spark orders NaN
+    above every number, so one NaN would otherwise be its dimension's max.
     """
     d = dim or infer_dim(df, vec_col)
     v = F.col(vec_col)
@@ -1125,8 +1127,10 @@ def fit_scalar_quantizer(
         ).alias("_short")
     ]
     for i in range(d):
-        aggs.append(F.min(F.try_element_at(v, F.lit(i + 1))).alias(f"_mn{i}"))
-        aggs.append(F.max(F.try_element_at(v, F.lit(i + 1))).alias(f"_mx{i}"))
+        x = F.try_element_at(v, F.lit(i + 1))
+        finite = F.when(F.abs(x) < F.lit(float("inf")), x)  # NaN < inf is false
+        aggs.append(F.min(finite).alias(f"_mn{i}"))
+        aggs.append(F.max(finite).alias(f"_mx{i}"))
     row = df.agg(*aggs).collect()[0]
     if row["_short"]:
         raise ValueError(
@@ -1137,9 +1141,9 @@ def fit_scalar_quantizer(
     bad = [i for i in range(d) if row[f"_mn{i}"] is None or row[f"_mx{i}"] is None]
     if bad:
         raise ValueError(
-            f"fit_scalar_quantizer: no non-null values for dimension(s) "
-            f"{bad[:5]}{'...' if len(bad) > 5 else ''} of {d} — empty corpus "
-            f"or all-null column"
+            f"fit_scalar_quantizer: no non-null values (NaN and ±inf aside) for "
+            f"dimension(s) {bad[:5]}{'...' if len(bad) > 5 else ''} of {d} — empty "
+            f"corpus or all-null column"
         )
     mins = [float(row[f"_mn{i}"]) for i in range(d)]
     maxs = [float(row[f"_mx{i}"]) for i in range(d)]

@@ -26,7 +26,10 @@ untraced; ``--reps 0`` skips the timing.  A record holds:
 * plan-shape counters (:func:`plan_shape`): exchanges, joins and windows
   over the final plans of every SQL execution the query fired (its
   pre-action jobs and the noop write), the codegen stages in the noop
-  write's final plan.
+  write's final plan;
+* ``decisions``: the INFO lines the ``dftly_spark`` loggers wrote during
+  the traced run, in order: each automatic choice with the inputs that
+  decided it (pair and cell scorer, footer-schema fallback).
 
 A query that raises gets ``{"query", "error"}`` instead.
 
@@ -45,7 +48,9 @@ records the seed.  Run one query per process for cold-session plans.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
+import logging
 import os
 import re
 import statistics
@@ -139,6 +144,23 @@ def _last_execution(spark) -> int:
     return max((e.executionId() for e in _sql_executions(spark)), default=-1)
 
 
+@contextlib.contextmanager
+def _decisions():
+    """The INFO lines the ``dftly_spark`` loggers write inside the block."""
+    lines: list[str] = []
+    handler = logging.Handler(logging.INFO)
+    handler.emit = lambda record: lines.append(record.getMessage())
+    logger = logging.getLogger("dftly_spark")
+    level = logger.level
+    logger.setLevel(logging.INFO)
+    logger.addHandler(handler)
+    try:
+        yield lines
+    finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)
+
+
 def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, list[str], str]:
     """One traced build + plan + noop action: (layer split, executed plan,
     the described final plan of every SQL execution it fired, in order,
@@ -147,19 +169,20 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, list[str],
     group = f"profile:{name}"
     start = _last_execution(spark)
     tr = Tracer()
-    try:
-        tr.install()
-        sc.setJobGroup(group, name)
-        with tr.span("contract.build"):
-            df = build(spark, sf_dir)
-        pre = list(sc.statusTracker().getJobIdsForGroup(group))
-        plan = _executed_plan(spark, df)
-        last = _last_execution(spark)
-        with tr.span("spark.exec"):
-            _noop(df)
-    finally:
-        tr.uninstall()
-        sc._jsc.clearJobGroup()
+    with _decisions() as decisions:
+        try:
+            tr.install()
+            sc.setJobGroup(group, name)
+            with tr.span("contract.build"):
+                df = build(spark, sf_dir)
+            pre = list(sc.statusTracker().getJobIdsForGroup(group))
+            plan = _executed_plan(spark, df)
+            last = _last_execution(spark)
+            with tr.span("spark.exec"):
+                _noop(df)
+        finally:
+            tr.uninstall()
+            sc._jsc.clearJobGroup()
     execs = _sql_executions(spark, start)
     finals = [e.physicalPlanDescription() for e in execs]
     final = next(d for e, d in zip(execs, finals) if e.executionId() > last)
@@ -185,6 +208,7 @@ def _traced(spark, name: str, build, sf_dir: str) -> tuple[dict, str, list[str],
         "shuffle_write_mb": act.shuffle_write_mb,
         "spill_mb": act.spill_mb,
         "failed_tasks": act.failed_tasks + pre_t.failed_tasks,
+        "decisions": decisions,
     }
     return split, plan, finals, final
 

@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from dftly_spark.io import _footer_schema, read_table, register_views, write_table
+from dftly_spark.io import _footer_schema, _row_bound, read_table, register_views, write_table
 
 ROOT = Path(__file__).resolve().parents[1]
 SF001 = "/root/testdata/sf0.001"
@@ -170,6 +170,11 @@ SYNTHETIC = {
     "binary_as_string": (
         pa.array([b"x"]), {}, {"spark.sql.parquet.binaryAsString": "true"}, True,
     ),
+    "fixed_len_binary": (pa.array([b"ab"], pa.binary(2)), {}, {}, True),
+    "fixed_len_binary_as_string": (
+        pa.array([b"ab"], pa.binary(2)), {}, {"spark.sql.parquet.binaryAsString": "true"}, True,
+    ),
+    "null": (pa.array([None], pa.null()), {}, {}, True),
     "date": (pa.array([dt.date(2020, 1, 1)], pa.date32()), {}, {}, True),
     "time": (pa.array([1], pa.time64("us")), {}, {}, False),
     "struct": (pa.array([{"a": 1, "b": "x"}], pa.struct([("a", pa.int32()), ("b", pa.string())])), {}, {}, True),
@@ -190,7 +195,7 @@ def test_footer_schema_matches_inference_or_falls_back(spark, conf, tmp_path, ca
     assert (footer is not None) == mapped
     if mapped:
         assert footer == spark.read.parquet(path).schema
-        assert read_table(spark, path).schema == footer
+        assert _jobs(spark, lambda: read_table(spark, path).schema) == (footer, [])
     else:
         with pytest.raises(Exception):
             spark.read.parquet(path).schema
@@ -210,16 +215,50 @@ def test_footer_schema_falls_back_off_single_local_files(spark, frame, tmp_path,
     ).schema
 
 
+def _jobs(spark, fn):
+    """``(fn(), the ids of the Spark jobs it fired)``."""
+    sc = spark.sparkContext
+    group = f"footer-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "no job expected")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_table_scans_fire_no_job(spark):
     from dftly_spark.contract.common import _t
 
-    sc = spark.sparkContext
-    group = f"footer-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "table scans")
-    try:
+    def scans():
         frames = [_t(spark, SF001, Path(p).stem) for p in sorted(glob.glob(f"{SF001}/*.parquet"))]
         register_views(spark, SF001, ["region", "nation"])
-    finally:
-        sc._jsc.clearJobGroup()
+        return frames
+
+    frames, jobs = _jobs(spark, scans)
     assert len(frames) == 10 and all(f.columns for f in frames)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == []
+
+
+def test_row_bound_fires_no_job(spark):
+    """Footer rows for a parquet scan, the rows of a local relation, a sum
+    over a union; no bound over an RDD leaf, a checkpoint or a join."""
+    emb = read_table(spark, f"{SF001}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    copies = emb.where(F.col("vec_id") % 8 == 0).select(
+        (F.col("vec_id") + 10_000_000).alias("vec_id"),
+        F.transform("embedding", lambda x: x * F.lit(1.5)).alias("embedding"),
+    )
+    local = spark.createDataFrame(pa.table({"id": pa.array([1, 2, 3], pa.int64())}))
+    frames = [
+        emb.unionByName(copies),  # x46's augmented corpus: 500 + 500 footer rows
+        local,
+        local.groupBy("id").count(),
+        spark.createDataFrame([(1,), (2,)], "id long"),  # parallelized: an RDD leaf
+        local.localCheckpoint(eager=False),
+        local.join(local, "id"),
+    ]
+    bounds, jobs = _jobs(spark, lambda: [_row_bound(f) for f in frames])
+    assert bounds == [1000, 3, 3, None, None, None]
+    assert jobs == []

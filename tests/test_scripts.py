@@ -110,16 +110,36 @@ def test_profile_records_two_queries(spark, tmp_path):
         "action_s", "action_jobs", "action_tasks", "action_run_s", "action_cpu_s",
         "shuffle_write_mb", "spill_mb", "failed_tasks",
         "n_exchange", "n_bcast_exchange", "n_bnl", "n_cartesian", "n_window", "n_codegen",
-        "n_python", "scan_cols_max",
+        "n_python", "scan_cols_max", "decisions",
     }
     for r in recs:
         assert set(r) == keys, r
         # the scans take their schema from the parquet footer: no job
         assert r["pre_action_jobs"] == 0 and r["action_jobs"] >= 1
+        assert r["decisions"] == []
         assert r["n_python"] == 0 and r["scan_cols_max"] > 0 and r["n_codegen"] >= 1
         assert len(r["reps_s"]) == 1 and r["min_s"] == r["median_s"] == r["reps_s"][0]
         dump = (tmp_path / f"{r['query']}.txt").read_text()
         assert dump.startswith("# PYTHONHASHSEED=0\n") and "# execution 1\n" in dump
+
+
+def test_profile_records_the_decisions(spark):
+    """x46's record carries the pair-scorer and cell-scorer choices with
+    the inputs that decided them; the session's logging is as it was."""
+    import logging
+
+    import __spark_entry__ as entry
+
+    logger = logging.getLogger("dftly_spark")
+    level, handlers = logger.level, list(logger.handlers)
+    (rec,) = _profile_script().profile(spark, SF_DIR, entry.queries(), ["x46_semantic_dedup"], 0)
+    assert (logger.level, logger.handlers) == (level, handlers)
+    # 500 embeddings rows plus the copies' 500 before their filter
+    assert (
+        "semantic_dedup_pairs: fold pair scorer at 31250 estimated pairs "
+        "(row bound 1000, 16 cells; arrow from 262144)"
+    ) in rec["decisions"], rec
+    assert any(": fold cell scorer at k=16 centroids" in d for d in rec["decisions"]), rec
 
 
 # a formatted AQE plan: the final tree, then the initial one, then details

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from dftly_spark.parser import Parser
@@ -82,6 +82,9 @@ def test_string_cast_matches_model(spark, vals):
         max_size=30,
     )
 )
+# integral doubles at and above 2**53 whose shortest decimal string drops
+# digits; the edges of the 2**63 split and of the uint64 range
+@example([5.3304806452234374e17, 1e19, 2.0**63, 2.0**64 - 2048, 2.0**64, -0.5, -2.7])
 def test_float_cast_truncates_toward_zero(spark, vals):
     df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "i long, d double")
     col = Parser.expr_to_spark("$d ::? uint64", schema=df, uint64_decimal=True)

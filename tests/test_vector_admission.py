@@ -28,13 +28,17 @@ from pyspark.sql import functions as F
 from dftly_spark.ops import (
     brute_force_topk,
     centroid_outliers,
+    cross_corpus_embedding_pairs,
     embedding_dup_pairs,
+    fit_scalar_quantizer,
     ivf_topk,
+    quantization_fidelity,
     semantic_dedup_pairs,
     similarity,
     topic_assign,
 )
-from dftly_spark.ops.dedup import _hyperplanes
+from dftly_spark.ops.dedup import _bucketed, _hyperplanes, _plane_signature
+from test_pair_scorer_arrow import local_vectors, scored
 
 NAN, INF = float("nan"), float("inf")
 DIM = 4
@@ -194,6 +198,47 @@ def test_fold_pair_scorers_drop_nan_rows(spark):
         assert got and all(999 not in (r.id_l, r.id_r) for r in got)
 
 
+def test_lsh_buckets_leave_inadmissible_rows_out(spark, monkeypatch, caplog):
+    # a NaN vector signs into the all-bits bucket (NaN > 0 holds in
+    # Spark); it must get no bucket, so neither the bucket join nor the
+    # per-bucket Arrow kernel ever sees it
+    rows = [
+        (1, [NAN, 1.0, 0.0, 0.0]), (2, [NAN] * DIM), (3, None), (4, [0.0] * DIM),
+        (5, [1.0, 2.0, 3.0, 4.0]), (6, [0.5, -1.0, 2.0, 0.0]), (7, [2.0, 4.0, 6.0, 8.0]),
+    ]
+    planes = _hyperplanes(DIM, 3, 42)
+    base = spark.createDataFrame(rows, SCHEMA).select(
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
+    )
+    raw = dict(base.select("_id", _plane_signature(F.col("_v"), planes)).collect())
+    assert raw[1] == raw[2] == 7
+    got = {r._id: r._bucket for r in _bucketed(base, planes).collect()}
+    assert got == {1: None, 2: None, 3: None, 4: None, 5: raw[5], 6: raw[6], 7: raw[7]}
+    assert raw[5] == raw[7]
+    df = local_vectors(spark, rows)
+    for engine in ("fold", "arrow"):
+        lsh = scored(monkeypatch, caplog, engine, lambda: embedding_dup_pairs(
+            df, "vec_id", "embedding", threshold=0.9, method="lsh", n_planes=3, dim=DIM
+        ))
+        assert [(i, j) for i, j, _ in lsh] == [(5, 7)], engine
+    new = df.where("vec_id < 6")
+    cross = cross_corpus_embedding_pairs(new, df, "vec_id", "embedding", threshold=0.9,
+                                         n_planes=3, dim=DIM)
+    assert sorted((r.new_id, r.corpus_id) for r in cross.collect()) == [(5, 5), (5, 7)]
+
+
+def test_quantizer_range_leaves_non_finite_elements_out(spark):
+    rows = [(1, [NAN, 1.0, 0.0, 0.0]), (2, [NAN] * DIM), (3, [1.0, 2.0, 3.0, 4.0]),
+            (4, [0.5, -1.0, 2.0, 0.0])]
+    df = spark.createDataFrame(rows, SCHEMA)
+    mins, maxs = fit_scalar_quantizer(df, "embedding", dim=DIM)
+    assert (mins, maxs) == ([0.5, -1.0, 0.0, 0.0], [1.0, 2.0, 3.0, 4.0])
+    with_inf = spark.createDataFrame(rows + [(5, [INF, -INF, 1.0, 1.0])], SCHEMA)
+    assert fit_scalar_quantizer(with_inf, "embedding", dim=DIM) == (mins, maxs)
+    fidelity = dict(quantization_fidelity(df, "vec_id", "embedding", mins, maxs).collect())
+    assert fidelity[3] > 0.999 and fidelity[4] > 0.999
+
+
 def test_centroid_outliers_skip_nan_row(spark):
     rows, _ = _clusters()
     clean = spark.createDataFrame(rows, SCHEMA)
@@ -295,28 +340,28 @@ def test_cell_scorers_match_reference(spark, monkeypatch, rows):
 @_SETTINGS
 @_with_edges
 @given(rows=_frames())
-def test_pair_scorers_match_reference(spark, rows):
+def test_pair_scorers_match_reference(spark, monkeypatch, caplog, rows):
     nc, threshold, n_planes = 3, 0.5, 3
-    df = spark.createDataFrame(rows, SCHEMA)
+    df = local_vectors(spark, rows)
     cents = _first_cells(rows, nc)
     planes = _hyperplanes(DIM, n_planes, 42)
     same_cell = lambda a, b: _cell(a[1], cents) == _cell(b[1], cents)  # noqa: E731
     same_bucket = lambda a, b: _signature(a[1], planes) == _signature(b[1], planes)  # noqa: E731
     cases = [
-        (lambda ps: semantic_dedup_pairs(
-            df, threshold=threshold, n_centroids=nc, strategy="first", pair_scorer=ps
+        (lambda: semantic_dedup_pairs(
+            df, threshold=threshold, n_centroids=nc, strategy="first"
         ), _pairs(rows, threshold, same_cell)),
-        (lambda ps: embedding_dup_pairs(
-            df, "vec_id", "embedding", threshold=threshold, pair_scorer=ps
+        (lambda: embedding_dup_pairs(
+            df, "vec_id", "embedding", threshold=threshold
         ), _pairs(rows, threshold)),
-        (lambda ps: embedding_dup_pairs(
+        (lambda: embedding_dup_pairs(
             df, "vec_id", "embedding", threshold=threshold, method="lsh",
-            n_planes=n_planes, dim=DIM, pair_scorer=ps,
+            n_planes=n_planes, dim=DIM,
         ), _pairs(rows, threshold, same_bucket)),
     ]
     for build, want in cases:
-        for ps in ("fold", "arrow"):
-            assert sorted(map(tuple, build(ps).collect())) == want, ps
+        for engine in ("fold", "arrow"):
+            assert scored(monkeypatch, caplog, engine, build) == want, engine
 
 
 def test_arrow_cell_scorers_on_a_corpus_with_no_admitted_vector(spark, monkeypatch):
