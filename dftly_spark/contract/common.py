@@ -129,9 +129,10 @@ def _lloyd_first_values(sf_dir: str, k: int) -> str:
     centroid strategy runs with ``kmeans_init="first"``: lowest-id unit
     init, argmax-dot assign with first-cell tie-break, raw-vector mean
     update, empty cells keep previous, unit-normalize new means, two
-    iterations.  Summation order differs from Spark's (partial aggs vs
-    numpy pairwise), so centroids agree to ~1e-12 — far below any real
-    assignment margin.  Shared by the x56 and x160 oracles."""
+    iterations.  Summation order differs from Spark's (numpy pairwise
+    here; key order on the one-task fit below its row gate, partial aggs
+    on the round fit above it), so centroids agree to ~1e-12 — far below
+    any real assignment margin.  Shared by the x56 and x160 oracles."""
     import numpy as np
     import pyarrow.parquet as pq
 

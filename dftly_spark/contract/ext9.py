@@ -199,9 +199,10 @@ _q("x159_spearman_corr", _x159, _x159_oracle)
 def _x160(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced sampling (ops/sampling.py cluster_balanced_sample,
     the SemDeDup/density-pruning selection step): k-means cells fitted
-    cluster-side (checkpointed 1-row centroid broadcast, no plan
-    literals, no driver matrix), capped per cell in the engine-replayable
-    LCG order.  The oracle refits the same deterministic Lloyd schedule
+    cluster-side (in one executor task below the fit's row gate, which
+    every testdata corpus is, else in checkpointed rounds; checkpointed
+    1-row centroid broadcast, no plan literals, no driver matrix), capped
+    per cell in the engine-replayable LCG order.  The oracle refits the same deterministic Lloyd schedule
     independently in numpy (the x56 pattern) and replays assignment +
     cap in SQL."""
     from dftly_spark.ops import cluster_balanced_sample

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from ..io import _row_bound
 from .scale import durable_checkpoint
 
-from .similarity import cosine
+from .similarity import _cos_matrix, cosine
 from .textops import doc_tokens, normalize_text, tokens
 
 
@@ -1191,20 +1191,6 @@ def _pair_matrix(pdf):
     ids = pdf["_id"].to_numpy()
     order = np.argsort(ids, kind="stable")
     return ids[order], np.stack(pdf["_v"].to_numpy()[order])
-
-
-def _cos_matrix(A, B):
-    """``A @ B.T`` accumulated in ASCENDING DIMENSION ORDER — for every
-    pair, exactly the JVM fold's sequence of IEEE-double multiply-then-add
-    (a BLAS matmul would reorder it)."""
-    import numpy as np
-
-    C = np.zeros((A.shape[0], B.shape[0]))
-    buf = np.empty_like(C)
-    for k in range(A.shape[1]):
-        np.multiply(A[:, k][:, None], B[:, k][None, :], out=buf)
-        C += buf
-    return C
 
 
 def _self_pairs(ids, M, threshold: float):

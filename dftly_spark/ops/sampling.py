@@ -614,8 +614,9 @@ def cluster_balanced_sample(
     selection.
 
     Scale shape: the centroid fit is :func:`~dftly_spark.ops.similarity.choose_centroid_frame`
-    (cluster-side Lloyd — the k×dim matrix never touches the driver or
-    the plan text; it attaches to the scan as a checkpointed 1-row
+    (cluster-side Lloyd: one executor task up to its row gate, checkpointed
+    rounds above it — the k×dim matrix never touches the driver or the
+    plan text; it attaches to the scan as a checkpointed 1-row
     broadcast); assignment is one broadcast-matrix argmax scan
     (``assign_cells``, whose scorer follows ``n_cells``); the cap is one window keyed on ``(cell)`` over
     ≤ corpus rows — the same single-shuffle shape as ``cap_per_group``.

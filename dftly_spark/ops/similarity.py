@@ -17,6 +17,7 @@ deterministic left-to-right summation — reproducible across engines).
 
 from __future__ import annotations
 
+import logging
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column as SparkColumn
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from .scale import durable_checkpoint
 
+from ..io import _row_bound
 from ..sqlgen import portable_round
 
 if TYPE_CHECKING:
@@ -297,12 +299,16 @@ def kmeans_centroids(
     """Lloyd's k-means over an embedding column; returns unit centroids.
 
     The driver-side read of :func:`choose_centroid_frame`'s ``"kmeans"``
-    fit.  Each iteration is two distributed steps — assign (argmax dot
-    against the current centroid matrix, attached via 1-row broadcast) and
-    update (posexplode + groupBy(cell, dim) avg, a map-side-combinable
-    aggregation whose output is ``k×dim`` rows).  Centroid state stays
-    DataFrame-RESIDENT across iterations (checkpointed ``k×dim`` frame);
-    the driver sees the matrix exactly once, in the final collect — at
+    fit, which takes one of two paths.  Up to ``_LOCAL_FIT_ROWS`` rows
+    (a job-free bound) the whole fit runs in numpy inside one executor
+    task (:func:`_lloyd_task`), and the final collect is its only job.
+    Above that, or with no bound, each iteration is two distributed steps
+    (:func:`_lloyd`) — assign (argmax dot against the current centroid
+    matrix, attached via 1-row broadcast) and update (posexplode +
+    groupBy(cell, dim) avg, a map-side-combinable aggregation whose
+    output is ``k×dim`` rows), with centroid state DataFrame-RESIDENT
+    across iterations (checkpointed ``k×dim`` frame).  On either path the
+    driver sees the matrix exactly once, in the final collect — at
     production IVF shapes (k=65k, dim=1k) the ~0.5 GB matrix never rides
     py4j per iteration.  Empty cells keep their previous centroid.
 
@@ -360,7 +366,9 @@ def _matrix_frame(cdf: DataFrame) -> DataFrame:
 
 
 def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
-    """``iters`` Lloyd iterations over long-form centroid state.
+    """``iters`` Lloyd iterations over long-form centroid state, two
+    checkpointed rounds each: the fit for corpora above
+    ``_LOCAL_FIT_ROWS`` rows or with no job-free row bound.
 
     ``base`` is the corpus as one ``_v: array<double>`` column; ``cdf`` the
     (checkpointed) ``(_cell, _i, _m)`` centroid frame.  Returns the refined
@@ -419,6 +427,120 @@ def _lloyd(base: DataFrame, cdf: DataFrame, iters: int) -> DataFrame:
     return cdf
 
 
+def _lloyd_task(
+    corpus: DataFrame, key: SparkColumn, vec_col: str, n: int, iters: int
+) -> DataFrame:
+    """:func:`_lloyd` in ONE executor task, as a lazy ``(_cell, _i, _m)``
+    frame: the admitted rows (:func:`unit`) are coalesced into one
+    partition, sorted by ``(_k, _v)`` there, and fitted in numpy
+    (:func:`_lloyd_fit`).  The sort fixes every summation order, so the
+    centroids do not depend on how the rows arrive."""
+    v = F.col(vec_col).cast("array<double>")
+    return (
+        corpus.select(key, v.alias("_v"))
+        .where(unit(F.col("_v")).isNotNull())
+        .coalesce(1)
+        .sortWithinPartitions("_k", "_v")
+        .mapInArrow(
+            lambda batches: _lloyd_batches(batches, n, iters),
+            "_cell int, _i int, _m double",
+        )
+    )
+
+
+def _lloyd_batches(batches, n: int, iters: int):
+    """The task side of :func:`_lloyd_task`: every Arrow batch of the one
+    partition → one long-form batch of the fitted centroids (none when no
+    row is admitted).  Vectors of different lengths have no mean: the
+    task fails with an error naming two of the lengths."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vecs = [b.column("_v") for b in batches if b.num_rows]
+    if not vecs:
+        return
+    col = pa.concat_arrays(vecs)
+    lens = pc.list_value_length(col).to_numpy()
+    if (lens != lens[0]).any():
+        raise ValueError(
+            f"k-means needs vectors of one length, got {lens[0]} and "
+            f"{lens[lens != lens[0]][0]}"
+        )
+    dim = int(lens[0])
+    V = col.flatten().to_numpy(zero_copy_only=False).reshape(len(col), dim)
+    C = _lloyd_fit(V, n, iters)
+    k = len(C)
+    yield pa.RecordBatch.from_arrays(
+        [
+            pa.array(np.repeat(np.arange(1, k + 1, dtype=np.int32), dim)),
+            pa.array(np.tile(np.arange(dim, dtype=np.int32), k)),
+            pa.array(C.ravel()),
+        ],
+        names=["_cell", "_i", "_m"],
+    )
+
+
+def _lloyd_fit(V, n: int, iters: int):
+    """Lloyd's k-means over admitted rows ``V`` (n_rows×dim float64, in
+    key order), with :func:`_lloyd`'s arithmetic rules:
+
+    * init: the first ``n`` rows, unit-normalized by :func:`_fold_unit`;
+    * assign: :func:`_cos_matrix`'s left-fold dot of each raw row against
+      each centroid, then the first maximum (lowest cell wins ties);
+    * update: each cell's raw mean, summed in row order, unit-normalized
+      by the fold where it is admitted (a zero mean stays as it is); an
+      empty cell keeps its previous centroid."""
+    import numpy as np
+
+    C, _ = _fold_unit(V[:n])
+    for _ in range(iters if len(C) else 0):
+        cell = _cos_matrix(V, C).argmax(axis=1)
+        sums = np.zeros_like(C)
+        np.add.at(sums, cell, V)  # unbuffered: row by row, in key order
+        counts = np.bincount(cell, minlength=len(C))
+        had = counts > 0
+        mean = sums[had] / counts[had][:, None]
+        U, ok = _fold_unit(mean)
+        C[had] = np.where(ok[:, None], U, mean)
+    return C
+
+
+def _fold_unit(M):
+    """``(U, ok)``: each row of ``M`` divided by the square root of its
+    squared norm, summed as :func:`unit`'s left fold over dim order, and
+    the mask of rows whose squared norm is finite and > 0 (``U`` holds
+    garbage elsewhere)."""
+    import numpy as np
+
+    s = np.zeros(len(M))
+    for j in range(M.shape[1]):
+        s += M[:, j] * M[:, j]
+    ok = (s > 0) & (s < np.inf)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return M / np.sqrt(s)[:, None], ok
+
+
+def _cos_matrix(A, B):
+    """``A @ B.T`` accumulated in ASCENDING DIMENSION ORDER — for every
+    pair, exactly the JVM fold's sequence of IEEE-double multiply-then-add
+    (a BLAS matmul would reorder it)."""
+    import numpy as np
+
+    C = np.zeros((A.shape[0], B.shape[0]))
+    buf = np.empty_like(C)
+    for k in range(A.shape[1]):
+        np.multiply(A[:, k][:, None], B[:, k][None, :], out=buf)
+        C += buf
+    return C
+
+
+#: row bound up to which a ``"kmeans"`` fit runs in one task
+#: (:func:`_lloyd_task`) instead of ``2×iters`` checkpointed rounds: 2**13
+#: rows are 64 MB of float64 at dim 1,024 (4 MB at the testdata's 64)
+_LOCAL_FIT_ROWS = 2**13
+
+
 def choose_centroid_frame(
     corpus: DataFrame,
     *,
@@ -437,10 +559,15 @@ def choose_centroid_frame(
     * ``"first"`` — the ``n_centroids`` lowest-id corpus vectors; fully
       deterministic and replayable in plain SQL (the driver oracles do).
     * ``"sample"`` — seeded hash-ordered sample, independent of data order.
-    * ``"kmeans"`` — Lloyd refinement (:func:`_lloyd`, ``kmeans_iters``
-      iterations) from the ``kmeans_init`` init ("sample" default; "first"
-      for external replay); best cell balance/recall, costs ``2×iters``
-      extra jobs at build time.
+    * ``"kmeans"`` — Lloyd refinement (``kmeans_iters`` iterations) from
+      the ``kmeans_init`` init ("sample" default; "first" for external
+      replay); best cell balance/recall.  Where the corpus's job-free row
+      bound (:func:`~dftly_spark.io._row_bound`) is at most
+      ``_LOCAL_FIT_ROWS``, the whole fit runs in one executor task
+      (:func:`_lloyd_task`) and the returned frame is lazy: building it
+      fires no job.  Otherwise, or where the plan gives no bound, the fit
+      is :func:`_lloyd`'s ``2×iters`` checkpointed rounds at build time.
+      The choice is logged (INFO) with its inputs.
 
     Rows :func:`unit` does not admit are never chosen.  The k×dim matrix
     is selected, normalized, and refined entirely CLUSTER-SIDE: the driver
@@ -449,21 +576,41 @@ def choose_centroid_frame(
     survives the production IVF size (k=65k, dim=1k ≈ 0.5 GB), where plan
     literals break the plan/py4j layer.  Centroids are :func:`unit`
     vectors, whose norm is a left fold over dim order, so an external
-    engine replays them bit-for-bit.  The frame is checkpointed
-    (consumers reference it 2+ times — once per side of the candidate
-    join)."""
+    engine replays them bit-for-bit.  The ``"first"``/``"sample"`` and
+    round-fitted frames are checkpointed (consumers reference them 2+
+    times — once per side of the candidate join); the task-fitted frame
+    is read once, by the consumer's own checkpoint or collect."""
     if strategy in ("first", "sample"):
         return _init_centroid_frame(
             corpus, id_col=id_col, vec_col=vec_col, n=n_centroids,
             strategy=strategy, seed=seed,
         )
-    if strategy == "kmeans":
-        init = _init_centroid_frame(
-            corpus, id_col=id_col, vec_col=vec_col, n=n_centroids,
-            strategy=kmeans_init, seed=seed,
-        )
-        base = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
-        return _lloyd(base, init, kmeans_iters)
+    if strategy != "kmeans":
+        raise ValueError(f"unknown centroid strategy {strategy!r}")
+    key = _centroid_key(id_col, kmeans_init, seed)
+    bound = _row_bound(corpus)
+    path = "task" if bound is not None and bound <= _LOCAL_FIT_ROWS else "rounds"
+    logging.getLogger(__name__).info(
+        "choose_centroid_frame: %s k-means fit at row bound %s (task up to %s rows)",
+        path, bound, _LOCAL_FIT_ROWS,
+    )
+    if path == "task":
+        return _lloyd_task(corpus, key, vec_col, n_centroids, kmeans_iters)
+    init = _init_centroid_frame(
+        corpus, id_col=id_col, vec_col=vec_col, n=n_centroids,
+        strategy=kmeans_init, seed=seed,
+    )
+    base = corpus.select(F.col(vec_col).cast("array<double>").alias("_v"))
+    return _lloyd(base, init, kmeans_iters)
+
+
+def _centroid_key(id_col: str, strategy: str, seed: int) -> SparkColumn:
+    """``_k``, the order the ``"first"``/``"sample"`` rules pick centroids
+    in: the id, or its seeded ``xxhash64``."""
+    if strategy == "first":
+        return F.col(id_col).alias("_k")
+    if strategy == "sample":
+        return F.xxhash64(F.col(id_col), F.lit(seed)).alias("_k")
     raise ValueError(f"unknown centroid strategy {strategy!r}")
 
 
@@ -484,12 +631,7 @@ def _init_centroid_frame(
     :func:`_matrix_frame` closes by shifting every later cell down one.
     The global row_number window runs over the already-LIMITed n-row
     frame (bounded SinglePartition, same regime as a top-k collect)."""
-    if strategy == "first":
-        key = F.col(id_col).alias("_k")
-    elif strategy == "sample":
-        key = F.xxhash64(F.col(id_col), F.lit(seed)).alias("_k")
-    else:
-        raise ValueError(f"unknown centroid strategy {strategy!r}")
+    key = _centroid_key(id_col, strategy, seed)
     # the filter's fold runs on every row, the unit() below only on the n
     # chosen ones: a `_u` column filtered on would run the fold twice per
     # row (the filter is pushed below the projection that computes it)
@@ -626,8 +768,6 @@ def _centroid_matrix(cents: DataFrame, k: int, where: str) -> DataFrame | Broadc
     driver pull, shared by every kernel the caller runs.  BLAS reorders
     the per-dot accumulation, so arrow scores can differ from the fold's
     in the last ulp and flip effectively-tied cells."""
-    import logging
-
     choice = "arrow" if k >= _ARROW_CELLS else "fold"
     logging.getLogger(__name__).info(
         "%s: %s cell scorer at k=%d centroids (arrow from k >= %d)",
@@ -824,8 +964,10 @@ def ivf_topk(
     * ``"sample"`` — deterministic hash-ordered sample (seeded; spreads
       centroids independent of data order).
     * ``"kmeans"`` — Lloyd refinement from the ``kmeans_init`` init
-      (``kmeans_iters`` iterations); best cell balance/recall, costs
-      ``2×iters`` extra distributed jobs at build time.
+      (``kmeans_iters`` iterations); best cell balance/recall.  Up to
+      ``_LOCAL_FIT_ROWS`` rows the fit runs in one task inside the
+      matrix checkpoint below; above that, or with no job-free row bound,
+      it costs ``2×iters`` extra distributed jobs at build time.
 
     The k×dim matrix stays cluster-resident end-to-end: it is built and
     refined as a DataFrame, and both the corpus assignment and the query

@@ -4,7 +4,7 @@
 order — is finite and > 0.  Every vector operator keys on that: an
 inadmissible row (NULL vector, NULL/NaN/inf element, zero vector, norm
 overflow) gets no cell, never becomes or moves a centroid, and takes part
-in no cosine.  Three groups of tests:
+in no cosine.  Four groups of tests:
 
 * ``unit()``'s bits against a plain-Python left fold;
 * one regression test per operator that a NaN vector used to break;
@@ -12,13 +12,19 @@ in no cosine.  Three groups of tests:
   (duplicate ids, NULL vectors, NULL/NaN/inf elements, zero vectors,
   empty and single-row frames, identical vectors) through the fold and the
   arrow scorer of each vector operator, both compared with a brute-force
-  Python reference.  Examples are derandomized, so a run is repeatable.
+  Python reference.  Examples are derandomized, so a run is repeatable;
+* the k-means fit in one task against its checkpointed rounds and the
+  oracles' numpy replay, and the jobs a bounded fit fires while building.
 """
 
 from __future__ import annotations
 
+import ast
+import logging
 import math
 import random
+import re
+import uuid
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -373,3 +379,159 @@ def test_arrow_cell_scorers_on_a_corpus_with_no_admitted_vector(spark, monkeypat
     assert sorted(map(tuple, topics.collect())) == [(1, None), (2, None), (3, None)]
     knn = _arrow(monkeypatch, lambda: ivf_topk(df, q, n_centroids=2, strategy="first"))
     assert knn.collect() == []
+
+
+# ---------------------------------------------------------------------------
+# k-means: one task against the rounds
+# ---------------------------------------------------------------------------
+
+SF001, SF01 = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
+
+
+def _fit(monkeypatch, caplog, path, df, **kw):
+    """``kmeans_centroids(df, **kw)`` with the fit gate forced to ``path``."""
+    with monkeypatch.context() as m, caplog.at_level(logging.INFO, logger=similarity.__name__):
+        m.setattr(similarity, "_LOCAL_FIT_ROWS", math.inf if path == "task" else -1)
+        caplog.clear()
+        cents = similarity.kmeans_centroids(df, **kw)
+    assert f": {path} k-means fit" in caplog.text
+    return cents
+
+
+def _close(a, b, tol=1e-12):
+    return len(a) == len(b) and all(
+        len(x) == len(y) and all(abs(p - q) <= tol for p, q in zip(x, y)) for x, y in zip(a, b)
+    )
+
+
+def _task_equals_rounds(monkeypatch, caplog, df, rows, iters=2, **kw):
+    """Both paths from one init: the init centroids equal by ``==``, the
+    refined ones within 1e-12, and every row in the same cell.  Returns
+    the task's refined centroids."""
+    inits = [_fit(monkeypatch, caplog, p, df, iters=0, **kw) for p in ("task", "rounds")]
+    assert inits[0] == inits[1]
+    task, rounds = (_fit(monkeypatch, caplog, p, df, iters=iters, **kw) for p in ("task", "rounds"))
+    assert _close(task, rounds)
+    assert [_cell(v, task) for _, v in rows] == [_cell(v, rounds) for _, v in rows]
+    return task
+
+
+def _adversarial():
+    """The separated clusters plus every inadmissible kind and a
+    duplicated row."""
+    rows, _ = _clusters(n_per=6)
+    bad = [None, [NAN] * 8, [0.0] * 8, [INF] + [0.0] * 7, [-INF] + [1.0] * 7, [1.0, None] + [0.0] * 6]
+    return [(-10 + i, v) for i, v in enumerate(bad)] + rows + [rows[5]]
+
+
+@pytest.mark.parametrize("init", ["first", "sample"])
+def test_task_fit_equals_rounds_on_adversarial_rows(spark, monkeypatch, caplog, init):
+    rows = _adversarial()
+    df = local_vectors(spark, rows)
+    task = _task_equals_rounds(monkeypatch, caplog, df, rows, n_centroids=4, init_strategy=init)
+    assert len(task) == 4 and all(len(c) == 8 for c in task)
+
+
+def test_task_fit_equals_rounds_on_degenerate_corpora(spark, monkeypatch, caplog):
+    kw = dict(n_centroids=3, init_strategy="first")
+    none_admitted = [(1, None), (2, [NAN] * DIM), (3, [0.0] * DIM), (4, [1.0, None, 0.0, 0.0])]
+    for path in ("task", "rounds"):
+        assert _fit(monkeypatch, caplog, path, local_vectors(spark, none_admitted), **kw) == []
+    # two admitted rows for three cells: two centroids
+    few = none_admitted + [(5, [1.0, 2.0, 0.0, 0.0]), (6, [0.0, 0.0, 3.0, 4.0])]
+    assert len(_task_equals_rounds(monkeypatch, caplog, local_vectors(spark, few), few, **kw)) == 2
+
+
+def test_task_fit_keeps_a_cell_emptied_by_iteration_one(spark, monkeypatch, caplog):
+    # three cells hold 2, 1 and 3 rows after iteration 1 and 0, 2 and 4
+    # after iteration 2: cell 1 keeps its iteration-1 centroid
+    vecs = [[2.0, 3.0], [1.0, 1.0], [1.0, -1.0], [-1.0, 0.0], [-2.0, -2.0], [2.0, -2.0]]
+    rows = list(enumerate(vecs, 1))
+    df = local_vectors(spark, rows)
+    kw = dict(n_centroids=3, init_strategy="first")
+    one = _fit(monkeypatch, caplog, "task", df, iters=1, **kw)
+    two = _task_equals_rounds(monkeypatch, caplog, df, rows, iters=2, **kw)
+    assert two[0] == one[0] and two[1:] != one[1:]
+    assert {_cell(v, two) for v in vecs} == {2, 3}
+
+
+def _oracle_centroids(sf_dir, k):
+    from dftly_spark.contract.common import _lloyd_first_values
+
+    return [
+        ast.literal_eval(m)
+        for m in re.findall(r"\(\d+, (\[[^]]*\])::DOUBLE\[\]\)", _lloyd_first_values(sf_dir, k))
+    ]
+
+
+def test_task_fit_matches_rounds_and_the_oracle_replay_on_testdata(spark, monkeypatch, caplog):
+    from dftly_spark.io import read_table
+
+    kw = dict(n_centroids=16, init_strategy="first")
+    emb = read_table(spark, f"{SF001}/embeddings.parquet")
+    rows = [tuple(r) for r in emb.select("vec_id", "embedding").collect()]
+    task = _task_equals_rounds(monkeypatch, caplog, emb, rows, **kw)
+    assert _close(task, _oracle_centroids(SF001, 16))
+    emb01 = read_table(spark, f"{SF01}/embeddings.parquet")
+    assert _close(_fit(monkeypatch, caplog, "task", emb01, iters=2, **kw), _oracle_centroids(SF01, 16))
+
+
+def test_task_fit_does_not_depend_on_partitioning(spark, monkeypatch, caplog):
+    # duplicate ids hold different vectors here: the task's sort on the
+    # whole (key, vector) row fixes their order too
+    rows = _adversarial() + [(100, [0.0] * 7 + [1.0]), (100, [1.0] * 8)]
+    df = local_vectors(spark, rows)
+    for init in ("first", "sample"):
+        kw = dict(n_centroids=4, iters=3, init_strategy=init)
+        one = _fit(monkeypatch, caplog, "task", df.coalesce(1), **kw)
+        assert _fit(monkeypatch, caplog, "task", df.repartition(4), **kw) == one
+
+
+def test_task_fit_rejects_vectors_of_different_lengths(spark, monkeypatch, caplog):
+    # the rounds return centroids of different lengths here ([[0.89,
+    # 0.45, 0.0], [0.0, 1.0]]), which score NULL against the other length;
+    # the task fails and names both lengths
+    rows = [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0, 0.0])]
+    with pytest.raises(Exception, match="vectors of one length, got (3 and 2|2 and 3)"):
+        _fit(monkeypatch, caplog, "task", local_vectors(spark, rows), n_centroids=2, iters=1,
+             init_strategy="first")
+
+
+@pytest.mark.parametrize("path", ["task", "rounds"])
+def test_unknown_kmeans_init_raises_at_build(spark, monkeypatch, path):
+    df = local_vectors(spark, [(1, [1.0, 0.0])])
+    monkeypatch.setattr(similarity, "_LOCAL_FIT_ROWS", math.inf if path == "task" else -1)
+    with pytest.raises(ValueError, match="unknown centroid strategy 'nope'"):
+        similarity.choose_centroid_frame(df, strategy="kmeans", kmeans_init="nope")
+
+
+def _jobs(spark, fn):
+    """``(fn(), the ids of the Spark jobs it fired)``."""
+    sc = spark.sparkContext
+    group = f"kmeans-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bounded_kmeans_fit_builds_with_no_job(spark, caplog):
+    rows, _ = _clusters()
+    df = local_vectors(spark, rows)
+    with caplog.at_level(logging.INFO, logger=similarity.__name__):
+        cents, jobs = _jobs(spark, lambda: similarity.choose_centroid_frame(
+            df, n_centroids=4, strategy="kmeans", kmeans_iters=2, kmeans_init="first"
+        ))
+    assert jobs == []
+    assert f"task k-means fit at row bound {len(rows)}" in caplog.text
+    assert cents.select("_cell").distinct().count() == 4
+
+
+def test_x160_builder_fires_only_the_matrix_checkpoint(spark):
+    import __spark_entry__ as entry
+
+    out, jobs = _jobs(spark, lambda: entry.queries()["x160_cluster_balanced"](spark, SF001))
+    assert len(jobs) <= 1
+    assert out.count() > 0
